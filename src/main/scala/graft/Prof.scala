@@ -1,5 +1,7 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.SparkSession
 
 /** Deterministic per-query profile — the measurement face wall-clock cannot
@@ -9,7 +11,11 @@ import org.apache.spark.sql.SparkSession
   * exchange or a redundant action moves them identically on a loud or quiet
   * host, so they are the before/after evidence the wall-clock noise floor
   * would otherwise swallow. Summed executor task time is also reported
-  * (noisier, but it averages over every task rather than one clock).
+  * (noisier, but it averages over every task rather than one clock), and
+  * so are the Janino compiles the measured run paid (`compiles`, from
+  * `CodegenMetrics`; driver and local-mode executors share one JVM) and
+  * their time: a key that compiles on every invocation after its warm run
+  * generates source that differs per call, e.g. an inlined constant.
   *
   * Usage: runMain graft.Prof <query...>  (env `SPARK_GRAFT_SF_DIR`/`_CPUS`
   * as Bench). Each query warms once at the warm dir (plan/codegen, the
@@ -53,15 +59,19 @@ object Prof {
       try fn(spark, warmDir).count() catch { case _: Throwable => () }
       Thread.sleep(300) // let the async listener bus drain the warm run
       m.set(Counters())
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val compileNs0 = CodeGenerator.compileTime
       val t0 = System.nanoTime()
       fn(spark, sfDir).count()
       val wall = (System.nanoTime() - t0) / 1e9
       Thread.sleep(500) // drain before reading
       val c = m.get()
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+      val compileMs = (CodeGenerator.compileTime - compileNs0) / 1e6
       println(f"[prof] $n%-28s jobs=${c.jobs}%-4d stages=${c.stages}%-4d " +
         f"tasks=${c.tasks}%-5d taskTime=${c.taskMs / 1000.0}%8.2fs " +
         f"shufW=${c.shufW / 1048576.0}%8.2fMB input=${c.input / 1048576.0}%8.2fMB " +
-        f"wall=$wall%7.2fs")
+        f"compiles=$compiles%-4d compileTime=$compileMs%8.1fms wall=$wall%7.2fs")
     }
     spark.stop()
   }

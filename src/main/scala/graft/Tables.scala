@@ -47,14 +47,24 @@ object Tables {
     * re-opens these immutable fixture files hundreds of times per sweep.
     * METADATA ONLY: no rows, results, or intermediates are memoized — the
     * data path is re-read from parquet on every query invocation — and the
-    * memo dies with the process (fixture files are immutable for a process
-    * lifetime; the driver regenerates them only across process runs). */
+    * memo dies with the process. Keyed on (path, total length, newest
+    * mtime) of the files under the path, so a file rewritten in place
+    * (TablesSpec) is re-inferred instead of served a stale schema; the key
+    * costs one local listing per load, no Spark job. */
   private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]
+    (String, Long, Long), org.apache.spark.sql.types.StructType]
 
   private def readCached(spark: SparkSession, path: String): DataFrame = {
-    val sch = schemaCache.computeIfAbsent(path,
-      p => spark.read.parquet(p).schema)
+    val p = new org.apache.hadoop.fs.Path(path)
+    val files = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+    var (len, mtime) = (0L, 0L)
+    while (files.hasNext) {
+      val f = files.next()
+      len += f.getLen
+      mtime = math.max(mtime, f.getModificationTime)
+    }
+    val sch = schemaCache.computeIfAbsent((path, len, mtime),
+      _ => spark.read.parquet(path).schema)
     spark.read.schema(sch).parquet(path)
   }
 

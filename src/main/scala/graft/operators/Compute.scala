@@ -55,7 +55,13 @@ object Compute {
     * session has a checkpoint dir (survives executor loss), executor-local
     * otherwise — the NearDedup.materializedPairs dispatch. Only call this
     * on frames that are bounded by construction (k·N edges, detected
-    * pairs), never on corpus-sized data. */
+    * pairs), never on corpus-sized data.
+    *
+    * Both modes compute the frame once: an eager `Dataset.checkpoint()`
+    * writes its files in the one job that computes it (it calls
+    * `RDD.doCheckpoint()` directly rather than running an action first), so
+    * no `persist` is needed around it (CheckpointModeSpec counts the
+    * producer's rows in each mode). */
   def materialize(df: DataFrame): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
     else df.localCheckpoint()

@@ -31,6 +31,4 @@ object Det {
     * shortest decimal repr) and DuckDB (rounds the raw binary double) break
     * differently; scale 6 is lossless for the data, so no tie can occur. */
   def dsum6(c: Column): Column = sum(c.cast("decimal(18,6)")).cast("double")
-
-  def dsum6Sql(x: String): String = s"CAST(sum(CAST($x AS DECIMAL(18,6))) AS DOUBLE)"
 }

@@ -3,7 +3,8 @@ package graft.plans
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.graft.{BackwardAsOfStrategy, CmsEstimate, DotProduct, MinHashRow, MinHashSignature, NfcNormalize, SimHash64, SimHashMd5, TopKByScore, WinnowFingerprints}
+import org.apache.spark.sql.execution.ColumnarRule
+import org.apache.spark.sql.graft.{BackwardAsOfStrategy, CmsEstimate, DotProduct, MinHashRow, MinHashSignature, NfcNormalize, SimHash64, SimHashMd5, StableCodegenLiterals, TopKByScore, WinnowFingerprints}
 
 /** Catalyst extension entry point for the engine's custom operators —
   * deploy with
@@ -24,7 +25,16 @@ import org.apache.spark.sql.graft.{BackwardAsOfStrategy, CmsEstimate, DotProduct
   *     `graft_shingles(text, n)` (n literal int),
   *     `graft_cms_estimate(sketch, item)`, and the aggregates
   *     `graft_minhash(hash_col, k)` and `graft_topk(score, id, k)`
-  *     (k literal int).
+  *     (k literal int);
+  *   - a physical rule (org.apache.spark.sql.graft.StableCodegenLiterals)
+  *     that runs just before `CollapseCodegenStages`, AQE or not, and
+  *     turns the numeric/date/timestamp constants of comparisons in
+  *     `FilterExec` conditions into runtime parameters of the generated
+  *     class, so range reads that differ only in their bounds reuse one
+  *     compiled class instead of each Janino-compiling its own. Its scope
+  *     is `FilterExec` only: scan partition filters, data filters and
+  *     Parquet pushdown keep their literals, so pruning and EXPLAIN text
+  *     are unchanged.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -41,6 +51,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => BackwardAsOfStrategy)
+    ext.injectColumnar(_ => new ColumnarRule {
+      override def preColumnarTransitions = StableCodegenLiterals
+    })
     // SQL UPDATE / MERGE INTO on graft-ts tables → the facade's
     // copy-on-write verbs (GraftDmlRules scaladoc has the contract)
     ext.injectPostHocResolutionRule(session =>

@@ -291,15 +291,6 @@ object TsStream extends Serializable {
         col("open"), col("high"), col("low"), col("close"), col("n"))
   }
 
-  /** Session windows (gap-based) per key with watermark eviction. */
-  def sessionCounts(df: DataFrame, tsCol: String, keyCol: String, gap: String,
-                    watermark: String = "1 hour"): DataFrame =
-    df.withWatermark(tsCol, watermark)
-      .groupBy(col(keyCol), session_window(col(tsCol), gap))
-      .agg(count(lit(1)).as("n"))
-      .select(col(keyCol), col("session_window.start").as("s_start"),
-        col("session_window.end").as("s_end"), col("n"))
-
   /** Streaming exact dedup (B9 × B10): drop rows whose `keyCols` were
     * already seen, keeping only watermark-bounded dedup state — the
     * streaming face of LlmPack.dedupExact. `dropDuplicatesWithinWatermark`

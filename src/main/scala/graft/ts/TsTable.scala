@@ -3931,8 +3931,6 @@ object TsTable {
         byId.get(fieldId(f)).fold(f)(n => f.copy(name = n))))
     }
 
-  private[ts] def withPartColPublic(s: StructType): StructType = withPartCol(s)
-
   private[ts] def manifestName(v: Long): String =
     f"$VersionsDir/v$v%08d.manifest"
 

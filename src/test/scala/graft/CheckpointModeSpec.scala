@@ -48,4 +48,28 @@ class CheckpointModeSpec extends AnyFunSuite {
       org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
     }
   }
+
+  test("materialize computes its frame once in both modes") {
+    import org.apache.spark.sql.functions.{col, udf}
+    SparkSpec.releaseSession()
+    val spark = SparkSpec.session
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-once")
+    try {
+      def producedRows(): Long = {
+        val produced = spark.sparkContext.longAccumulator("produced")
+        val tap = udf { (x: Long) => produced.add(1); x }
+        val m = operators.Compute.materialize(
+          spark.range(0, 1000, 1, 4).select(tap(col("id")).as("id")))
+        assert(m.count() == 1000 && m.agg(org.apache.spark.sql.functions.sum("id"))
+          .head().getLong(0) == 999L * 1000 / 2)
+        produced.value
+      }
+      assert(producedRows() == 1000, "localCheckpoint mode")
+      spark.sparkContext.setCheckpointDir(dir.toString)
+      assert(producedRows() == 1000, "reliable-checkpoint mode")
+    } finally {
+      SparkSpec.releaseSession()
+      org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+    }
+  }
 }

@@ -35,13 +35,18 @@ object SparkSpec {
     current = null
   }
 
-  private[graft] def build(master: String): SparkSession = SparkSession.builder()
-    .master(master)
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.catalog.graft_ts", "graft.sources.GraftTsCatalog")
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  /** `extensions = false` builds the same session without
+    * `GraftExtensions`, the reference a suite compares the extension's
+    * rules against. */
+  private[graft] def build(master: String, extensions: Boolean = true): SparkSession = {
+    val b = SparkSession.builder()
+      .master(master)
+      .appName("graft-test")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.catalog.graft_ts", "graft.sources.GraftTsCatalog")
+      .config("spark.ui.enabled", "false")
+    (if (extensions) b.config("spark.sql.extensions", "graft.plans.GraftExtensions") else b)
+      .getOrCreate()
+  }
 }

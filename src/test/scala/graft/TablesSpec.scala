@@ -49,6 +49,19 @@ class TablesSpec extends SparkSpec {
     assert(us == nsRow / 1000L, s"expected floor-division ns→µs, got $us")
   }
 
+  test("a file rewritten at the same path is loaded with its new schema") {
+    val dir = tmp()
+    spark.range(3).select(col("id").as("r_regionkey"), lit("x").as("r_name"))
+      .write.parquet(s"$dir/region.parquet")
+    assert(Tables.region(spark, dir).columns.toSeq == Seq("r_regionkey", "r_name"))
+    spark.range(3).select(col("id").as("r_regionkey"), lit("x").as("r_name"),
+        lit("c").as("r_comment"))
+      .write.mode("overwrite").parquet(s"$dir/region.parquet")
+    val df = Tables.region(spark, dir)
+    assert(df.columns.toSeq == Seq("r_regionkey", "r_name", "r_comment"))
+    assert(df.where(col("r_comment") === "c").count() == 3)
+  }
+
   test("all fixture tables load with stable column sets at sf0.001") {
     val expected = Map(
       "region" -> 2, "nation" -> 3, "supplier" -> 4, "customer" -> 5,
