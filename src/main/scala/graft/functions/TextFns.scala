@@ -22,42 +22,17 @@ object TextFns {
   /** Distinct word 3-gram shingles of a text column — the unit of the
     * near-dup Jaccard (SURVEY.md §2 B9). Docs with < 3 tokens get an empty
     * set. Since r6 this is a native codegen'd kernel
-    * (org.apache.spark.sql.graft.Shingles3): the HOF formulation below,
-    * though already the fast HOF shape, still ran its lambdas interpreted —
-    * ~0.5 ms/doc, the dominant cost of every near-dup query. */
+    * (org.apache.spark.sql.graft.Shingles3): the HOF formulation, though
+    * already the fast HOF shape, still ran its lambdas interpreted —
+    * ~0.5 ms/doc, the dominant cost of every near-dup query. It is kept in
+    * the tests (InterpretedTwins) as LlmPackSpec's parity pin. */
   def shingles3(text: Column): Column =
     org.apache.spark.sql.graft.TextExprs.shingles3(text)
-
-  /** Pre-r6 higher-order-function formulation — parity cross-check only
-    * (LlmPackSpec asserts the native kernel matches it row-for-row).
-    * zip_with over the array and its 1-/2-shifted slices: the lambdas
-    * receive ELEMENTS, so the split regex evaluates O(1) times per doc;
-    * zip_with pads the shorter side with null and concat null-propagates,
-    * so trailing partial windows (and docs with < 3 tokens) drop out in
-    * the filter. */
-  private[graft] def shingles3Hof(text: Column): Column = {
-    val tk = tokens(text)
-    val pairs = zip_with(tk, slice(tk, lit(2), size(tk)), (a, b) => concat(a, lit(" "), b))
-    val tris = zip_with(pairs, slice(tk, lit(3), size(tk)), (p, c) => concat(p, lit(" "), c))
-    array_distinct(filter(tris, x => x.isNotNull))
-  }
 
   /** Distinct word n-gram shingles — the generalized sibling of
     * [[shingles3]] (native ShinglesN kernel; q_span_dedup uses n=5). */
   def shinglesN(text: Column, n: Int): Column =
     org.apache.spark.sql.graft.TextExprs.shinglesN(text, n)
-
-  /** HOF formulation of [[shinglesN]] — parity cross-check only
-    * (LlmPackSpec asserts the native kernel matches it row-for-row).
-    * Folds n−1 zip_with passes over progressively longer prefixes; the
-    * trailing partial windows null out and drop in the filter. */
-  private[graft] def shinglesNHof(text: Column, n: Int): Column = {
-    val tk = tokens(text)
-    val grams = (2 to n).foldLeft(tk) { (acc, j) =>
-      zip_with(acc, slice(tk, lit(j), size(tk)), (p, c) => concat(p, lit(" "), c))
-    }
-    array_distinct(filter(grams, x => x.isNotNull))
-  }
 
   /** Exact Jaccard similarity of two set-valued (distinct-element) array
     * columns, as double. int/int sizes → one IEEE division, deterministic

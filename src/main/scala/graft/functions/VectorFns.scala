@@ -18,11 +18,6 @@ object VectorFns {
   def dot(a: Column, b: Column): Column =
     org.apache.spark.sql.graft.VectorExprs.dot(a, b)
 
-  /** HOF formulation, kept for cross-checking the native expression in
-    * VectorExprSpec. */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-
   def l2norm(a: Column): Column = sqrt(dot(a, a))
 
   /** Cosine similarity; callers round before emitting in oracle-compared

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.TextFns
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -70,7 +71,8 @@ object NearDedup {
     * NearDedupSpec asserts both plan shapes on a deliberately hot corpus
     * and rank parity with the naive window formulation. */
   private[graft] def rankedByDf(sets: DataFrame, hotDf: Int,
-                                maxBroadcastVocab: Int = 500000): DataFrame = {
+                                maxBroadcastVocab: Int = 500000,
+                                track: Broadcast[_] => Unit = _ => ()): DataFrame = {
     val exploded = sets
       .select(col("id"), col("part"), size(col("sh")).as("n"),
         explode(col("sh")).as("sh"))
@@ -87,6 +89,7 @@ object NearDedup {
         org.apache.spark.unsafe.types.UTF8String.fromString(r.getString(0)),
         java.lang.Long.valueOf(r.getLong(1))))
       val bc = sets.sparkSession.sparkContext.broadcast(m)
+      track(bc) // the caller frees it once its consumer has materialized
       // (sh, id, part, n, df, rn) — the exact schema and rank values the
       // window formulation produced, from a pure map-side pass.
       sets.select(col("id"), col("part"), size(col("sh")).as("n"),
@@ -119,7 +122,7 @@ object NearDedup {
       .select(col("id"), col("part"),
         TextFns.shingles3(col(textCol)).as("sh"))
       .where(size(col("sh")) > 0)
-    materializedPairs(sets0, materialize) { sets =>
+    materializedPairs(sets0, materialize) { (sets, track) =>
 
     // Prefix/size bounds use ε-guarded rounding: n·τ in binary doubles can
     // land a hair ABOVE an exactly-integral true value (τ=0.8 is inexact),
@@ -132,7 +135,7 @@ object NearDedup {
     val Eps = 1e-6
 
     // Rank each doc's shingles rarest-first; keep the pigeonhole prefix.
-    val prefix = rankedByDf(sets, hotDf)
+    val prefix = rankedByDf(sets, hotDf, track = track)
       .where(col("rn") <= col("n") - ceil(col("n") * lit(tau) - Eps) + 1)
       .select(col("id"), col("part"), col("n"), col("sh"))
 
@@ -190,9 +193,9 @@ object NearDedup {
       .select(col("id"), col("part"),
         TextFns.shingles3(col(textCol)).as("sh"))
       .where(size(col("sh")) > 0)
-    materializedPairs(sets0, materialize) { sets =>
+    materializedPairs(sets0, materialize) { (sets, track) =>
       val Eps = 1e-6
-      val prefix = rankedByDf(sets, hotDf)
+      val prefix = rankedByDf(sets, hotDf, track = track)
         .where(col("n") >= minShingles &&
           col("rn") <= col("n") - ceil(col("n") * lit(tauC) - Eps) + 1)
         .select(col("id"), col("part"), col("n"), col("sh"))
@@ -313,9 +316,10 @@ object NearDedup {
       // Native kernel (one md5 digest per window over reused buffers inside
       // whole-stage codegen); the interpreted HOF formulation it replaces
       // — a per-position slice + concat_ws rebuild + md5 under an
-      // interpreted transform lambda — is kept below as spanKeysHof for
-      // the NearDedupSpec parity pin. r21 measurement: the HOF strip pass
-      // burned 626 s of task CPU at sf0.1 (q_dedup_contain_clean).
+      // interpreted transform lambda — is kept in the tests as
+      // InterpretedTwins.spanKeysHof, the NearDedupSpec parity pin. r21
+      // measurement: the HOF strip pass burned 626 s of task CPU at sf0.1
+      // (q_dedup_contain_clean).
       .withColumn("spans",
         org.apache.spark.sql.graft.TextExprs.spanKeys(col("w"), spanWords))
 
@@ -343,26 +347,10 @@ object NearDedup {
         coalesce(col("starts"), array().cast("array<int>")))
       // Native kernel: sorted sweep over (words, starts) — O(W + S log S)
       // per doc vs the interpreted O(W × S) nested filter/exists lambda it
-      // replaces (kept below as residualWordsHof for the parity pin).
+      // replaces (kept in the tests as InterpretedTwins.residualWordsHof).
       .withColumn("clean_text", org.apache.spark.sql.graft.TextExprs
         .residualWords(col("w"), col("starts"), spanWords))
       .select(col("id"), col("part"), col("clean_text"))
-  }
-
-  /** Pre-r21 HOF formulations of the strip's two kernels — parity
-    * cross-checks only (NearDedupSpec asserts the native kernels match
-    * them row-for-row on the fixture and adversarial edges). */
-  private[graft] def spanKeysHof(w: Column, spanWords: Int): Column =
-    when(size(w) >= spanWords,
-      transform(sequence(lit(0), size(w) - spanWords),
-        i => substring(md5(concat_ws(" ", slice(w, i + 1, lit(spanWords)))), 1, 16)))
-      .otherwise(array().cast("array<string>"))
-
-  private[graft] def residualWordsHof(w: Column, starts: Column,
-                                      spanWords: Int): Column = {
-    val span1 = lit(spanWords - 1)
-    concat_ws(" ",
-      filter(w, (_, i) => !exists(starts, s => s <= i && i <= s + span1)))
   }
 
   /** Single-evaluation harness for the pair generators. The lazy pipeline
@@ -380,7 +368,10 @@ object NearDedup {
     *     materializing it is cheap and truncates the lineage to checkpoint
     *     blocks;
     *   - the persist is freed BEFORE returning, so nothing stays pinned in
-    *     the CacheManager (the classic never-unpersisted-cache leak).
+    *     the CacheManager (the classic never-unpersisted-cache leak);
+    *   - every broadcast `build` registers through its tracker (the
+    *     rankedByDf vocabulary map, up to 500k entries) is destroyed once
+    *     the checkpoint has materialized its consumer, not left to GC.
     *
     * Checkpoint flavor: when `sparkContext.setCheckpointDir` is configured
     * the eager checkpoint is RELIABLE (written to that DFS dir — survives
@@ -392,20 +383,26 @@ object NearDedup {
     * clusterPairs' label checkpoints. Default stays LAZY: plan-shape specs
     * (skew-proof ranking join, band join) assert on the lazy form, and
     * callers that feed clusterPairs get its own persist-once treatment. */
-  private def materializedPairs(sets0: DataFrame, materialize: Option[Boolean])
-                               (build: DataFrame => DataFrame): DataFrame = {
+  private[graft] def materializedPairs(sets0: DataFrame, materialize: Option[Boolean])
+      (build: (DataFrame, Broadcast[_] => Unit) => DataFrame): DataFrame = {
     val doMat = materialize.getOrElse(
       sets0.sparkSession.conf.getOption("spark.graft.dedup.materialize")
         .exists(_.toBoolean))
-    if (!doMat) build(sets0)
+    // lazy: the returned frame still needs its broadcasts, which the
+    // ContextCleaner frees once the frame is garbage
+    if (!doMat) build(sets0, _ => ())
     else {
       val sets = sets0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val broadcasts = scala.collection.mutable.ArrayBuffer.empty[Broadcast[_]]
       try {
-        val pairs = build(sets)
+        val pairs = build(sets, broadcasts += _)
         if (sets0.sparkSession.sparkContext.getCheckpointDir.isDefined)
           pairs.checkpoint() // eager + reliable: survives executor loss
         else pairs.localCheckpoint() // eager: one evaluation of the pipeline
-      } finally sets.unpersist(blocking = false)
+      } finally {
+        sets.unpersist(blocking = false)
+        broadcasts.foreach(_.destroy())
+      }
     }
   }
 
@@ -432,7 +429,7 @@ object NearDedup {
       .select(col("id"), col("part"),
         TextFns.shingles3(col(textCol)).as("sh"))
       .where(size(col("sh")) > 0)
-    materializedPairs(sets0, materialize) { sets =>
+    materializedPairs(sets0, materialize) { (sets, _) =>
 
     val banded = bandRows(sets, bands, rowsPerBand)
 
@@ -473,7 +470,7 @@ object NearDedup {
       .select(col("id"), col("part"), col("is_new"),
         TextFns.shingles3(col(textCol)).as("sh"))
       .where(size(col("sh")) > 0)
-    materializedPairs(sets0, materialize) { sets =>
+    materializedPairs(sets0, materialize) { (sets, _) =>
 
     val banded = bandRows(sets, bands, rowsPerBand, carry = Seq("is_new"))
 
@@ -599,9 +596,10 @@ object NearDedup {
     * no cross-engine oracle (DuckDB lacks xxhash64) — covered by ScalaTest.
     *
     * One native codegen'd pass per row (org.apache.spark.sql.graft
-    * .SimHash64); bit-identical to the HOF formulation below, which is kept
-    * only as the semantic cross-check in HashExprSpec — never in a query
-    * path (64 interpreted passes over the token hashes per row). */
+    * .SimHash64); bit-identical to the HOF formulation kept in the tests
+    * (InterpretedTwins.simhash64Hof) as HashExprSpec's semantic
+    * cross-check — never in a query path (64 interpreted passes over the
+    * token hashes per row). */
   /** Hard iteration cap for `clusterPairs`. Convergence needs
     * O(log diameter) rounds under min-label propagation; dedup graphs are
     * near-cliques (diameter ≤ a few hops), so hitting this cap means the
@@ -915,19 +913,5 @@ object NearDedup {
     }.reduce(_.bitwiseOR(_))
     hexed.groupBy(col("doc_id")).agg(sums.head, sums.tail: _*)
       .select(col("doc_id"), packed.as("simhash"))
-  }
-
-  /** Pre-r3 interpreted HOF formulation — HashExprSpec cross-check only. */
-  private[graft] def simhash64Hof(text: Column): Column = {
-    val hashes = transform(TextFns.tokens(text), t => xxhash64(t))
-    // vote[b] = Σ tokens (bit b set ? +1 : −1); fingerprint bit b = vote>0
-    val votes = transform(sequence(lit(0), lit(63)), b =>
-      aggregate(hashes, lit(0),
-        // call_function: the shiftright Scala wrapper only takes Int bits,
-        // but here the bit index is a lambda variable
-        (acc, h) => acc + when(
-          call_function("shiftright", h, b).bitwiseAND(1) === 1, 1).otherwise(-1)))
-    aggregate(votes, lit(0L),
-      (acc, v) => shiftleft(acc, 1).bitwiseOR(when(v > 0, 1L).otherwise(0L)))
   }
 }

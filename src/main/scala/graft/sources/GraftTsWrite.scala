@@ -84,6 +84,9 @@ final class GraftTsWrite(
     // uses, so files are bit-compatible with facade-written ones.
     val factory = ParquetUtils.prepareWrite(sqlConf, job, ts.schema,
       new ParquetOptions(Map("compression" -> ts.writeOptions.codec), sqlConf))
+    // each file's Bloom bits ride its footer, as on the facade's writes
+    org.apache.spark.sql.graft.BloomParquetWriteSupport.configure(
+      job.getConfiguration, ts.liveBloomCols, ts.writeOptions.bloomBits)
     // Authoritative for this write regardless of session state: INT64
     // micros so ts row-group stats stay filterable (INT96 is not).
     job.getConfiguration.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")

@@ -3,6 +3,7 @@ package graft.ts
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.BloomParquetWriteSupport
 import org.apache.spark.sql.types.{ByteType, DataType, DateType, DecimalType, DoubleType, FloatType, IntegerType, LongType, ShortType, StructField, StructType, TimestampType}
 
 import java.sql.Timestamp
@@ -86,7 +87,7 @@ final class TsTable private (
     * rule), and on an id-stamped table an attached FOREIGN (id-less)
     * file falls back to by-name resolution instead of refusing. */
   def raw: DataFrame =
-    spark.read.format(TsTable.ReadFmt)
+    spark.read.format(TsTable.Fmt)
       .schema(withPartCol(storedSchema)).load(path)
 
   /** Closed-interval time-range read: rows with `start <= ts <= end`
@@ -147,7 +148,8 @@ final class TsTable private (
     * on a high-cardinality UNCLUSTERED column: every file's [lo, hi]
     * span covers everything, so span skipping keeps all files, while
     * per-file Bloom bits — declared via `TsWriteOptions(bloomCols = …)`,
-    * harvested at commit, carried forward like spans — keep only files
+    * built by the writer, collected at commit, carried forward like
+    * spans — keep only files
     * that MIGHT hold a probed value). Pruning is metadata-only and
     * conservative: a file is skipped only when its declared-stats span
     * excludes every value OR its Bloom filter rejects every value's
@@ -468,7 +470,7 @@ final class TsTable private (
     if (!hasFieldIds(storedSchema) || added.isEmpty) added
     else stampFieldIds(StructType(added), effectiveNextFieldId).fields.toSeq
 
-  private def effectiveNextFieldId: Long =
+  private[ts] def effectiveNextFieldId: Long =
     if (!hasFieldIds(storedSchema)) 0L
     else math.max(nextFieldId,
       storedSchema.fields.map(TsTable.fieldId).max + 1)
@@ -981,7 +983,7 @@ final class TsTable private (
     proj.persist()
     try {
       val st = proj.agg(count(lit(1)), count(col(tsCol)),
-        countDistinct(col(PartCol))).head
+        TsTable.distinctCount(col(PartCol))).head
       val (n, nTs, nDays) = (st.getLong(0), st.getLong(1), st.getLong(2))
       if (n == 0) return 0L
       require(n == nTs, s"backfill: null values in '$tsCol'")
@@ -1130,19 +1132,19 @@ final class TsTable private (
     // writer re-reads session conf at execution time.
     spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     if (strict) requireSortedBatch(batch)
-    // the hour-count arm only when the table slots by hour: each extra
-    // DISTINCT aggregate widens the agg's Expand by one replica of the
-    // batch — a per-append cost day-span tables must not pay
+    // the hour-count arm only when the table slots by hour. Day and hour
+    // counts are set sizes, not DISTINCT aggregates: a DISTINCT plans an
+    // Expand and a second shuffle (one more job per append), while each
+    // set is bounded by the file slots this write creates anyway
     val hourly = writeOptions.fileSpan == "hour"
     val baseAggs = Seq(
       min(col(tsCol)), count(lit(1)), count(col(tsCol)),
-      countDistinct(to_date(col(tsCol))))
+      TsTable.distinctCount(to_date(col(tsCol))))
     val statAggs = if (hourly)
-      baseAggs :+ countDistinct(date_trunc("hour", col(tsCol))) else baseAggs
+      baseAggs :+ TsTable.distinctCount(date_trunc("hour", col(tsCol)))
+      else baseAggs
     // CHECK-violation sums RIDE the stats aggregate (one batch pass instead
-    // of two — the r22 lifecycle job-batching item). Plain sums attach to
-    // the distinct aggregates' existing Expand without widening it (only
-    // each extra DISTINCT adds a batch replica, per the note above).
+    // of two — the r22 lifecycle job-batching item).
     // Rejection order is unchanged: empty-batch no-op, then null-ts, then
     // the first violated constraint — all read from the same row.
     val aggs = statAggs ++ violationAggs(tableChecks)
@@ -1190,15 +1192,33 @@ final class TsTable private (
       else if (filesPerDay == 1) withDate.repartition(col(PartCol))
       else withDate.repartitionByRange(
         (nDays * filesPerDay).toInt.max(1), col(PartCol), col(tsCol))
-    val writer = placed
-      .sortWithinPartitions(col(PartCol), col(tsCol))
-      .write.mode("append")
-      .option("compression", writeOptions.codec)
-    writeOptions.rowGroupBytes.foreach(b => writer.option("parquet.block.size", b.toString))
+    val writer = tableWriter(
+      placed.sortWithinPartitions(col(PartCol), col(tsCol)), "append")
     writeOptions.maxRecordsPerFile.foreach(n => writer.option("maxRecordsPerFile", n.toString))
-    writer.partitionBy(PartCol).parquet(path)
+    writer.partitionBy(PartCol).save(path)
     commitVersion("append", meta = meta)
   }
+
+  /** The writer every table data write goes through: the table's parquet
+    * format ([[TsTable.Fmt]]) with the declared codec and row-group size,
+    * and the declared Bloom columns, whose bits each written file then
+    * carries in its footer (read back by [[commitVersion]] in place of a
+    * harvest scan). */
+  private def tableWriter(df: DataFrame, mode: String)
+      : org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] = {
+    val w = df.write.format(TsTable.Fmt).mode(mode)
+      .option("compression", writeOptions.codec)
+    writeOptions.rowGroupBytes.foreach(b => w.option("parquet.block.size", b.toString))
+    val bloom = liveBloomCols
+    if (bloom.nonEmpty)
+      w.option(BloomParquetWriteSupport.ColsOption, bloom.mkString(","))
+        .option(BloomParquetWriteSupport.BitsOption, writeOptions.bloomBits.toString)
+    w
+  }
+
+  /** Declared Bloom columns the stored schema still carries. */
+  private[graft] def liveBloomCols: Seq[String] =
+    writeOptions.bloomCols.filter(storedSchema.fieldNames.contains)
 
   /** Strict-mode validation (reference ValueError parity, SURVEY §5.2.4
     * property (c)): the batch must be ts-sorted in physical row order.
@@ -1440,9 +1460,9 @@ final class TsTable private (
         // and a straddling file would re-qualify the day under the
         // per-bucket pressure test forever); slots can only MERGE into
         // adjacent-hour files, which stay ts-contiguous. One extra
-        // countDistinct aggregate, paid by hour-slotted tables only.
-        val nSlots = d.agg(countDistinct(col(PartCol),
-          date_trunc("hour", col(tsCol)))).head.getLong(0)
+        // distinct-count aggregate, paid by hour-slotted tables only.
+        val nSlots = d.agg(TsTable.distinctCount(struct(col(PartCol),
+          date_trunc("hour", col(tsCol))))).head.getLong(0)
         val slotted =
           if (targetFiles == 1)
             d.repartitionByRange(nSlots.toInt.max(1),
@@ -1457,11 +1477,8 @@ final class TsTable private (
           (hit.length * targetFiles).max(1), col(PartCol), col(tsCol))
         .sortWithinPartitions(col(PartCol), col(tsCol))
     }
-    val writer = sorted
-      .write.mode("overwrite")
-      .option("compression", writeOptions.codec)
-    writeOptions.rowGroupBytes.foreach(b => writer.option("parquet.block.size", b.toString))
-    writer.partitionBy(PartCol).parquet(tmp.toString) // lands BEFORE any swap
+    tableWriter(sorted, "overwrite")
+      .partitionBy(PartCol).save(tmp.toString) // lands BEFORE any swap
     } catch { case e: Throwable if stagingSwapRace(e, displaced) =>
       fs.delete(tmp, true)
       throw new TsTable.ConcurrentRewriteException(
@@ -1755,8 +1772,10 @@ final class TsTable private (
     // outright (r22 lifecycle job-batching: one read-only job per sync).
     // Conservative: anything the walk cannot prove keeps the check.
     val provablyUnique = TsTable.provablyUniqueOn(source, keys)
-    // one metadata probe reused by both discovery sides below
-    val tableEmpty = servesNoFiles
+    // one metadata probe reused by both discovery sides below: the live
+    // files' exact ts spans (Some(Nil) = the table serves no files)
+    val spans = exactSpans
+    val tableEmpty = spans.exists(_.isEmpty)
     val (src0, freeSrc0) = TsTable.localCheckpointTracked(source)
     val frees = scala.collection.mutable.ArrayBuffer[() => Unit](freeSrc0)
     try {
@@ -1770,12 +1789,38 @@ final class TsTable private (
       s"mergeInto: source has ${dup.headOption.map(_.getLong(keys.length)).getOrElse(0L)} rows " +
         s"for key (${dup.headOption.map(r => keys.indices.map(r.get).mkString(", ")).getOrElse("")}) — " +
         "SQL MERGE cardinality violation")
+    // the source projected onto the stored schema, p_date derived
+    def onStored(df: DataFrame): DataFrame = df
+      .select(storedSchema.fields.map { f =>
+        (if (srcCols.contains(f.name)) col(f.name).cast(f.dataType)
+         else lit(null).cast(f.dataType)).as(f.name)
+      }.toSeq: _*)
+      .withColumn(PartCol, to_date(col(tsCol)))
+    // insert-side stats: count, count(ts), distinct days, min/max ts
+    def insertStats(df: DataFrame): org.apache.spark.sql.Row =
+      df.agg(count(lit(1)), count(col(tsCol)), TsTable.distinctCount(col(PartCol)),
+        min(col(tsCol)), max(col(tsCol))).head
+    // No-match short-circuit from metadata: no source row can match when
+    // the table serves no files, or when the keys include the ts column
+    // and the source's [min, max] ts overlaps no live file's exact span (a
+    // matching row would sit inside both). Every steady-state rollup sync
+    // is this case: it only inserts buckets later than any stored one.
+    // One aggregate over the pinned source decides it and, when it holds,
+    // also yields the insert counts; the MATCHED join, the NOT-MATCHED
+    // anti-join and its checkpoint are all skipped.
+    lazy val srcStats = insertStats(onStored(src0))
+    val noMatch = tableEmpty || (spans.isDefined && keys.contains(tsCol) &&
+      src0.schema(tsCol).dataType == TimestampType &&
+      (srcStats.isNullAt(3) || {
+        def us(i: Int) = org.apache.spark.sql.catalyst.util.DateTimeUtils
+          .fromJavaTimestamp(srcStats.getAs[Timestamp](i))
+        val (lo, hi) = (us(3), us(4))
+        spans.get.forall { case (a, b) => b < lo || a > hi }
+      }))
     // MATCHED discovery: O(#hit files) driver metadata, skipped when
-    // nothing will update
-    // empty-table short-circuit (r22 lifecycle job batching): no files ⇒
-    // nothing can match, so the MATCHED discovery scan is skipped...
+    // nothing will update or nothing can match
     val (hitRel, matched) =
-      if (upd.isEmpty || tableEmpty) (Seq.empty[String], 0L)
+      if (upd.isEmpty || noMatch) (Seq.empty[String], 0L)
       else {
         // input_file_name() must bind BELOW the join (it rejects
         // multi-source plans), so stamp each table row with its file first
@@ -1790,28 +1835,21 @@ final class TsTable private (
     val insOpt: Option[(DataFrame, Long, Int)] =
       if (!insert) None
       else {
-        // ...and the NOT-MATCHED anti-join degenerates to the source
-        // itself — a pure projection of the PINNED src0 blocks, which is
-        // deterministic, so the second checkpoint job is unnecessary.
-        // Non-empty tables keep it: the anti-join reads the LIVE table,
-        // and a mid-merge recache would desynchronize the validation
-        // count from the staged write (the single-evaluation rule).
-        val projected = (if (tableEmpty) src0
-          else src0.join(raw.select(keyCols: _*), keys, "left_anti"))
-          .select(storedSchema.fields.map { f =>
-            (if (srcCols.contains(f.name)) col(f.name).cast(f.dataType)
-             else lit(null).cast(f.dataType)).as(f.name)
-          }.toSeq: _*)
-          .withColumn(PartCol, to_date(col(tsCol)))
-        val proj =
-          if (tableEmpty) projected
+        // ...and when nothing can match, the NOT-MATCHED anti-join
+        // degenerates to the source itself — a pure projection of the
+        // PINNED src0 blocks, which is deterministic, so the second
+        // checkpoint job is unnecessary. Otherwise keep it: the anti-join
+        // reads the LIVE table, and a mid-merge recache would
+        // desynchronize the validation count from the staged write (the
+        // single-evaluation rule).
+        val (proj, st) =
+          if (noMatch) (onStored(src0), srcStats)
           else {
-            val (cp, freeProj) = TsTable.localCheckpointTracked(projected)
+            val (cp, freeProj) = TsTable.localCheckpointTracked(
+              onStored(src0.join(raw.select(keyCols: _*), keys, "left_anti")))
             frees += freeProj
-            cp
+            (cp, insertStats(cp))
           }
-        val st = proj.agg(count(lit(1)), count(col(tsCol)),
-          countDistinct(col(PartCol))).head
         val (n, nTs, nDays) = (st.getLong(0), st.getLong(1), st.getLong(2))
         if (n == 0) None
         else if (n != nTs)
@@ -2111,28 +2149,19 @@ final class TsTable private (
         if (filesPerDay == 1) df.repartition(col(PartCol))
         else df.repartitionByRange((nDays * filesPerDay).max(1),
           col(PartCol), col(tsCol))
-      val writer = placed
-        .sortWithinPartitions(col(PartCol), col(tsCol))
-        .write.mode("overwrite")
-        .option("compression", writeOptions.codec)
-      writeOptions.rowGroupBytes.foreach(b =>
-        writer.option("parquet.block.size", b.toString))
-      writer.partitionBy(PartCol).parquet(new Path(tmp, "dated").toString)
+      tableWriter(placed.sortWithinPartitions(col(PartCol), col(tsCol)),
+        "overwrite").partitionBy(PartCol).save(new Path(tmp, "dated").toString)
     }
     if (loose.nonEmpty) { // attached plain/hybrid layouts: root-level files
       // same synthetic-manifest read; raw already carries the null p_date
       // the predicate may name (the live-read semantic for loose files)
-      val writer = withFieldIds(xform(new TsSnapshot(spark, path, tsCol,
+      val looseDf = withFieldIds(xform(new TsSnapshot(spark, path, tsCol,
           TsManifest(-1L, "staging", tsCol, storedSchema,
             displaced.filterNot(_._1.contains("/")))).raw)
         .drop(PartCol))
         .repartitionByRange(loose.length.max(1), col(tsCol))
         .sortWithinPartitions(col(tsCol))
-        .write.mode("overwrite")
-        .option("compression", writeOptions.codec)
-      writeOptions.rowGroupBytes.foreach(b =>
-        writer.option("parquet.block.size", b.toString))
-      writer.parquet(new Path(tmp, "loose").toString)
+      tableWriter(looseDf, "overwrite").save(new Path(tmp, "loose").toString)
     }
     } catch { case e: Throwable if stagingSwapRace(e, displaced) =>
       fs.delete(tmp, true)
@@ -2937,8 +2966,7 @@ final class TsTable private (
       // case to survive), then footer-read only the files this commit
       // actually added/rewrote. O(new files) footer metadata, zero data
       // pages — the skip index stays cheap even at a 100 TB table size.
-      val declaredBlooms = writeOptions.bloomCols
-        .filter(storedSchema.fieldNames.contains).toSet
+      val declaredBlooms = liveBloomCols.toSet
       val (carried, carriedCols, carriedBlooms) = prevM.map { pm =>
         val prevLen = pm.files.toMap
         val nowLen = files.toMap
@@ -2971,24 +2999,31 @@ final class TsTable private (
       // behind a file-level carried entry forever
       val declaredStats = writeOptions.statsCols
         .filter(storedSchema.fieldNames.contains).toSet
-      val (fresh, freshCols) =
-        collectSpans(files.map(_._1).filterNot(p =>
-          carried.contains(p) && declaredStats.subsetOf(
-            carriedCols.get(p).map(_.keySet).getOrElse(Set.empty))))
-      // Bloom sidecar: carried forward like spans; the files without a
+      val needSpans = files.map(_._1).filterNot(p =>
+        carried.contains(p) && declaredStats.subsetOf(
+          carriedCols.get(p).map(_.keySet).getOrElse(Set.empty)))
+      // Bloom sidecar: carried forward like spans. The files without a
       // covering entry (normally exactly this commit's additions;
       // everything, once, after a crash lost a sidecar — self-healing)
-      // harvest in ONE column-pruned scan. Written to a writer-unique temp
+      // take the bits their writer stored in the footer, read by the same
+      // footer open as their spans; only files whose footer has no entry
+      // matching the current declaration (attached files, older tables,
+      // widened or renamed columns, changed bloomBits) harvest in ONE
+      // column-pruned scan. Written to a writer-unique temp
       // FIRST and renamed to its final name only after the manifest CAS
       // succeeds — the version number is then exclusively owned. A crash
       // between the two degrades lookups to no-skipping, never to wrong
       // results.
+      val needBlooms =
+        if (writeOptions.bloomCols.isEmpty) Seq.empty[String]
+        else files.map(_._1).filter(_.contains("/"))
+          .filterNot(p => carriedBlooms.get(p).exists(cols =>
+            declaredBlooms.subsetOf(cols.keySet)))
+      val (fresh, freshCols, footerBlooms) = collectFooters(needSpans, needBlooms)
       val blooms =
         if (writeOptions.bloomCols.isEmpty) TsTable.NoBlooms
-        else carriedBlooms ++ harvestBlooms(
-          files.map(_._1).filter(_.contains("/"))
-            .filterNot(p => carriedBlooms.get(p).exists(cols =>
-              declaredBlooms.subsetOf(cols.keySet))))
+        else carriedBlooms ++ footerBlooms ++
+          harvestBlooms(needBlooms.filterNot(footerBlooms.contains))
       val bloomTmp: Option[Path] =
         if (blooms.isEmpty) None
         else Some(TsTable.writeBloomSidecarTmp(fs, path, next, blooms))
@@ -3144,23 +3179,38 @@ final class TsTable private (
     }
   }
 
-  /** Footer ts spans for `relPaths` (closed, epoch µs). Driver-side for a
-    * handful of files; one-task-per-file distributed beyond that, so the
-    * first commit over a large attached tree reads footers at cluster
-    * bandwidth, not through one JVM. Files without usable stats are
-    * simply absent from the result (never skipped later). */
-  private def collectSpans(relPaths: Seq[String])
-      : (Map[String, (Long, Long)], Map[String, Map[String, ColSpan]]) = {
-    if (relPaths.isEmpty) return (Map.empty, Map.empty)
+  /** Footer facts, one footer open per file: the ts and stats-column
+    * spans of `spanPaths` (closed, epoch µs), and the writer-built Bloom
+    * bits of `bloomPaths` — a file's bits count only when its footer holds
+    * an entry for EVERY declared Bloom column under the current
+    * declaration's key ([[BloomParquetWriteSupport.footerKey]]).
+    * Driver-side for a handful of files; one-task-per-file distributed
+    * beyond that, so the first commit over a large attached tree reads
+    * footers at cluster bandwidth, not through one JVM. Files without
+    * usable stats or bits are simply absent from the result (never
+    * skipped later; bits fall back to [[harvestBlooms]]). */
+  private def collectFooters(spanPaths: Seq[String], bloomPaths: Seq[String])
+      : (Map[String, (Long, Long)], Map[String, Map[String, ColSpan]],
+        Map[String, Map[String, Array[Byte]]]) = {
+    val spanSet = spanPaths.toSet
+    val bloomSet = bloomPaths.toSet
+    val relPaths = (spanPaths ++ bloomPaths).distinct
+      .map(r => (r, spanSet(r), bloomSet(r)))
+    if (relPaths.isEmpty) return (Map.empty, Map.empty, TsTable.NoBlooms)
     val rootStr = path
     val tc = tsCol
     val cols = writeOptions.statsCols
-    def harvest(conf: org.apache.hadoop.conf.Configuration, r: String) = {
-      val (ts0, cs) = TsTable.footerSpans(conf, new Path(rootStr, r), tc, cols)
-      (r, ts0, cs)
+    val keys = liveBloomCols.map(c =>
+      c -> BloomParquetWriteSupport.footerKey(storedSchema(c), writeOptions.bloomBits)).toMap
+    def harvest(conf: org.apache.hadoop.conf.Configuration,
+                f: (String, Boolean, Boolean)) = {
+      val (r, wantSpans, wantBlooms) = f
+      val (ts0, cs, bl) = TsTable.footerSpans(conf, new Path(rootStr, r), tc,
+        if (wantSpans) cols else Seq.empty, if (wantBlooms) keys else Map.empty)
+      (r, if (wantSpans) ts0 else None, cs,
+        if (bl.nonEmpty && bl.size == keys.size) bl else Map.empty[String, Array[Byte]])
     }
-    val all: Seq[(String, Option[(Long, Long)], Map[String, ColSpan])] =
-      if (relPaths.length <= 16) {
+    val all = if (relPaths.length <= 16) {
         val conf = spark.sparkContext.hadoopConfiguration
         relPaths.map(harvest(conf, _))
       } else {
@@ -3169,30 +3219,32 @@ final class TsTable private (
         val slices = math.min(relPaths.length,
           spark.sparkContext.defaultParallelism).max(1)
         spark.sparkContext.parallelize(relPaths, slices)
-          .map(r => harvest(conf.value, r)).collect().toSeq
+          .map(f => harvest(conf.value, f)).collect().toSeq
       }
-    (all.collect { case (r, Some(s0), _) => r -> s0 }.toMap,
-      all.collect { case (r, Some(_), cs) if cs.nonEmpty => r -> cs }.toMap)
+    (all.collect { case (r, Some(s0), _, _) => r -> s0 }.toMap,
+      all.collect { case (r, Some(_), cs, _) if cs.nonEmpty => r -> cs }.toMap,
+      all.collect { case (r, _, _, bl) if bl.nonEmpty => r -> bl }.toMap)
   }
 
   /** Per-file Bloom membership bits over `writeOptions.bloomCols` for the
     * given table-relative DATED files (the engine-written layout; loose
     * attached root-level files simply never get blooms and are never
-    * skipped) — ONE column-pruned distributed scan of ONLY those files,
-    * grouped by source file: each file's declared columns hash
+    * skipped) whose footers carry no matching writer-built bits (see
+    * [[collectFooters]]) — ONE column-pruned distributed scan of ONLY
+    * those files, grouped by source file: each file's declared columns hash
     * (xxhash64, seed 42 — the probe-side contract) into a fixed
     * `bloomBits`-bit filter map-side (BloomFilterAggregate is a
     * TypedImperativeAggregate, so partials combine per partition). Cost:
-    * O(new files) data read — normally the files this commit just
-    * wrote — and O(#files × cols × bits/8) driver/sidecar bytes. A file
-    * whose declared column is all-null simply gets no entry. */
-  private def harvestBlooms(relPaths: Seq[String])
+    * O(fallback files) data read and O(#files × cols × bits/8)
+    * driver/sidecar bytes. A file whose declared column is all-null gets
+    * the empty filter. */
+  private[ts] def harvestBlooms(relPaths: Seq[String])
       : Map[String, Map[String, Array[Byte]]] = {
     if (relPaths.isEmpty) return TsTable.NoBlooms
-    val cols = writeOptions.bloomCols.filter(storedSchema.fieldNames.contains)
+    val cols = liveBloomCols
     if (cols.isEmpty) return TsTable.NoBlooms
     val root = new Path(path)
-    val df = spark.read.format(TsTable.ReadFmt).option("basePath", path)
+    val df = spark.read.format(TsTable.Fmt).option("basePath", path)
       .schema(withPartCol(storedSchema))
       .load(relPaths.map(r => new Path(root, r).toString): _*)
     // capacity at bits/items ≈ 10 → ~7 hash functions, ~1% fpp at capacity
@@ -3212,13 +3264,7 @@ final class TsTable private (
     // EMPTY filter rather than omitting the entry: every probe rejects
     // (sound — SQL equality with null never matches), and carry-forward
     // sees the column covered instead of re-scanning the file per commit
-    lazy val emptyBits: Array[Byte] = {
-      val bf = org.apache.spark.util.sketch.BloomFilter
-        .create((writeOptions.bloomBits / 10L).max(1L), writeOptions.bloomBits)
-      val bos = new java.io.ByteArrayOutputStream()
-      bf.writeTo(bos)
-      bos.toByteArray
-    }
+    lazy val emptyBits = BloomParquetWriteSupport.emptyBits(writeOptions.bloomBits)
     rows.iterator.map { r =>
       val rel = relativize(Seq(r.getString(0)), "bloom").head
       rel -> cols.zipWithIndex.map { case (c, i) =>
@@ -3283,17 +3329,25 @@ final class TsTable private (
     * mismatch (orphans from a crashed append, files attached outside the
     * facade, statless footers) returns None and the edge-partition
     * aggregate answers instead. */
-  private def statsEdge(last: Boolean): Option[Timestamp] = {
+  private def statsEdge(last: Boolean): Option[Timestamp] =
+    exactSpans.filter(_.nonEmpty).map { spans =>
+      val us = if (last) spans.map(_._2).max else spans.map(_._1).min
+      Timestamp.from(
+        org.apache.spark.sql.catalyst.util.DateTimeUtils.microsToInstant(us))
+    }
+
+  /** Every live file's ts span (closed, epoch µs), when the current
+    * manifest describes the live table exactly: its file set matches the
+    * live listing (path + size) and every file carries a span. None on any
+    * mismatch (no manifest, orphans from a crashed append, files attached
+    * outside the facade, statless footers). Cost: one version listing +
+    * one manifest read + one live listing — no Spark job. */
+  private def exactSpans: Option[Seq[(Long, Long)]] = {
     val (_, m) = currentManifest.getOrElse(return None)
-    if (m.files.isEmpty) return None
     if (!m.files.forall(f => m.stats.contains(f._1))) return None
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (listLiveFiles(fs).toSet != m.files.toSet) return None
-    val us =
-      if (last) m.stats.valuesIterator.map(_._2).max
-      else m.stats.valuesIterator.map(_._1).min
-    Some(Timestamp.from(
-      org.apache.spark.sql.catalyst.util.DateTimeUtils.microsToInstant(us)))
+    Some(m.files.map(f => m.stats(f._1)))
   }
 
   /** Declare a rewrite in flight (see [[TsTable.InflightDir]]): one marker
@@ -3896,9 +3950,19 @@ object TsTable {
     * delegation re-opens handles internally; a no-op outside tests. */
   private[graft] var rewriteRaceHook: (String, String) => Unit = (_, _) => ()
 
-  /** The facade's parquet reader — archive-resolving + foreign-file
-    * name-fallback (see ArchiveResolvingParquetFileFormat). */
-  private[graft] val ReadFmt =
+  /** Exact count of the distinct non-null values of `c`, as a
+    * single-level aggregate (the size of the collected set): no Expand and
+    * no second shuffle, unlike `countDistinct`. For the small sets the
+    * write verbs count (days, hour slots), bounded by the files they
+    * write. */
+  private[ts] def distinctCount(c: org.apache.spark.sql.Column)
+      : org.apache.spark.sql.Column =
+    size(collect_set(c)).cast(LongType)
+
+  /** The table's one parquet format, for reads and writes:
+    * archive-resolving + foreign-file name-fallback reads, and footer
+    * Bloom bits on writes (see ArchiveResolvingParquetFileFormat). */
+  private[graft] val Fmt =
     "org.apache.spark.sql.graft.ArchiveResolvingParquetFileFormat"
 
   /** True when EVERY data column carries a field id (tables created at
@@ -4210,14 +4274,17 @@ object TsTable {
     } catch { case _: Exception => false }
   }
 
-  /** One footer open, two harvests: the ts span (see [[footerTsSpan]]'s
-    * usability rules) and — independently, best-effort per column — the
+  /** One footer open, three harvests: the ts span (see [[footerTsSpan]]'s
+    * usability rules); independently, best-effort per column, the
     * min/max of each requested stats column (INT32/INT64 → 'l',
     * FLOAT/DOUBLE → 'd'; a column missing stats in ANY row group, or
-    * carrying non-finite bounds, is simply dropped — never skipped on). */
+    * carrying non-finite bounds, is simply dropped — never skipped on);
+    * and the writer-built Bloom bits stored under each of `bloomKeys`'
+    * footer keys (column → key; absent keys are simply missing). */
   private[ts] def footerSpans(conf: org.apache.hadoop.conf.Configuration,
-                              file: Path, tsCol: String, cols: Seq[String])
-      : (Option[(Long, Long)], Map[String, ColSpan]) = {
+                              file: Path, tsCol: String, cols: Seq[String],
+                              bloomKeys: Map[String, String] = Map.empty)
+      : (Option[(Long, Long)], Map[String, ColSpan], Map[String, Array[Byte]]) = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.parquet.schema.LogicalTypeAnnotation
@@ -4227,7 +4294,7 @@ object TsTable {
       val rd = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
       try {
         val blocks = rd.getFooter.getBlocks.asScala
-        if (blocks.isEmpty) return (None, Map.empty)
+        if (blocks.isEmpty) return (None, Map.empty, Map.empty)
 
         // ── ts span (all-or-nothing across row groups)
         var tsOk = true
@@ -4313,9 +4380,14 @@ object TsTable {
           else Some(name -> ColSpan('e', "0", "0"))
         }.toMap
 
-        (if (tsOk) Some((mn, mx)) else None, colSpans)
+        val kv = rd.getFooter.getFileMetaData.getKeyValueMetaData
+        val blooms = bloomKeys.flatMap { case (c, k) =>
+          Option(kv.get(k)).map(v => c -> BloomParquetWriteSupport.decode(v))
+        }
+
+        (if (tsOk) Some((mn, mx)) else None, colSpans, blooms)
       } finally rd.close()
-    } catch { case scala.util.control.NonFatal(_) => (None, Map.empty) }
+    } catch { case scala.util.control.NonFatal(_) => (None, Map.empty, Map.empty) }
   }
 
   /** Pin a committed version of the table at `path` — usable without a

@@ -1,10 +1,11 @@
 package org.apache.spark.sql.graft
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.mapreduce.Job
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.datasources.PartitionedFile
+import org.apache.spark.sql.execution.datasources.{OutputWriterFactory, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
@@ -35,12 +36,30 @@ import org.apache.spark.sql.types.StructType
   * every pinned read and every streaming microbatch
   * ([[GraftTsStreamSource]]).
   *
+  * It is also the format of every TsTable data write: given the
+  * [[BloomParquetWriteSupport.ColsOption]]/`BitsOption` write options,
+  * each written file carries its Bloom bits in its footer.
+  *
   * Lives under org.apache.spark.sql because
   * `buildReaderWithPartitionValues` is `private[sql]` — same shim rule as
   * [[BloomExprs]]. */
 final class ArchiveResolvingParquetFileFormat extends ParquetFileFormat {
 
   override def toString: String = "GraftTsParquet(archive-resolving)"
+
+  override def prepareWrite(
+      sparkSession: SparkSession,
+      job: Job,
+      options: Map[String, String],
+      dataSchema: StructType): OutputWriterFactory = {
+    val factory = super.prepareWrite(sparkSession, job, options, dataSchema)
+    options.get(BloomParquetWriteSupport.ColsOption).foreach { cols =>
+      BloomParquetWriteSupport.configure(job.getConfiguration,
+        cols.split(",").toSeq.filter(dataSchema.fieldNames.contains),
+        options(BloomParquetWriteSupport.BitsOption).toLong)
+    }
+    factory
+  }
 
   override def buildReaderWithPartitionValues(
       sparkSession: SparkSession,

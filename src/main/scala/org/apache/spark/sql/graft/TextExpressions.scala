@@ -49,7 +49,7 @@ object ShingleKernel extends Serializable { // codegen reference object
   * every lambda interpreted — measured ~0.5 ms/doc on the documents
   * fixture, the single largest cost in the near-dup queries. This kernel
   * is one O(tokens) pass per row inside whole-stage codegen. Parity with
-  * the HOF formulation (kept as TextFns.shingles3Hof) is asserted in
+  * the HOF formulation (kept as InterpretedTwins.shingles3Hof in the tests) is asserted in
   * LlmPackSpec over the fixture and adversarial whitespace edges. */
 case class Shingles3(child: Expression)
     extends UnaryExpression with ImplicitCastInputTypes {
@@ -223,7 +223,7 @@ object SpanKernel extends Serializable { // codegen reference object
 
 /** Native positional span-key builder — see [[SpanKernel.spanKeys]]. One
   * codegen'd pass per row; parity with the HOF formulation
-  * (NearDedup.spanKeysHof) asserted in NearDedupSpec. */
+  * (InterpretedTwins.spanKeysHof, in the tests) asserted in NearDedupSpec. */
 case class SpanKeys(child: Expression, spanWords: Int)
     extends UnaryExpression with ImplicitCastInputTypes {
   require(spanWords >= 1, s"span width must be >= 1, got $spanWords")
@@ -254,7 +254,7 @@ case class SpanKeys(child: Expression, spanWords: Int)
 }
 
 /** Native residual-text rebuild — see [[SpanKernel.residualWords]]. Parity
-  * with the HOF formulation (NearDedup.residualWordsHof) asserted in
+  * with the HOF formulation (InterpretedTwins.residualWordsHof, in the tests) asserted in
   * NearDedupSpec. */
 case class ResidualWords(left: Expression, right: Expression, spanWords: Int)
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression

@@ -12,7 +12,7 @@ class HashExprSpec extends SparkSpec {
   test("native simhash64 == HOF simhash64 bit-for-bit on the documents fixture") {
     val d = Tables.documents(spark, sf0001)
       .select(NearDedup.simhash64(col("text")).as("native"),
-        NearDedup.simhash64Hof(col("text")).as("hof"))
+        InterpretedTwins.simhash64Hof(col("text")).as("hof"))
     assert(d.where(col("native") =!= col("hof")).count() == 0)
     assert(d.count() == 500)
   }
@@ -21,7 +21,7 @@ class HashExprSpec extends SparkSpec {
     import spark.implicits._
     val d = Seq((1L, ""), (2L, "   "), (3L, "one")).toDF("id", "text")
     val got = d.select(col("id"), NearDedup.simhash64(col("text")).as("s"),
-        NearDedup.simhash64Hof(col("text")).as("hs"))
+        InterpretedTwins.simhash64Hof(col("text")).as("hs"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     got.foreach { case (_, s, hs) => assert(s == hs) }
   }

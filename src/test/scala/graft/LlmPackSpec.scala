@@ -53,7 +53,7 @@ class LlmPackSpec extends SparkSpec {
       .select(col("doc_id"), c.as("sh")).collect()
       .map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     val native = rows(TextFns.shingles3(col("text")))
-    val hof = rows(TextFns.shingles3Hof(col("text")))
+    val hof = rows(InterpretedTwins.shingles3Hof(col("text")))
     assert(native.keySet == hof.keySet)
     for ((k, v) <- native)
       assert(v == hof(k), s"doc $k: native=$v hof=${hof(k)}")
@@ -73,7 +73,7 @@ class LlmPackSpec extends SparkSpec {
       .select(col("doc_id"), c.as("sh")).collect()
       .map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     val native = rows(TextFns.shinglesN(col("text"), 5))
-    val hof = rows(TextFns.shinglesNHof(col("text"), 5))
+    val hof = rows(InterpretedTwins.shinglesNHof(col("text"), 5))
     assert(native.keySet == hof.keySet)
     for ((k, v) <- native)
       assert(v == hof(k), s"doc $k: native=$v hof=${hof(k)}")

@@ -216,6 +216,20 @@ class NearDedupSpec extends SparkSpec {
       s"small-vocab rank must not fall back to the window form:\n$planStr")
   }
 
+  test("a materialized pipeline destroys rankedByDf's vocabulary broadcast " +
+      "once its checkpoint has materialized") {
+    val seen = scala.collection.mutable.ArrayBuffer.empty[
+      org.apache.spark.broadcast.Broadcast[_]]
+    val ranked = NearDedup.materializedPairs(sets(skewed(60)), Some(true)) {
+      (s, track) => NearDedup.rankedByDf(s, hotDf = 5, track = { b => seen += b; track(b) })
+    }
+    assert(seen.size == 1, "the small-vocab branch broadcasts its vocabulary once")
+    val e = intercept[org.apache.spark.SparkException](seen.head.value)
+    assert(e.getMessage.contains("destroyed"), e.getMessage)
+    // the checkpointed result no longer needs it
+    assert(ranked.count() > 0)
+  }
+
   test("rankedByDf ranking is identical to the naive single-join formulation") {
     val s = sets(skewed(60))
     val naive = s
@@ -362,7 +376,7 @@ class NearDedupSpec extends SparkSpec {
     // (a) span keys: kernel vs HOF, every row
     val spanDiff = docs.select(col("doc_id"),
         TextExprs.spanKeys(col("w"), spanWords).as("k"),
-        NearDedup.spanKeysHof(col("w"), spanWords).as("h"))
+        InterpretedTwins.spanKeysHof(col("w"), spanWords).as("h"))
       .where(not(col("k") <=> col("h")))
     assert(spanDiff.isEmpty, s"SpanKeys mismatch: ${spanDiff.collect().toSeq}")
 
@@ -372,13 +386,13 @@ class NearDedupSpec extends SparkSpec {
       array(lit(3), lit(1), lit(4), lit(1), lit(12), lit(200)).as("starts"))
     val resDiff = withStarts.select(col("doc_id"),
         TextExprs.residualWords(col("w"), col("starts"), spanWords).as("k"),
-        NearDedup.residualWordsHof(col("w"), col("starts"), spanWords).as("h"))
+        InterpretedTwins.residualWordsHof(col("w"), col("starts"), spanWords).as("h"))
       .where(not(col("k") <=> col("h")))
     assert(resDiff.isEmpty, s"ResidualWords mismatch: ${resDiff.collect().toSeq}")
     val emptyDiff = docs.select(col("doc_id"),
         TextExprs.residualWords(col("w"),
           array().cast("array<int>"), spanWords).as("k"),
-        NearDedup.residualWordsHof(col("w"),
+        InterpretedTwins.residualWordsHof(col("w"),
           array().cast("array<int>"), spanWords).as("h"))
       .where(not(col("k") <=> col("h")))
     assert(emptyDiff.isEmpty,
@@ -389,7 +403,7 @@ class NearDedupSpec extends SparkSpec {
     // pipeline inline and compare full frames)
     val base = docs
       .select(col("doc_id").as("id"), col("lang").as("part"), col("w"))
-      .withColumn("spans", NearDedup.spanKeysHof(col("w"), spanWords))
+      .withColumn("spans", InterpretedTwins.spanKeysHof(col("w"), spanWords))
     val occ = base.select(col("id"), posexplode(col("spans")).as(Seq("pos", "h")))
     val hot = occ.groupBy(col("h")).agg(count(lit(1)).as("mult"))
       .where(col("mult") > 8).select(col("h"))
@@ -398,7 +412,7 @@ class NearDedupSpec extends SparkSpec {
     val hofStrip = base.join(covered, Seq("id"), "left")
       .withColumn("starts", coalesce(col("starts"), array().cast("array<int>")))
       .withColumn("clean_text",
-        NearDedup.residualWordsHof(col("w"), col("starts"), spanWords))
+        InterpretedTwins.residualWordsHof(col("w"), col("starts"), spanWords))
       .select(col("id"), col("clean_text"))
     val kernelStrip = NearDedup.stripRepeatedSpans(
         docs.select(col("doc_id"), col("lang"), col("text")),
@@ -425,9 +439,9 @@ class NearDedupSpec extends SparkSpec {
       .withColumn("w", graft.functions.TextFns.tokens(col("text")))
     val r = nullDoc.select(
       TextExprs.spanKeys(col("w"), spanWords).as("k"),
-      NearDedup.spanKeysHof(col("w"), spanWords).as("h"),
+      InterpretedTwins.spanKeysHof(col("w"), spanWords).as("h"),
       TextExprs.residualWords(col("w"), array().cast("array<int>"), spanWords).as("rk"),
-      NearDedup.residualWordsHof(col("w"), array().cast("array<int>"), spanWords).as("rh"),
+      InterpretedTwins.residualWordsHof(col("w"), array().cast("array<int>"), spanWords).as("rh"),
       graft.functions.TextFns.shingles3(col("text")).as("shNull")).head()
     assert(r.isNullAt(0), "kernel spanKeys(null) should be null")
     assert(r.getSeq[String](1).isEmpty, "HOF spanKeys(null) should be []")

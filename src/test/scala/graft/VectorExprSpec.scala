@@ -15,7 +15,7 @@ class VectorExprSpec extends SparkSpec {
     val probe = e.where(col("vec_id") === 0).select(col("v").as("p"))
     val both = e.crossJoin(broadcast(probe))
       .select(VectorFns.dot(col("v"), col("p")).as("native"),
-        VectorFns.dotHof(col("v"), col("p")).as("hof"))
+        InterpretedTwins.dotHof(col("v"), col("p")).as("hof"))
     assert(both.where(col("native") =!= col("hof")).count() == 0)
     assert(both.count() == 500)
   }
