@@ -250,10 +250,10 @@ final class GraftTsV2Table(spark: SparkSession, val ts: TsTable,
       case None =>
         val full = StructType(ts.schema.fields :+
           StructField(TsTable.PartCol, DateType, nullable = true))
-        val spans = ts.currentFileTsSpans
+        val (spans, colSpans, blooms) = ts.currentFileIndexes
         if (spans.nonEmpty)
           new GraftTsStatsFileIndex(spark, new Path(ts.path), full, spans,
-            ts.tsCol, ts.currentFileColSpans, ts.currentFileBlooms)
+            ts.tsCol, colSpans, blooms)
         else
           new InMemoryFileIndex(spark, Seq(new Path(ts.path)), Map.empty[String, String],
             Some(full), FileStatusCache.getOrCreate(spark), None, None)

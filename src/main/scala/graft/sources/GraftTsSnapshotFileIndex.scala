@@ -137,38 +137,9 @@ final class GraftTsSnapshotFileIndex(
     if (dataFilters.isEmpty) return dirs
     if (spanByPath.isEmpty && colByPath.isEmpty && declaredBloomCols.isEmpty)
       return dirs
-    val (lo, hi) = GraftTsStatsFileIndex.tsBounds(dataFilters, snapshot.tsCol)
-    val colBounds = statCols.flatMap { c =>
-      val b = GraftTsStatsFileIndex.numBounds(dataFilters, c)
-      if (b._1.isEmpty && b._2.isEmpty) None else Some((c, b._1, b._2))
-    }
-    val bloomProbes = declaredBloomCols.flatMap { c =>
-      GraftTsStatsFileIndex.eqProbeHashes(dataFilters, c).map(c -> _)
-    }
-    if (lo.isEmpty && hi.isEmpty && colBounds.isEmpty && bloomProbes.isEmpty)
-      return dirs
-    dirs.map { pd =>
-      pd.copy(files = pd.files.filter { f =>
-        val p = f.getPath
-        val tsKeep = spanByPath.get(p) match {
-          case Some((mn, mx)) => lo.forall(mx >= _) && hi.forall(mn <= _)
-          case None => true
-        }
-        tsKeep && colBounds.forall { case (c, cLo, cHi) =>
-          colByPath.get(p).flatMap(_.get(c)) match {
-            // 'e' = harvested-but-unskippable marker: keep the file
-            case Some(s0) if s0.typ != 'e' =>
-              cLo.forall(s0.hiBD >= _) && cHi.forall(s0.loBD <= _)
-            case _ => true
-          }
-        } && bloomProbes.forall { case (c, hashes) =>
-          bloomByPath.get(p).flatMap(_.get(c)) match {
-            case Some(bf) => hashes.exists(bf.mightContainLong)
-            case None => true
-          }
-        }
-      })
-    }
+    GraftTsStatsFileIndex.skipFiles(dirs, dataFilters, snapshot.tsCol,
+      statCols, declaredBloomCols)(spanByPath.get, colByPath.get,
+      p => bloomByPath.get(p))
   }
 
   override protected def leafFiles: mutable.LinkedHashMap[Path, FileStatus] =

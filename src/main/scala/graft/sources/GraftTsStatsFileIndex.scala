@@ -7,6 +7,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, LessThan, LessThanOrEqual, Literal, XxHash64}
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, InMemoryFileIndex, PartitionDirectory}
 import org.apache.spark.sql.types.{StructType, TimestampType}
+import org.apache.spark.util.sketch.BloomFilter
 
 /** The live V2 file index with MANIFEST-LEVEL file skipping: the standard
   * directory-listing index (membership stays listing-driven — the live
@@ -60,11 +61,10 @@ final class GraftTsStatsFileIndex(
 
   // deserialized once per index instance (a fresh Table — every load() —
   // gets a fresh index); O(#files × bits/8) driver memory while planning
-  private lazy val bloomByPath
-      : Map[String, Map[String, org.apache.spark.util.sketch.BloomFilter]] =
+  private lazy val bloomByPath: Map[String, Map[String, BloomFilter]] =
     blooms.map { case (rel, cols) =>
       qualify(rel) -> cols.map { case (c, bytes) =>
-        c -> org.apache.spark.util.sketch.BloomFilter.readFrom(
+        c -> BloomFilter.readFrom(
           new java.io.ByteArrayInputStream(bytes))
       }
     }
@@ -76,45 +76,61 @@ final class GraftTsStatsFileIndex(
                          dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
     val dirs = super.listFiles(partitionFilters, dataFilters)
     if (byPath.isEmpty && colByPath.isEmpty && bloomByPath.isEmpty) return dirs
-    val (lo, hi) = GraftTsStatsFileIndex.tsBounds(dataFilters, tsCol)
+    GraftTsStatsFileIndex.skipFiles(dirs, dataFilters, tsCol, statCols,
+      bloomCols)(p => byPath.get(p.toString), p => colByPath.get(p.toString),
+      p => bloomByPath.get(p.toString))
+  }
+}
+
+object GraftTsStatsFileIndex {
+
+  /** The per-file keep rule of both V2 file indexes (live and snapshot):
+    * drop a file whose recorded closed ts span misses the pushed ts
+    * bounds, whose declared-stats span excludes every value a conjunct on
+    * that column allows, or whose Bloom bits reject every hash of some
+    * equality conjunct. A file with no entry in an index is kept by that
+    * index, and so is a stats span marked `'e'` (harvested, unskippable).
+    * `statCols`/`bloomCols` name the columns worth deriving bounds and
+    * probes for; the lookups are called only for a bound or probe that
+    * applies, so a lazily-built index is never forced without one.
+    * Returns `dirs` itself when the filters imply no bound and no probe. */
+  private[sources] def skipFiles(dirs: Seq[PartitionDirectory],
+      dataFilters: Seq[Expression], tsCol: String, statCols: Seq[String],
+      bloomCols: Seq[String])(
+      span: Path => Option[(Long, Long)],
+      colSpans: Path => Option[Map[String, graft.ts.ColSpan]],
+      blooms: Path => Option[Map[String, BloomFilter]])
+      : Seq[PartitionDirectory] = {
+    val (lo, hi) = tsBounds(dataFilters, tsCol)
     // bounds per stats column, from the same pushed conjuncts
     val colBounds = statCols.flatMap { c =>
-      val b = GraftTsStatsFileIndex.numBounds(dataFilters, c)
+      val b = numBounds(dataFilters, c)
       if (b._1.isEmpty && b._2.isEmpty) None else Some((c, b._1, b._2))
     }
     // per-conjunct equality probe hashes on bloom-indexed columns — a file
     // must might-contain at least one hash of EVERY equality conjunct
     val bloomProbes = bloomCols.flatMap { c =>
-      GraftTsStatsFileIndex.eqProbeHashes(dataFilters, c).map(c -> _)
+      eqProbeHashes(dataFilters, c).map(c -> _)
     }
     if (lo.isEmpty && hi.isEmpty && colBounds.isEmpty && bloomProbes.isEmpty)
       return dirs
     dirs.map { pd =>
       pd.copy(files = pd.files.filter { f =>
-        val p = f.getPath.toString
-        val tsKeep = byPath.get(p) match {
-          case Some((mn, mx)) => lo.forall(mx >= _) && hi.forall(mn <= _)
-          case None => true // no span recorded → never skip
-        }
-        tsKeep && colBounds.forall { case (c, cLo, cHi) =>
-          colByPath.get(p).flatMap(_.get(c)) match {
-            // 'e' = harvested-but-unskippable marker: keep the file
+        val p = f.getPath
+        span(p).forall { case (mn, mx) =>
+          lo.forall(mx >= _) && hi.forall(mn <= _)
+        } && colBounds.forall { case (c, cLo, cHi) =>
+          colSpans(p).flatMap(_.get(c)) match {
             case Some(s0) if s0.typ != 'e' =>
               cLo.forall(s0.hiBD >= _) && cHi.forall(s0.loBD <= _)
             case _ => true
           }
         } && bloomProbes.forall { case (c, hashes) =>
-          bloomByPath.get(p).flatMap(_.get(c)) match {
-            case Some(bf) => hashes.exists(bf.mightContainLong)
-            case None => true // no bits recorded → never skip
-          }
+          blooms(p).flatMap(_.get(c)).forall(bf => hashes.exists(bf.mightContainLong))
         }
       })
     }
   }
-}
-
-object GraftTsStatsFileIndex {
 
   /** Closed [lo, hi] µs bounds implied by the scan's top-level ts
     * conjuncts (either operand order). Strict comparisons widen to their

@@ -1,12 +1,13 @@
 package graft.ts
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.BloomParquetWriteSupport
 import org.apache.spark.sql.types.{ByteType, DataType, DateType, DecimalType, DoubleType, FloatType, IntegerType, LongType, ShortType, StructField, StructType, TimestampType}
 
 import java.sql.Timestamp
+import scala.reflect.ClassTag
 
 /** A time-partitioned, time-sorted Parquet dataset.
   *
@@ -247,9 +248,7 @@ final class TsTable private (
     val dir = new Path(path)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val meta = partitionDates.map { d =>
-      val files = fs.listStatus(new Path(dir, s"$PartCol=$d")).toSeq
-        .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-          !f.getPath.getName.startsWith("."))
+      val files = dataFiles(fs.listStatus(new Path(dir, s"$PartCol=$d")))
       (d, files.size.toLong, files.map(_.getLen).sum)
     }.toDF(PartCol, "n_files", "n_bytes")
     val rows = raw.groupBy(col(PartCol).cast("string").as(PartCol))
@@ -266,8 +265,12 @@ final class TsTable private (
   private def partitionDates: Seq[String] = {
     val dir = new Path(path)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).iterator
+    if (!fs.exists(dir)) Seq.empty else datesIn(fs.listStatus(dir))
+  }
+
+  /** The partition dates of a listing of the table root. */
+  private def datesIn(rootListing: Array[FileStatus]): Seq[String] =
+    rootListing.iterator
       .filter(_.isDirectory)
       .map(_.getPath.getName)
       .filter(n => n.startsWith(PartCol + "="))
@@ -279,7 +282,6 @@ final class TsTable private (
       // monotonicity guard. Skips HIVE_DEFAULT_PARTITION too.
       .filter(DateDirRe.matches)
       .toSeq
-  }
 
   /** The first/last day-partition as a frame, or the whole table when no
     * partition directories exist (attached plain layout). Because
@@ -928,29 +930,17 @@ final class TsTable private (
     * a pure-DDL rename cannot retarget ([[renameColumn]]'s guard,
     * [[migrateFieldIds]]'s work list). One footer open per live file,
     * zero data pages; driver-side for a handful of files, one task per
-    * file beyond (collectSpans' distribution rule). An unreadable footer
+    * file beyond ([[TsTable.perFile]]). An unreadable footer
     * counts as id-less — refusing loudly beats renaming over it. */
   private def idlessLiveFiles(): Seq[String] = {
     val fs = new Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val rels = listLiveFiles(fs).map(_._1)
-    if (rels.isEmpty) return Seq.empty
     val rootStr = path
-    if (rels.length <= 16) {
-      val conf = spark.sparkContext.hadoopConfiguration
-      rels.filterNot(r =>
-        TsTable.footerHasFieldIds(conf, new Path(rootStr, r)))
-    } else {
-      val conf = new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration)
-      val slices = math.min(rels.length,
-        spark.sparkContext.defaultParallelism).max(1)
-      spark.sparkContext.parallelize(rels, slices)
-        .filter(r => !TsTable.footerHasFieldIds(conf.value,
-          new Path(rootStr, r)))
-        .collect().toSeq.sorted
-    }
+    TsTable.perFile(spark, listLiveFiles(fs).map(_._1)) { (conf, r) =>
+      r -> TsTable.footerHasFieldIds(conf, new Path(rootStr, r))
+    }.collect { case (r, false) => r }
   }
+
 
   /** Out-of-order bulk INSERT — `append` without the monotonicity guard
     * (the late-data verb `mergeInto` carries as its NOT-MATCHED side,
@@ -1254,14 +1244,14 @@ final class TsTable private (
     }
   }
 
-  /** Data files of one partition directory — skips `_`/`.`-prefixed entries
-    * (success markers, schema descriptor, in-flight compaction temp). */
-  private def dataFiles(fs: org.apache.hadoop.fs.FileSystem, dir: Path): Seq[Path] =
-    fs.listStatus(dir).iterator
-      .filter(_.isFile)
-      .map(_.getPath)
-      .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
-      .toSeq
+  /** The data files of one directory listing — skips directories and
+    * `_`/`.`-prefixed entries (success markers, schema descriptor,
+    * in-flight write temps). */
+  private def dataFiles(listing: Array[FileStatus]): Seq[FileStatus] =
+    listing.iterator.filter { st =>
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }.toSeq
 
   /** Compact one day partition's files down to `targetFiles` ts-sorted files
     * (each covering a contiguous ts slice, via range partitioning — the same
@@ -1363,11 +1353,8 @@ final class TsTable private (
       dates.distinct.sorted.map { d =>
         val dir = new Path(root, s"$PartCol=$d")
         d -> (if (!fs.exists(dir)) Seq.empty[(String, Long)]
-        else fs.listStatus(dir).iterator
-          .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-            !st.getPath.getName.startsWith("."))
-          .map(st => (s"$PartCol=$d/${st.getPath.getName}", st.getLen))
-          .toSeq)
+        else dataFiles(fs.listStatus(dir))
+          .map(st => (s"$PartCol=$d/${st.getPath.getName}", st.getLen)))
       }.toMap
     val hit = dates.distinct.sorted.filter { d =>
       // bin-packing skips days already at target (for hourly tables: no
@@ -1393,142 +1380,77 @@ final class TsTable private (
     // (pre-swap liveness + commit-time manifest membership) judge exactly
     // that set.
     val displaced = hit.flatMap(dayFiles)
-    val (guarded, planV) = guardDisplaced(displaced, "compact")
-    // Same µs-instant encoding rationale as appendValidated.
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    // writer-unique staging — the cowExec rule (see its comment)
-    val tmp = new Path(root,
-      s"_compact_tmp_${java.util.UUID.randomUUID().toString}")
-    // in-flight marker before anything stages — the cowExec rule
-    val marker = writeInflightMarker(fs, tmp.getName, displaced.map(_._1))
-    try {
-    // Partition values (p_date) derive from the manifest rel paths via
-    // the snapshot file index. Resolution is EAGER about file existence
-    // (frame construction), so it sits inside the staging-race try below
-    // with the aggregates and the rewrite job.
-    try {
-    // synthetic-manifest snapshot read over the plan-time file set — the
-    // cowExec staging rule (explicit statuses, no lazy listing to
-    // silently narrow the compacted output)
-    val days = new TsSnapshot(spark, path, tsCol,
-      TsManifest(-1L, "staging", tsCol, storedSchema, displaced)).raw
-    // targetFiles=1: hash by day — one task → one sorted file per day;
-    // >1: range on (day, ts) — each heavy day splits into ~targetFiles
-    // contiguous ts slices (the append filesPerDay rule).
-    // clusterBy (>= 2 cols): the day re-sorts along the Morton curve of
-    // the named columns instead of ts — files become k-D tiles, and the
-    // per-file colStats spans of DECLARED statsCols turn rectangle
-    // predicates into planning-time file skips on the governed store
-    // (the standalone ZOrderLayout, without leaving the format). The
-    // trade is explicit: a clustered day's files are no longer
-    // ts-contiguous, so the ts span index degrades to day granularity
-    // for that day until a plain compact restores it.
-    // staging reads touch ONLY the planned inputs — a vanished table file
-    // (the eager load above, bounds/slot aggregates, or the rewrite job)
-    // is a concurrent rewrite taking them: the retryable conflict,
-    // nothing live touched
-    val sorted = {
-      val d = withFieldIds(days)
-      if (cluster.nonEmpty) {
-        val aggs = cluster.flatMap(c =>
-          Seq(min(col(c).cast("double")), max(col(c).cast("double"))))
-        val r = d.agg(aggs.head, aggs.tail: _*).head // 1 driver row: bounds
-        // every axis checked by name: an all-null non-first column would
-        // otherwise surface as a bare NPE from getDouble — the abort is
-        // safe either way (nothing has been rewritten yet), the message
-        // should name the column
-        cluster.zipWithIndex.foreach { case (c, j) =>
-          require(!r.isNullAt(2 * j) && !r.isNullAt(2 * j + 1),
-            s"compact clusterBy: column '$c' has no non-null values in " +
-              "the selected days — no Morton axis can be derived from it")
-        }
-        val bounds = cluster.indices.map(j => (r.getDouble(2 * j), r.getDouble(2 * j + 1)))
-        val z = graft.operators.ZOrderLayout.codeColumn(cluster.map(col), bounds)
-        d.withColumn("__zcode", z)
-          .repartitionByRange((hit.length * targetFiles).max(1),
-            col(PartCol), col("__zcode"))
-          .sortWithinPartitions(col(PartCol), col("__zcode"))
-          .drop("__zcode") // projection preserves the in-partition order
-      } else if (hourly) {
-        // the append path's hour slotting replayed by maintenance: one
-        // range slot per distinct (day, hour) in the selected days
-        // (times targetFiles for finer slices). At targetFiles=1 the
-        // range key deliberately OMITS ts: equal (day, hour) keys cannot
-        // split across range partitions, so no rewritten file ever
-        // straddles an hour even when per-hour row counts are skewed
-        // (a sampled (day, hour, ts) boundary lands mid-hour under skew,
-        // and a straddling file would re-qualify the day under the
-        // per-bucket pressure test forever); slots can only MERGE into
-        // adjacent-hour files, which stay ts-contiguous. One extra
-        // distinct-count aggregate, paid by hour-slotted tables only.
-        val nSlots = d.agg(TsTable.distinctCount(struct(col(PartCol),
-          date_trunc("hour", col(tsCol))))).head.getLong(0)
-        val slotted =
-          if (targetFiles == 1)
-            d.repartitionByRange(nSlots.toInt.max(1),
-              col(PartCol), date_trunc("hour", col(tsCol)))
-          else
-            d.repartitionByRange((nSlots * targetFiles).toInt.max(1),
-              col(PartCol), date_trunc("hour", col(tsCol)), col(tsCol))
-        slotted.sortWithinPartitions(col(PartCol), col(tsCol))
-      } else if (targetFiles == 1)
-        d.repartition(col(PartCol)).sortWithinPartitions(col(PartCol), col(tsCol))
-      else d.repartitionByRange(
-          (hit.length * targetFiles).max(1), col(PartCol), col(tsCol))
-        .sortWithinPartitions(col(PartCol), col(tsCol))
-    }
-    tableWriter(sorted, "overwrite")
-      .partitionBy(PartCol).save(tmp.toString) // lands BEFORE any swap
-    } catch { case e: Throwable if stagingSwapRace(e, displaced) =>
-      fs.delete(tmp, true)
-      throw new TsTable.ConcurrentRewriteException(
-        "compact: a planned input vanished during the staging rewrite " +
-          "(concurrent rewrite); staged output dropped, live table " +
-          "untouched — retry on a fresh handle", e)
-    }
-    TsTable.rewriteRaceHook("staged", "compact")
-    requireDisplacedLive(fs, displaced, "compact", staged = tmp)
-    TsTable.rewriteRaceHook("archiving", "compact")
-    // swap: archive EXACTLY the planned inputs (never a fresh listing — a
-    // concurrent append's new file must stay live), then move the
-    // rewritten files in, recording each move for the conflict rollback.
-    // The rollback set is what THIS verb archived so far — never the full
-    // plan: the file that FNF'd was archived by a concurrent winner's own
-    // in-flight swap, and re-living it would resurrect rows the winner
-    // rewrote away into its committed (or about-to-commit) manifest.
-    val archivedHere = Seq.newBuilder[(String, Long)]
-    try displaced.foreach { case d @ (rel, _) =>
-      archiveFile(fs, rel); archivedHere += d
-    }
-    catch { case _: java.io.FileNotFoundException =>
-      rollbackSwap(fs, archivedHere.result(), Seq.empty)
-      fs.delete(tmp, true)
-      throw new TsTable.ConcurrentRewriteException(
-        "compact: a planned input vanished while archiving (concurrent " +
-          "rewrite); swap rolled back, staged output dropped — retry on a " +
-          "fresh handle")
-    }
-    val movedIn = Seq.newBuilder[String]
-    hit.foreach { d =>
-      val partDir = new Path(root, s"$PartCol=$d")
-      val tmpDay = new Path(tmp, s"$PartCol=$d")
-      if (fs.exists(tmpDay))
-        dataFiles(fs, tmpDay).foreach { f =>
-          fs.rename(f, new Path(partDir, f.getName))
-          movedIn += s"$PartCol=$d/${f.getName}"
-        }
-    }
-    fs.delete(tmp, true)
-    TsTable.rewriteRaceHook("swapped", "compact")
-    try commitVersion("compact", displaced = guarded,
-      displacedPlanVersion = planV)
-    catch { case e: TsTable.ConcurrentRewriteException =>
-      rollbackSwap(fs, displaced, movedIn.result())
-      commitVersion("checkpoint") // heal: re-list so the retry re-plans
-      throw e
+    stageAndSwap(displaced, "compact", "_compact_tmp_") { tmp =>
+      // synthetic-manifest snapshot read over the plan-time file set — the
+      // cowExec staging rule (explicit statuses, no lazy listing to
+      // silently narrow the compacted output)
+      val days = new TsSnapshot(spark, path, tsCol,
+        TsManifest(-1L, "staging", tsCol, storedSchema, displaced)).raw
+      // targetFiles=1: hash by day — one task → one sorted file per day;
+      // >1: range on (day, ts) — each heavy day splits into ~targetFiles
+      // contiguous ts slices (the append filesPerDay rule).
+      // clusterBy (>= 2 cols): the day re-sorts along the Morton curve of
+      // the named columns instead of ts — files become k-D tiles, and the
+      // per-file colStats spans of DECLARED statsCols turn rectangle
+      // predicates into planning-time file skips on the governed store
+      // (the standalone ZOrderLayout, without leaving the format). The
+      // trade is explicit: a clustered day's files are no longer
+      // ts-contiguous, so the ts span index degrades to day granularity
+      // for that day until a plain compact restores it.
+      val sorted = {
+        val d = withFieldIds(days)
+        if (cluster.nonEmpty) {
+          val aggs = cluster.flatMap(c =>
+            Seq(min(col(c).cast("double")), max(col(c).cast("double"))))
+          val r = d.agg(aggs.head, aggs.tail: _*).head // 1 driver row: bounds
+          // every axis checked by name: an all-null non-first column would
+          // otherwise surface as a bare NPE from getDouble — the abort is
+          // safe either way (nothing has been rewritten yet), the message
+          // should name the column
+          cluster.zipWithIndex.foreach { case (c, j) =>
+            require(!r.isNullAt(2 * j) && !r.isNullAt(2 * j + 1),
+              s"compact clusterBy: column '$c' has no non-null values in " +
+                "the selected days — no Morton axis can be derived from it")
+          }
+          val bounds = cluster.indices.map(j => (r.getDouble(2 * j), r.getDouble(2 * j + 1)))
+          val z = graft.operators.ZOrderLayout.codeColumn(cluster.map(col), bounds)
+          d.withColumn("__zcode", z)
+            .repartitionByRange((hit.length * targetFiles).max(1),
+              col(PartCol), col("__zcode"))
+            .sortWithinPartitions(col(PartCol), col("__zcode"))
+            .drop("__zcode") // projection preserves the in-partition order
+        } else if (hourly) {
+          // the append path's hour slotting replayed by maintenance: one
+          // range slot per distinct (day, hour) in the selected days
+          // (times targetFiles for finer slices). At targetFiles=1 the
+          // range key deliberately OMITS ts: equal (day, hour) keys cannot
+          // split across range partitions, so no rewritten file ever
+          // straddles an hour even when per-hour row counts are skewed
+          // (a sampled (day, hour, ts) boundary lands mid-hour under skew,
+          // and a straddling file would re-qualify the day under the
+          // per-bucket pressure test forever); slots can only MERGE into
+          // adjacent-hour files, which stay ts-contiguous. One extra
+          // distinct-count aggregate, paid by hour-slotted tables only.
+          val nSlots = d.agg(TsTable.distinctCount(struct(col(PartCol),
+            date_trunc("hour", col(tsCol))))).head.getLong(0)
+          val slotted =
+            if (targetFiles == 1)
+              d.repartitionByRange(nSlots.toInt.max(1),
+                col(PartCol), date_trunc("hour", col(tsCol)))
+            else
+              d.repartitionByRange((nSlots * targetFiles).toInt.max(1),
+                col(PartCol), date_trunc("hour", col(tsCol)), col(tsCol))
+          slotted.sortWithinPartitions(col(PartCol), col(tsCol))
+        } else if (targetFiles == 1)
+          d.repartition(col(PartCol)).sortWithinPartitions(col(PartCol), col(tsCol))
+        else d.repartitionByRange(
+            (hit.length * targetFiles).max(1), col(PartCol), col(tsCol))
+          .sortWithinPartitions(col(PartCol), col(tsCol))
+      }
+      tableWriter(sorted, "overwrite")
+        .partitionBy(PartCol).save(new Path(tmp, "dated").toString)
     }
     hit
-    } finally clearInflightMarker(fs, marker)
   }
 
   /** Per day, the MAX number of live files whose exact manifest ts spans
@@ -1574,8 +1496,8 @@ final class TsTable private (
       // a file vanishing mid-archive is a rewrite racing retention —
       // classify as the retryable conflict (re-running dropBefore
       // converges: it re-lists and retires whatever is then live)
-      try dataFiles(fs, new Path(root, rel))
-        .foreach(f => archiveFile(fs, s"$rel/${f.getName}"))
+      try dataFiles(fs.listStatus(new Path(root, rel)))
+        .foreach(f => archiveFile(fs, s"$rel/${f.getPath.getName}"))
       catch { case e: java.io.FileNotFoundException =>
         throw new TsTable.ConcurrentRewriteException(
           s"retention: a file in $rel vanished while archiving " +
@@ -1965,14 +1887,13 @@ final class TsTable private (
     (displaced.filter { case (p, l) => planned.get(p).contains(l) }, planV)
   }
 
-  /** [[guardDisplaced]] plus the stat collection for verbs holding only
-    * relative paths: a planned input already MISSING here means another
-    * rewrite took it between discovery and staging — conflict, before
-    * any work. */
+  /** The displaced set `(relpath, length)` of verbs holding only relative
+    * paths: a planned input already MISSING here means another rewrite
+    * took it between discovery and staging — conflict, before any work. */
   private def captureDisplaced(fs: org.apache.hadoop.fs.FileSystem,
                                hitRel: Seq[String], action: String)
-      : (Seq[(String, Long)], Seq[(String, Long)], Option[Long]) = {
-    val displaced = hitRel.map { r =>
+      : Seq[(String, Long)] =
+    hitRel.map { r =>
       val st = try fs.getFileStatus(new Path(path, r))
       catch { case _: java.io.FileNotFoundException =>
         throw new TsTable.ConcurrentRewriteException(
@@ -1981,9 +1902,6 @@ final class TsTable private (
       }
       r -> st.getLen
     }
-    val (guarded, planV) = guardDisplaced(displaced, action)
-    (displaced, guarded, planV)
-  }
 
   /** True when `e`'s causal chain is a missing/unreadable file UNDER THIS
     * TABLE'S ROOT surfacing from a rewrite's staging read — the planned
@@ -2075,130 +1993,149 @@ final class TsTable private (
           "snapshot (every other displaced file was restored)")
   }
 
-  /** Copy-on-write staging + swap + commit, shared by the predicate verbs
-    * ([[cowRewrite]]) and [[mergeInto]]: apply `xform` to ONLY the hit
-    * files' rows, union in `inserts` (already carrying `p_date`; merge's
-    * NOT-MATCHED rows), stage into an invisible temp, archive the hit
-    * originals (pinned readers keep resolving), move the staged files in,
-    * commit `action`. `insertDays` sizes the range-split when
-    * `filesPerDay > 1` (an upper bound on the insert-side day count).
+  /** Copy-on-write staging for the predicate verbs ([[cowRewrite]]),
+    * [[mergeInto]], [[backfill]] and [[migrateFieldIds]]: apply `xform` to
+    * ONLY the hit files' rows, union in `inserts` (already carrying
+    * `p_date`; merge's NOT-MATCHED rows), and stage the result through
+    * [[stageAndSwap]], which archives the hit originals, moves the staged
+    * files in and commits `action`. `insertDays` sizes the range-split
+    * when `filesPerDay > 1` (an upper bound on the insert-side day count).
+    * With `enforceAfterRewrite`, the table's CHECK constraints are judged
+    * on the staged output before anything live moves. */
+  private def cowExec(hitRel: Seq[String], action: String, filesPerDay: Int,
+                      inserts: Option[DataFrame], insertDays: Int,
+                      enforceAfterRewrite: Boolean = false,
+                      meta: Map[String, String] = Map.empty)(
+      xform: DataFrame => DataFrame): Unit = {
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val displaced = captureDisplaced(fs, hitRel, action)
+    val (dated, loose) = hitRel.partition(_.contains("/"))
+    stageAndSwap(displaced, action, "_delete_tmp_", meta) { tmp =>
+      // one job per layout family
+      if (dated.nonEmpty || inserts.nonEmpty) {
+        val nDays =
+          dated.map(_.split("/").init.mkString("/")).distinct.length + insertDays
+        val parts = Seq.newBuilder[DataFrame]
+        if (dated.nonEmpty)
+          // synthetic-manifest snapshot read over EXACTLY the planned inputs
+          // (the changesBetween pattern): explicit file statuses, so the
+          // staging job can never be silently narrowed by a lazy listing
+          // that skips a just-displaced path — a vanished input surfaces
+          // loudly (resolution or open) and classifies as the conflict
+          parts += xform(new TsSnapshot(spark, path, tsCol,
+            TsManifest(-1L, "staging", tsCol, storedSchema,
+              displaced.filter(_._1.contains("/")))).raw)
+        inserts.foreach(parts += _)
+        val df = withFieldIds(parts.result().reduce(_.unionByName(_)))
+        val placed =
+          if (filesPerDay == 1) df.repartition(col(PartCol))
+          else df.repartitionByRange((nDays * filesPerDay).max(1),
+            col(PartCol), col(tsCol))
+        tableWriter(placed.sortWithinPartitions(col(PartCol), col(tsCol)),
+          "overwrite").partitionBy(PartCol).save(new Path(tmp, "dated").toString)
+      }
+      if (loose.nonEmpty) { // attached plain/hybrid layouts: root-level files
+        // same synthetic-manifest read; raw already carries the null p_date
+        // the predicate may name (the live-read semantic for loose files)
+        val looseDf = withFieldIds(xform(new TsSnapshot(spark, path, tsCol,
+            TsManifest(-1L, "staging", tsCol, storedSchema,
+              displaced.filterNot(_._1.contains("/")))).raw)
+          .drop(PartCol))
+          .repartitionByRange(loose.length.max(1), col(tsCol))
+          .sortWithinPartitions(col(tsCol))
+        tableWriter(looseDf, "overwrite").save(new Path(tmp, "loose").toString)
+      }
+      // constraint gate on the STAGED output (update/merge can modify
+      // rows into violation; delete can't and skips this): validating the
+      // already-written staging files costs one cheap re-read, never a
+      // recompute of the rewrite, and a violation aborts BEFORE anything
+      // archives — the live table is untouched.
+      if (enforceAfterRewrite && tableChecks.nonEmpty) {
+        val parts = Seq.newBuilder[DataFrame]
+        val datedStage = new Path(tmp, "dated")
+        if (fs.exists(datedStage))
+          parts += spark.read.option("basePath", datedStage.toString)
+            .schema(withPartCol(storedSchema)).parquet(datedStage.toString)
+            .drop(PartCol)
+        val looseStage = new Path(tmp, "loose")
+        if (fs.exists(looseStage))
+          parts += spark.read.schema(storedSchema).parquet(looseStage.toString)
+        parts.result().reduceOption(_.unionByName(_)).foreach { staged =>
+          try enforceChecks(staged, action)
+          catch { case e: Throwable => fs.delete(tmp, true); throw e }
+        }
+      }
+    }
+  }
+
+  /** The copy-on-write swap every rewrite verb commits through
+    * ([[cowExec]]'s verbs and [[compactDays]]): `stage` writes the
+    * replacement files under `<tmp>/dated` (day directories) and
+    * `<tmp>/loose` (root-level files); this method owns everything else,
+    * in this order:
+    *   1. [[guardDisplaced]] against the committed manifest;
+    *   2. a writer-unique `<stagingPrefix><uuid>` staging dir, and the
+    *      in-flight marker BEFORE anything stages — from here until the
+    *      commit lands (or the rollback completes), expireSnapshots must
+    *      not reclaim the displaced files' archived bytes and
+    *      vacuumStaging must not reclaim this staging dir;
+    *   3. `stage`, whose missing-table-file failures classify as the
+    *      retryable conflict ([[stagingSwapRace]]; staging dropped, live
+    *      table untouched);
+    *   4. the pre-swap gate ([[requireDisplacedLive]]);
+    *   5. archive EXACTLY the displaced inputs (never a fresh listing — a
+    *      concurrent append's new file must stay live), then move the
+    *      staged files in and delete the staging dir;
+    *   6. [[commitVersion]]'s action-aware gate; on conflict the swap rolls
+    *      back ([[rollbackSwap]] — replacements ARCHIVED so any manifest
+    *      that captured them stays resolvable, inputs re-lived) and a
+    *      healing checkpoint re-lists the live truth, so a losing verb
+    *      leaves the table equal to the winner's state and its retry
+    *      re-plans cleanly.
+    * [[TsTable.rewriteRaceHook]] fires at "staged" (after 3), "archiving"
+    * (after 4) and "swapped" (after 5).
     *
-    * Concurrency: the displaced inputs are conflict-guarded end to end —
-    * captured with lengths at entry and refused if the committed manifest
-    * doesn't list them ([[captureDisplaced]]/[[guardDisplaced]]: an
-    * unmanifested dated file is another rewrite's in-flight transient or
-    * a crash orphan), re-checked live after staging
-    * ([[requireDisplacedLive]]), and judged inside the commit CAS by
-    * [[commitVersion]]'s action-aware gate (interleaved file-additive
-    * commits pass; an interleaved rewrite-family commit triggers the
-    * membership test). A commit-time conflict rolls the swap back
-    * ([[rollbackSwap]] — replacements ARCHIVED so any manifest that
-    * captured them stays resolvable, inputs re-lived) before rethrowing,
-    * so a losing verb leaves the table equal to the winner's state.
     * Residual honesty: a listing-based manifest committed in the
     * swap→commit window still captures this verb's transient replacement
     * files (that version transiently serves the verb's uncommitted
     * effects until the next commit re-lists); the gates turn what was
     * silent row resurrection/loss into loud retryable aborts — full
     * serializability would need log-as-truth manifests. */
-  private def cowExec(hitRel: Seq[String], action: String, filesPerDay: Int,
-                      inserts: Option[DataFrame], insertDays: Int,
-                      enforceAfterRewrite: Boolean = false,
-                      meta: Map[String, String] = Map.empty)(
-      xform: DataFrame => DataFrame): Unit = {
+  private def stageAndSwap(displaced: Seq[(String, Long)], action: String,
+                           stagingPrefix: String,
+                           meta: Map[String, String] = Map.empty)(
+      stage: Path => Unit): Unit = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (displaced, guarded, planV) = captureDisplaced(fs, hitRel, action)
+    val (guarded, planV) = guardDisplaced(displaced, action)
     // same µs-instant encoding rationale as appendValidated
     spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    val (dated, loose) = hitRel.partition(_.contains("/"))
     // WRITER-UNIQUE staging (raced in RewriteConflictStressSpec): a shared
     // name let one racer delete another's in-flight staging out from under
     // its write job. A crashed run's temp is reclaimed by vacuumStaging.
     val tmp = new Path(root,
-      s"_delete_tmp_${java.util.UUID.randomUUID().toString}")
-    // In-flight marker BEFORE anything stages: from here until the commit
-    // lands (or the rollback completes), expireSnapshots must not reclaim
-    // the displaced files' archived bytes and vacuumStaging must not
-    // reclaim this staging dir — the conflict rollback depends on both.
+      s"$stagingPrefix${java.util.UUID.randomUUID().toString}")
     val marker = writeInflightMarker(fs, tmp.getName, displaced.map(_._1))
     try {
-    // 2. rewrite of the hit files only (+ merge inserts), one job per
-    //    layout family. The staging read touches ONLY the planned inputs,
-    //    so a missing table file here (plan-time PATH_NOT_FOUND or
-    //    task-time FAILED_READ) means a concurrent rewrite took them —
-    //    classified as the retryable conflict, staging dropped, live
-    //    table untouched.
-    try {
-    if (dated.nonEmpty || inserts.nonEmpty) {
-      val nDays =
-        dated.map(_.split("/").init.mkString("/")).distinct.length + insertDays
-      val parts = Seq.newBuilder[DataFrame]
-      if (dated.nonEmpty)
-        // synthetic-manifest snapshot read over EXACTLY the planned inputs
-        // (the changesBetween pattern): explicit file statuses, so the
-        // staging job can never be silently narrowed by a lazy listing
-        // that skips a just-displaced path — a vanished input surfaces
-        // loudly (resolution or open) and classifies as the conflict
-        parts += xform(new TsSnapshot(spark, path, tsCol,
-          TsManifest(-1L, "staging", tsCol, storedSchema,
-            displaced.filter(_._1.contains("/")))).raw)
-      inserts.foreach(parts += _)
-      val df = withFieldIds(parts.result().reduce(_.unionByName(_)))
-      val placed =
-        if (filesPerDay == 1) df.repartition(col(PartCol))
-        else df.repartitionByRange((nDays * filesPerDay).max(1),
-          col(PartCol), col(tsCol))
-      tableWriter(placed.sortWithinPartitions(col(PartCol), col(tsCol)),
-        "overwrite").partitionBy(PartCol).save(new Path(tmp, "dated").toString)
-    }
-    if (loose.nonEmpty) { // attached plain/hybrid layouts: root-level files
-      // same synthetic-manifest read; raw already carries the null p_date
-      // the predicate may name (the live-read semantic for loose files)
-      val looseDf = withFieldIds(xform(new TsSnapshot(spark, path, tsCol,
-          TsManifest(-1L, "staging", tsCol, storedSchema,
-            displaced.filterNot(_._1.contains("/")))).raw)
-        .drop(PartCol))
-        .repartitionByRange(loose.length.max(1), col(tsCol))
-        .sortWithinPartitions(col(tsCol))
-      tableWriter(looseDf, "overwrite").save(new Path(tmp, "loose").toString)
-    }
-    } catch { case e: Throwable if stagingSwapRace(e, displaced) =>
+    // the staging read touches ONLY the planned inputs, so a missing
+    // table file here (plan-time PATH_NOT_FOUND or task-time FAILED_READ)
+    // means a concurrent rewrite took them
+    try stage(tmp)
+    catch { case e: Throwable if stagingSwapRace(e, displaced) =>
       fs.delete(tmp, true)
       throw new TsTable.ConcurrentRewriteException(
         s"$action: a planned input vanished during the staging rewrite " +
           "(concurrent rewrite); staged output dropped, live table " +
           "untouched — retry the verb on a fresh handle", e)
     }
-    // 2½. constraint gate on the STAGED output (update/merge can modify
-    // rows into violation; delete can't and skips this): validating the
-    // already-written staging files costs one cheap re-read, never a
-    // recompute of the rewrite, and a violation aborts BEFORE anything
-    // archives — the live table is untouched.
-    if (enforceAfterRewrite && tableChecks.nonEmpty) {
-      val parts = Seq.newBuilder[DataFrame]
-      val datedStage = new Path(tmp, "dated")
-      if (fs.exists(datedStage))
-        parts += spark.read.option("basePath", datedStage.toString)
-          .schema(withPartCol(storedSchema)).parquet(datedStage.toString)
-          .drop(PartCol)
-      val looseStage = new Path(tmp, "loose")
-      if (fs.exists(looseStage))
-        parts += spark.read.schema(storedSchema).parquet(looseStage.toString)
-      parts.result().reduceOption(_.unionByName(_)).foreach { staged =>
-        try enforceChecks(staged, action)
-        catch { case e: Throwable => fs.delete(tmp, true); throw e }
-      }
-    }
     TsTable.rewriteRaceHook("staged", action)
     requireDisplacedLive(fs, displaced, action, staged = tmp)
     TsTable.rewriteRaceHook("archiving", action)
-    // 3. swap: archive the hit originals, move the rewritten files in
-    // (recording each move for the commit-conflict rollback). A file
-    // vanishing mid-archive is a rewrite that won the sub-gate window:
-    // re-live ONLY what this verb itself archived (the vanished file was
-    // archived by the winner — re-living it would resurrect rows the
-    // winner rewrote away into its manifest), drop the staging, conflict.
+    // A file vanishing mid-archive is a rewrite that won the sub-gate
+    // window: re-live ONLY what this verb itself archived (the vanished
+    // file was archived by the winner — re-living it would resurrect rows
+    // the winner rewrote away into its manifest), drop the staging,
+    // conflict.
     val archivedHere = Seq.newBuilder[(String, Long)]
     try displaced.foreach { case d @ (rel, _) =>
       archiveFile(fs, rel); archivedHere += d
@@ -2217,7 +2154,8 @@ final class TsTable private (
       fs.listStatus(datedTmp).filter(_.isDirectory).foreach { d =>
         val liveDir = new Path(root, d.getPath.getName)
         fs.mkdirs(liveDir)
-        dataFiles(fs, d.getPath).foreach { f =>
+        dataFiles(fs.listStatus(d.getPath)).foreach { st =>
+          val f = st.getPath
           fs.rename(f, new Path(liveDir, f.getName))
           movedIn += s"${d.getPath.getName}/${f.getName}"
         }
@@ -2225,7 +2163,8 @@ final class TsTable private (
     }
     val looseTmp = new Path(tmp, "loose")
     if (fs.exists(looseTmp))
-      dataFiles(fs, looseTmp).foreach { f =>
+      dataFiles(fs.listStatus(looseTmp)).foreach { st =>
+        val f = st.getPath
         fs.rename(f, new Path(root, f.getName))
         movedIn += f.getName
       }
@@ -2619,32 +2558,15 @@ final class TsTable private (
           s"rewrite); re-run restore($version) to converge on the target " +
           "state, or inspect the racing writer's version first")
     }
-    // 2. copy displaced target files back from the archive — executor-side
-    // and parallel (see scaladoc cost model): the displaced list after a
-    // big compaction can approach the whole table, and FileUtil.copy on
-    // the driver would stream every byte through one JVM sequentially.
-    // One task per file; overwrite=true makes a retried task idempotent.
+    // 2. copy displaced target files back from the archive, one task per
+    // file (see scaladoc cost model): the displaced list after a big
+    // compaction can approach the whole table.
     val displaced = resolved.filterNot(_._4).map { case (_, archived, _, _) =>
       val rel = archived.toString.stripPrefix(
         new Path(root, TsTable.ArchiveDir).toString).stripPrefix("/")
       (archived.toString, new Path(path, rel).toString)
     }
-    if (displaced.nonEmpty) {
-      val conf = new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration)
-      val slices = math.min(displaced.length,
-        spark.sparkContext.defaultParallelism).max(1)
-      spark.sparkContext.parallelize(displaced, slices)
-        .foreach { case (src, dst) =>
-          val sp = new Path(src)
-          val dp = new Path(dst)
-          val dstFs = dp.getFileSystem(conf.value)
-          dstFs.mkdirs(dp.getParent)
-          org.apache.hadoop.fs.FileUtil.copy(sp.getFileSystem(conf.value), sp,
-            dstFs, dp, false /* keep the archived source */,
-            true /* overwrite: task retries re-copy */, conf.value)
-        }
-    }
+    TsTable.copyFiles(spark, displaced)
     // 3. the version's own schema becomes the stored descriptor again
     // (reopen via TsTable.open for a handle carrying it; this handle keeps
     // serving its constructed projection, the appendEvolved rule).
@@ -2747,21 +2669,7 @@ final class TsTable private (
         else s.stripPrefix(livePrefix)
       (s, new Path(destPath, rel).toString)
     }
-    if (pairs.nonEmpty) {
-      val conf = new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration)
-      val slices = math.min(pairs.length,
-        spark.sparkContext.defaultParallelism).max(1)
-      spark.sparkContext.parallelize(pairs, slices).foreach { case (src, dst) =>
-        val sp = new Path(src)
-        val dp = new Path(dst)
-        val dstFs = dp.getFileSystem(conf.value)
-        dstFs.mkdirs(dp.getParent)
-        org.apache.hadoop.fs.FileUtil.copy(sp.getFileSystem(conf.value), sp,
-          dstFs, dp, false, true /* overwrite: task retries re-copy */,
-          conf.value)
-      }
-    }
+    TsTable.copyFiles(spark, pairs)
     // a clone of a pre-drop version legitimately carries the column (the
     // restore rule); tombstones only follow for names still absent
     val cloneDropped = droppedCols.filterNot(d =>
@@ -2823,7 +2731,7 @@ final class TsTable private (
       // Two-phase delete closes the marker-scan race (r20 advice): FIRST
       // list every delete candidate, THEN re-read the in-flight markers,
       // then delete. A rewrite installs its marker BEFORE it archives
-      // anything (the cowExec rule), so a file archived after the
+      // anything ([[stageAndSwap]]), so a file archived after the
       // candidate listing was never a candidate this pass, and a
       // candidate whose marker landed after the first scan is caught by
       // the re-read — the orderings compose to leave no window in which a
@@ -3164,19 +3072,12 @@ final class TsTable private (
   private def listLiveFiles(
       fs: org.apache.hadoop.fs.FileSystem): Seq[(String, Long)] = {
     val root = new Path(path)
-    val rootFiles = fs.listStatus(root).iterator
-      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith("."))
-      .map(st => (st.getPath.getName, st.getLen))
-      .toSeq
-    rootFiles ++ partitionDates.sorted.flatMap { d =>
-      val dir = new Path(root, s"$PartCol=$d")
-      fs.listStatus(dir).iterator
-        .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-          !st.getPath.getName.startsWith("."))
-        .map(st => (s"$PartCol=$d/${st.getPath.getName}", st.getLen))
-        .toSeq
-    }
+    val top = fs.listStatus(root)
+    dataFiles(top).map(st => (st.getPath.getName, st.getLen)) ++
+      datesIn(top).sorted.flatMap { d =>
+        dataFiles(fs.listStatus(new Path(root, s"$PartCol=$d")))
+          .map(st => (s"$PartCol=$d/${st.getPath.getName}", st.getLen))
+      }
   }
 
   /** Footer facts, one footer open per file: the ts and stats-column
@@ -3210,17 +3111,7 @@ final class TsTable private (
       (r, if (wantSpans) ts0 else None, cs,
         if (bl.nonEmpty && bl.size == keys.size) bl else Map.empty[String, Array[Byte]])
     }
-    val all = if (relPaths.length <= 16) {
-        val conf = spark.sparkContext.hadoopConfiguration
-        relPaths.map(harvest(conf, _))
-      } else {
-        val conf = new org.apache.spark.util.SerializableConfiguration(
-          spark.sparkContext.hadoopConfiguration)
-        val slices = math.min(relPaths.length,
-          spark.sparkContext.defaultParallelism).max(1)
-        spark.sparkContext.parallelize(relPaths, slices)
-          .map(f => harvest(conf.value, f)).collect().toSeq
-      }
+    val all = TsTable.perFile(spark, relPaths)(harvest)
     (all.collect { case (r, Some(s0), _, _) => r -> s0 }.toMap,
       all.collect { case (r, Some(_), cs, _) if cs.nonEmpty => r -> cs }.toMap,
       all.collect { case (r, _, _, bl) if bl.nonEmpty => r -> bl }.toMap)
@@ -3300,26 +3191,20 @@ final class TsTable private (
       .collectFirst { case h if h.contains(key) => h(key) }
   }
 
-  /** The current manifest's per-file ts spans (relative path → closed µs
-    * span) — the V2 scan's file-skip index. Empty when no version exists
-    * or the manifest predates span stats. */
-  private[graft] def currentFileTsSpans: Map[String, (Long, Long)] =
-    currentManifest.map(_._2.stats).getOrElse(Map.empty)
-
-  /** The current manifest's per-file stats-column spans (relative path →
-    * column → closed span) — the generic data-skipping index over
-    * `writeOptions.statsCols`. */
-  private[graft] def currentFileColSpans: Map[String, Map[String, ColSpan]] =
-    currentManifest.map(_._2.colStats).getOrElse(Map.empty)
-
-  /** The current version's bloom sidecar (relative path → column →
-    * serialized filter bytes) — the V2 scan's equality-skip index over
-    * `writeOptions.bloomCols`. Empty when no sidecar exists. */
-  private[graft] def currentFileBlooms: Map[String, Map[String, Array[Byte]]] =
-    currentVersion.map { v =>
+  /** The V2 scan's file-skip indexes, all from ONE resolved version (so
+    * a commit landing mid-read cannot pair one version's spans with
+    * another's Bloom bits): the manifest's per-file ts spans (relative
+    * path → closed µs span), its per-file spans of `writeOptions.statsCols`
+    * (relative path → column → closed span), and that version's Bloom
+    * sidecar over `writeOptions.bloomCols` (relative path → column →
+    * serialized filter bytes). All empty when no version exists; spans
+    * are empty on manifests that predate span stats. */
+  private[graft] def currentFileIndexes: (Map[String, (Long, Long)],
+      Map[String, Map[String, ColSpan]], Map[String, Map[String, Array[Byte]]]) =
+    currentManifest.map { case (v, m) =>
       val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      TsTable.readBloomSidecar(fs, path, v)
-    }.getOrElse(TsTable.NoBlooms)
+      (m.stats, m.colStats, TsTable.readBloomSidecar(fs, path, v))
+    }.getOrElse((Map.empty, Map.empty, TsTable.NoBlooms))
 
   /** Manifest-stats fast path for [[minDt]]/[[maxDt]]: when the current
     * manifest's file set matches the live listing exactly (path + size)
@@ -4252,6 +4137,44 @@ object TsTable {
   private[ts] def footerTsSpan(conf: org.apache.hadoop.conf.Configuration,
                                file: Path, tsCol: String): Option[(Long, Long)] =
     footerSpans(conf, file, tsCol, Seq.empty)._1
+
+  /** `f` over each item with the Hadoop conf, one Spark task per item
+    * (at most `defaultParallelism` slices), results in input order — for
+    * per-file work that must run at cluster bandwidth, never streamed
+    * through the driver JVM. */
+  private[ts] def onExecutors[A: ClassTag, B: ClassTag](spark: SparkSession,
+      items: Seq[A])(f: (org.apache.hadoop.conf.Configuration, A) => B): Seq[B] = {
+    val conf = new org.apache.spark.util.SerializableConfiguration(
+      spark.sparkContext.hadoopConfiguration)
+    val slices = math.min(items.length,
+      spark.sparkContext.defaultParallelism).max(1)
+    spark.sparkContext.parallelize(items, slices)
+      .map(a => f(conf.value, a)).collect().toSeq
+  }
+
+  /** [[onExecutors]] for footer-sized per-file work: on the driver for a
+    * handful of files, where a job would cost more than the work. */
+  private[ts] def perFile[A: ClassTag, B: ClassTag](spark: SparkSession,
+      items: Seq[A])(f: (org.apache.hadoop.conf.Configuration, A) => B): Seq[B] =
+    if (items.length <= 16) {
+      val conf = spark.sparkContext.hadoopConfiguration
+      items.map(f(conf, _))
+    } else onExecutors(spark, items)(f)
+
+  /** Copy each `(src, dst)` file (qualified path strings), one task per
+    * file: a large restore or clone moves bytes at cluster write
+    * bandwidth, never through the driver JVM. The source is kept, and
+    * overwrite makes a retried task idempotent. */
+  private[ts] def copyFiles(spark: SparkSession,
+                            pairs: Seq[(String, String)]): Unit =
+    if (pairs.nonEmpty) onExecutors(spark, pairs) { case (conf, (src, dst)) =>
+      val sp = new Path(src)
+      val dp = new Path(dst)
+      val dstFs = dp.getFileSystem(conf)
+      dstFs.mkdirs(dp.getParent)
+      org.apache.hadoop.fs.FileUtil.copy(sp.getFileSystem(conf), sp,
+        dstFs, dp, false, true, conf)
+    }
 
   /** Whether EVERY top-level field in one parquet file's footer schema
     * carries a field id — the rename-safety predicate (id-resolved reads

@@ -190,7 +190,6 @@ object PlanBridge {
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val rel = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
       index, partitionSchema, dataSchema, None, format, Map.empty)(classic)
-    Dataset.ofRows(classic,
-      org.apache.spark.sql.execution.datasources.LogicalRelation(rel))
+    ofRows(spark, org.apache.spark.sql.execution.datasources.LogicalRelation(rel))
   }
 }

@@ -195,9 +195,8 @@ case class GraftMergeCommand(path: String, tsCol: String,
   extends LeafRunnableCommand {
 
   override def run(spark: SparkSession): Seq[Row] = {
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val t = TsTable.open(spark, path, tsCol)
-    val srcAll = org.apache.spark.sql.classic.Dataset.ofRows(classic, source)
+    val srcAll = PlanBridge.ofRows(spark, source)
     // project to the columns the merge touches — a richer source (extra
     // join columns, aliases) must not fail mergeInto's source ⊆ table
     // rule. Star update (None) takes every table∩source column;

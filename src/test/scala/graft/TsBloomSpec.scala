@@ -132,7 +132,7 @@ class TsBloomSpec extends SparkSpec {
       ix.currentVersion.get)
     assert(side.size == 3 && side.values.forall(_.contains("user_id")))
     // the declared VALUE spans backfilled into the manifest colStats too
-    val colSpans = ix.currentFileColSpans
+    val (_, colSpans, _) = ix.currentFileIndexes
     assert(colSpans.nonEmpty && colSpans.values.forall(_.contains("value")))
     // a probe for an absent value still fast-paths to zero candidates
     assert(ix.bloomCandidateFiles("user_id", Seq(999999L)).get.isEmpty)

@@ -1,7 +1,7 @@
 package graft.ts
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Semantic conflict detection between concurrent REWRITE verbs (the
@@ -9,11 +9,13 @@ import org.apache.spark.sql.functions._
   * files must produce one winner and one LOUD retryable conflict — never
   * a silently-committed manifest that resurrects the winner's deleted
   * rows or buries its rewrite. Interleavings are driven deterministically
-  * through `TsTable.rewriteRaceHook` (the two windows: "staged" = staging
-  * done, nothing live touched; "swapped" = live swap done, commit
-  * pending), so every case asserts the exact gate that must fire:
-  * pre-swap liveness, or the commit-CAS manifest-membership gate plus
-  * physical rollback. A concurrent APPEND is the negative control — no
+  * through `TsTable.rewriteRaceHook` (the windows: "staged" = staging
+  * done, nothing live touched; "archiving" = pre-swap gate passed, nothing
+  * archived yet; "swapped" = live swap done, commit pending), so every
+  * case asserts the exact gate that must fire: pre-swap liveness, the
+  * mid-archive rollback, or the commit-CAS manifest-membership gate plus
+  * physical rollback. Delete and compaction share one swap protocol; the
+  * archiving and swapped cases run each as the loser. A concurrent APPEND is the negative control — no
   * conflict, and its file must survive the compact swap untouched. */
 class RewriteConflictSpec extends graft.SparkSpec {
 
@@ -51,6 +53,22 @@ class RewriteConflictSpec extends graft.SparkSpec {
 
   private def fs(dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The losing rewrite of a conflict case, run as `action`: "delete"
+    * removes the rows matching `pred` (and must remove some), "compact"
+    * packs freshTable's one day into one file. Returns the rows removed. */
+  private def rewrite(action: String, t: TsTable, pred: Column): Long =
+    action match {
+      case "delete" =>
+        val n = t.deleteWhere(pred); assert(n > 0, "delete removed no rows"); n
+      case "compact" =>
+        assert(t.compactAll(1) == Seq("2024-01-01")); 0L
+    }
+
+  /** A conflict case's name for the loser `action`: the delete variant
+    * keeps the case's original name. */
+  private def named(name: String, action: String): String =
+    if (action == "delete") name else s"$name [loser: $action]"
 
   test("pre-swap gate: deleteWhere staged, concurrent compact wins — loud " +
       "retryable conflict, staging dropped, table equals the winner alone, " +
@@ -323,9 +341,10 @@ class RewriteConflictSpec extends graft.SparkSpec {
     assert(TsTable.readManifest(spark, dir, v).action == "gate-pass")
   }
 
-  test("mid-archive conflict rolls back ONLY what this verb archived: the " +
+  Seq("delete", "compact").foreach { action =>
+  test(named("mid-archive conflict rolls back ONLY what this verb archived: the " +
       "file a concurrent winner took stays the winner's — no resurrected " +
-      "rows, no duplicates — and the retry serializes both deletes") {
+      "rows, no duplicates — and the retry serializes both deletes", action)) {
     val (dir, t) = freshTable()
     val total = t.toDF.count()
     val tB = TsTable.open(spark, dir)
@@ -340,9 +359,9 @@ class RewriteConflictSpec extends graft.SparkSpec {
     val predB = col("ts") >= lit("2024-01-01 06:00:00").cast("timestamp") &&
       col("v") % 5 === 0
     var bDeleted = -1L
-    withHook("archiving", "delete") { bDeleted = tB.deleteWhere(predB) } {
+    withHook("archiving", action) { bDeleted = tB.deleteWhere(predB) } {
       val e = intercept[TsTable.ConcurrentRewriteException] {
-        t.deleteWhere(predA)
+        rewrite(action, t, predA)
       }
       assert(e.getMessage.contains("vanished while archiving"), e.getMessage)
     }
@@ -355,9 +374,9 @@ class RewriteConflictSpec extends graft.SparkSpec {
       "loser must restore exactly its own archives — nothing of the winner's")
     assert(afterConflict.toDF.where(predB).count() == 0,
       "the winner's deletions must stay deleted through the loser's rollback")
-    val aDeleted = afterConflict.deleteWhere(predA)
-    assert(aDeleted > 0)
+    val aDeleted = rewrite(action, afterConflict, predA)
     assert(TsTable.open(spark, dir).toDF.count() == total - bDeleted - aDeleted)
+  }
   }
 
   test("snapshot GC inside the rollback window: expireSnapshots(keepLast=1) " +
@@ -419,16 +438,17 @@ class RewriteConflictSpec extends graft.SparkSpec {
     assert(TsTable.open(spark, dir).toDF.count() < total)
   }
 
-  test("additive exemption demands a GAPLESS interleaved walk: a manifest " +
+  Seq("delete", "compact").foreach { action =>
+  test(named("additive exemption demands a GAPLESS interleaved walk: a manifest " +
       "missing from the window (expiry race) refuses the exemption and the " +
-      "conservative membership gate conflicts — retry converges") {
+      "conservative membership gate conflicts — retry converges", action)) {
     val (dir, t) = freshTable()
     val total = t.toDF.count()
     val tB = TsTable.open(spark, dir)
     val predA = col("ts") < lit("2024-01-01 06:00:00").cast("timestamp") &&
       col("v") % 3 === 0
     var appended = 0L
-    withHook("swapped", "delete") {
+    withHook("swapped", action) {
       // two interleaved appends, then the FIRST one's manifest vanishes
       // (an expireSnapshots racing this rewrite): the walk over the
       // interleaved range now has a hole that could hide a rewrite-family
@@ -440,14 +460,19 @@ class RewriteConflictSpec extends graft.SparkSpec {
       TsTable.open(spark, dir).append(df2)
       fs(dir).delete(new Path(dir, TsTable.manifestName(gapV)), false)
     } {
-      intercept[TsTable.ConcurrentRewriteException] { t.deleteWhere(predA) }
+      val e = intercept[TsTable.ConcurrentRewriteException] {
+        rewrite(action, t, predA)
+      }
+      assert(e.getMessage.contains("concurrent rewrite conflict"), e.getMessage)
     }
     // conservative direction: rollback was clean, both appends' rows and
-    // the loser's input rows all present
+    // the loser's input rows all present; the retry needs the healing
+    // checkpoint (the re-lived inputs are absent from the winner's manifest)
     val afterConflict = TsTable.open(spark, dir)
     assert(afterConflict.toDF.count() == total + appended)
-    val aDeleted = afterConflict.deleteWhere(predA)
-    assert(aDeleted > 0)
+    assert(afterConflict.snapshotVersions.last._2 == "checkpoint")
+    val aDeleted = rewrite(action, afterConflict, predA)
     assert(TsTable.open(spark, dir).toDF.count() == total + appended - aDeleted)
+  }
   }
 }
