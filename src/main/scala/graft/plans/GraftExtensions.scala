@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.execution.ColumnarRule
-import org.apache.spark.sql.graft.{BackwardAsOfStrategy, CmsEstimate, DotProduct, MinHashRow, MinHashSignature, NfcNormalize, SimHash64, SimHashMd5, StableCodegenLiterals, TopKByScore, WinnowFingerprints}
+import org.apache.spark.sql.graft.{BackwardAsOfStrategy, CmsEstimate, DotProduct, MinHashRow, MinHashSignature, NfcNormalize, SimHash64, SimHashMd5, SmallScanSingleTask, StableCodegenLiterals, TopKByScore, WinnowFingerprints}
 
 /** Catalyst extension entry point for the engine's custom operators —
   * deploy with
@@ -34,7 +34,15 @@ import org.apache.spark.sql.graft.{BackwardAsOfStrategy, CmsEstimate, DotProduct
   *     compiled class instead of each Janino-compiling its own. Its scope
   *     is `FilterExec` only: scan partition filters, data filters and
   *     Parquet pushdown keep their literals, so pruning and EXPLAIN text
-  *     are unchanged.
+  *     are unchanged;
+  *   - a query-stage preparation rule
+  *     (org.apache.spark.sql.graft.SmallScanSingleTask, AQE only) that
+  *     turns an `EnsureRequirements` `Exchange SinglePartition` over
+  *     TsTable scans of at most `spark.sql.files.openCostInBytes` bytes
+  *     into a one-task `Coalesce 1`, so a 1-hour `readRange`, a
+  *     `lookupEq` or an as-of read answered by a global aggregate runs
+  *     one Spark job instead of two. Larger reads, user repartitions,
+  *     V2 connector scans and non-table scans keep their exchanges.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -54,6 +62,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectColumnar(_ => new ColumnarRule {
       override def preColumnarTransitions = StableCodegenLiterals
     })
+    ext.injectQueryStagePrepRule(SmallScanSingleTask)
     // SQL UPDATE / MERGE INTO on graft-ts tables → the facade's
     // copy-on-write verbs (GraftDmlRules scaladoc has the contract)
     ext.injectPostHocResolutionRule(session =>

@@ -110,13 +110,8 @@ final class GraftTsSnapshotFileIndex(
   // NOT from the sidecar: a pure range read over a large pinned table
   // must not pay the full per-file/per-column Bloom sidecar in driver
   // memory when the filters carry no equality probe. bloomByPath is only
-  // forced once a declared column is actually probed. A column whose
-  // Bloom membership existed at the pinned version but was later dropped
-  // from the descriptor simply loses its skip (sound — every file kept).
-  private lazy val declaredBloomCols: Seq[String] =
-    scala.util.Try(
-      TsTable.open(snapshot.spark, snapshot.tablePath).writeOptions.bloomCols
-    ).getOrElse(Seq.empty)
+  // forced once a declared column is actually probed.
+  private lazy val declaredBloomCols: Seq[String] = snapshot.declaredBloomCols
 
   /** Same planning-time file skipping as the live index
     * ([[GraftTsStatsFileIndex]]): drop files whose recorded closed ts
@@ -135,10 +130,14 @@ final class GraftTsSnapshotFileIndex(
     // index instance — a plain unfiltered scan, e.g. a change-feed diff
     // arm, must not pay it)
     if (dataFilters.isEmpty) return dirs
-    if (spanByPath.isEmpty && colByPath.isEmpty && declaredBloomCols.isEmpty)
+    // only an equality conjunct can use a Bloom probe: a range read never
+    // pays the descriptor read
+    val bloomCols =
+      if (GraftTsStatsFileIndex.hasEqProbe(dataFilters)) declaredBloomCols else Nil
+    if (spanByPath.isEmpty && colByPath.isEmpty && bloomCols.isEmpty)
       return dirs
     GraftTsStatsFileIndex.skipFiles(dirs, dataFilters, snapshot.tsCol,
-      statCols, declaredBloomCols)(spanByPath.get, colByPath.get,
+      statCols, bloomCols)(spanByPath.get, colByPath.get,
       p => bloomByPath.get(p))
   }
 

@@ -181,6 +181,14 @@ object GraftTsStatsFileIndex {
     (lo, hi)
   }
 
+  /** Whether some top-level conjunct is an equality (`=`, `IN`) — the
+    * only shape [[eqProbeHashes]] derives a Bloom probe from. */
+  private[sources] def hasEqProbe(filters: Seq[Expression]): Boolean =
+    filters.exists {
+      case _: EqualTo | _: In | _: InSet => true
+      case _ => false
+    }
+
   /** Equality probe HASH-SETS on `name` implied by the scan's top-level
     * conjuncts, one entry per `=` / `IN` conjunct (each prunes
     * independently: the row set needs every conjunct true, so a file must

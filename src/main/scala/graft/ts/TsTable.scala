@@ -170,17 +170,21 @@ final class TsTable private (
     val pred = col(column).isin(values: _*)
     bloomCandidatesWithManifest(column, values) match {
       case None => toDF.where(pred)
-      case Some((_, cands)) if cands.isEmpty =>
+      case Some((_, cands, _)) if cands.isEmpty =>
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], storedSchema)
-      case Some((m, cands)) =>
+      case Some((m, cands, sidecar)) =>
         // Build the snapshot from the SAME manifest the candidate pass
         // validated — re-reading currentVersion here would race a
         // concurrent commit: version N's candidate list filtering version
-        // N+1's file set silently drops rows the new commit added.
+        // N+1's file set silently drops rows the new commit added. The
+        // sidecar that pass read, and this handle's declared Bloom
+        // columns, serve the scan's file index, which would otherwise
+        // read both again.
         val keep = cands.toSet
         new TsSnapshot(spark, path, tsCol,
-          m.copy(files = m.files.filter(f => keep(f._1))))
+          m.copy(files = m.files.filter(f => keep(f._1))),
+          knownBlooms = Some((liveBloomCols, sidecar.filter(e => keep(e._1)))))
           .toDF.where(pred)
     }
   }
@@ -196,14 +200,16 @@ final class TsTable private (
 
   /** [[bloomCandidateFiles]] plus the exact manifest the verdict was
     * computed against, so the consumer reads that file set and no other —
-    * one authority check covers both the pruning and the scan. */
+    * one authority check covers both the pruning and the scan — and that
+    * version's Bloom sidecar as read for the verdict. */
   private[graft] def bloomCandidatesWithManifest(column: String,
-      values: Seq[Any]): Option[(TsManifest, Seq[String])] = {
+      values: Seq[Any]): Option[(TsManifest, Seq[String], Map[String, Map[String, Array[Byte]]])] = {
     val (v, m) = currentManifest.getOrElse(return None)
     if (m.schema != storedSchema) return None
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (listLiveFiles(fs).toSet != m.files.toSet) return None
-    val blooms = TsTable.readBloomSidecar(fs, path, v)
+    val sidecar = TsTable.readBloomSidecar(fs, path, v)
+    val blooms = sidecar
       .flatMap { case (p, cols) => cols.get(column).map(p -> _) }
     val spans = m.colStats
       .flatMap { case (p, cs) => cs.get(column).map(p -> _) }
@@ -219,7 +225,7 @@ final class TsTable private (
       case _ => None
     }
     val spanUsable = nums.length == values.length
-    Some(m -> m.files.map(_._1).filter { p =>
+    Some((m, m.files.map(_._1).filter { p =>
       val spanHit = spans.get(p) match {
         // 'e' = harvested-but-unskippable marker: keep the file
         case Some(s0) if spanUsable && s0.typ != 'e' =>
@@ -234,7 +240,7 @@ final class TsTable private (
         case None => true
       }
       spanHit && bloomHit
-    })
+    }, sidecar))
   }
 
   /** Per-day layout observability (the IvfIndex.cellStats analogue): one
@@ -3355,7 +3361,12 @@ final class TsSnapshot private[ts] (
     // the un-cached path would have raced maintenance across its walk just
     // the same — and open-time re-resolution through the archive-resolving
     // format heals displacement either way.
-    dirCache: Option[scala.collection.mutable.Map[String, Map[String, Long]]] = None) {
+    dirCache: Option[scala.collection.mutable.Map[String, Map[String, Long]]] = None,
+    // (declared Bloom columns, the version's Bloom sidecar) when the
+    // caller already read them — lookupEq's candidate pass — so the file
+    // index probes these instead of re-opening the descriptor and
+    // re-reading the sidecar. None: read on first use.
+    knownBlooms: Option[(Seq[String], Map[String, Map[String, Array[Byte]]])] = None) {
 
   import TsTable.{ArchiveDir, PartCol}
 
@@ -3369,12 +3380,24 @@ final class TsSnapshot private[ts] (
   /** The version's Bloom sidecar (relative path → column → filter bytes),
     * tolerant of absence — consumed by the snapshot file index so a
     * pinned needle query skips files exactly like a live one. One small
-    * driver-side read per index instance. */
-  private[graft] def fileBlooms: Map[String, Map[String, Array[Byte]]] = {
-    val fs = new Path(tablePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    TsTable.readBloomSidecar(fs, tablePath, version)
-  }
+    * driver-side read per index instance, none when the caller handed
+    * the sidecar over. */
+  private[graft] def fileBlooms: Map[String, Map[String, Array[Byte]]] =
+    knownBlooms.fold {
+      val fs = new Path(tablePath)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      TsTable.readBloomSidecar(fs, tablePath, version)
+    }(_._2)
+
+  /** The Bloom columns the table declares now, which gate the file
+    * index's equality probes: one descriptor read, none when the caller
+    * handed them over. A column whose Bloom bits existed at this version
+    * but was later dropped from the descriptor simply loses its skip
+    * (sound — every file kept). */
+  private[graft] def declaredBloomCols: Seq[String] =
+    knownBlooms.fold(
+      scala.util.Try(TsTable.open(spark, tablePath).writeOptions.bloomCols)
+        .getOrElse(Seq.empty))(_._1)
 
   /** The version's per-file ts spans (relative path → closed µs span) —
     * consumed by the snapshot file index for planning-time file skipping.

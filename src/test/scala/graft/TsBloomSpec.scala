@@ -324,6 +324,53 @@ class TsBloomSpec extends SparkSpec {
       && q.count() > 0)
   }
 
+  /** Bytes the calling thread reads through Hadoop file systems in `body`
+    * (driver-side planning runs on it; tasks do not). */
+  private def bytesReadHere(body: => Unit): Long = {
+    import scala.jdk.CollectionConverters._
+    def now = org.apache.hadoop.fs.FileSystem.getAllStatistics.asScala
+      .map(_.getThreadStatistics.getBytesRead).sum
+    val before = now
+    body
+    now - before
+  }
+
+  /** (surviving files, bytes read) of a fresh `listFiles` over the V1 scan
+    * of `df`, whose index has forced none of its lazy state yet. */
+  private def listFresh(df: DataFrame): (Int, Long) = {
+    val scan = df.queryExecution.sparkPlan.collectFirst {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }.get
+    var files = 0
+    val bytes = bytesReadHere {
+      files = scan.relation.location
+        .listFiles(scan.partitionFilters, scan.dataFilters).map(_.files.length).sum
+    }
+    (files, bytes)
+  }
+
+  test("a pinned range-only read never opens the descriptor; lookupEq's scan reuses " +
+      "the candidate pass's sidecar") {
+    val (t, _, _) = build("lazy")
+    val pinned = t.openAt(t.currentVersion.get)
+    val range = pinned.readRange(java.sql.Timestamp.valueOf("2024-01-02 00:00:00"),
+      java.sql.Timestamp.valueOf("2024-01-02 00:00:30"))
+    val (rangeFiles, rangeBytes) = listFresh(range)
+    assert(rangeFiles == 1 && rangeBytes == 0,
+      s"range read kept $rangeFiles files and read $rangeBytes bytes while listing")
+    // an equality probe on the same pinned version does read the
+    // descriptor and the sidecar, and bloom-skips to the owning file
+    val (eqFiles, eqBytes) = listFresh(pinned.toDF.where(col("user_id") === 2007L))
+    assert(eqFiles == 1 && eqBytes > 0, s"equality read kept $eqFiles files, read $eqBytes bytes")
+    // lookupEq hands its index the sidecar and Bloom columns it already has
+    val lookup = t.lookupEq("user_id", Seq(2007L))
+    val (lookupFiles, lookupBytes) = listFresh(lookup)
+    assert(lookupFiles == 1 && lookupBytes == 0,
+      s"lookupEq's scan kept $lookupFiles files and read $lookupBytes bytes while listing")
+    assert(lookup.count() == t.toDF.where(col("user_id") === 2007L).count() &&
+      lookup.count() > 0)
+  }
+
   test("create refuses bloomCols outside the schema; lookupEq validates inputs") {
     val (store, _) = freshStore("refuse")
     import spark.implicits._

@@ -41,7 +41,7 @@ object TsBloomSpecAccess {
     * assert lookupEq's prune and scan share one authority check. */
   def candidatesWithManifest(t: TsTable, column: String, values: Seq[Any])
       : Option[(Long, Seq[String], Seq[String])] =
-    t.bloomCandidatesWithManifest(column, values).map { case (m, cands) =>
+    t.bloomCandidatesWithManifest(column, values).map { case (m, cands, _) =>
       (m.version, m.files.map(_._1), cands)
     }
 }
