@@ -1,28 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, sum, xxhash64}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.catalog.graft_ts", "graft.sources.GraftTsCatalog")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // Codegen class cache sized to the workload: the default is a
-      // 100-entry LRU, and this session executes 196 distinct queries ×
-      // several codegen units each, so by the time rep N re-runs a query
-      // its generated classes have been evicted and the measured window
-      // pays a fresh janino compile per stage — the r21-diagnosed reason
-      // whole families ran ~2× slower inside the full sweep than isolated
-      // (q_dedup_contain_clean 3.9 s full vs 2.6 s subset, same session
-      // discipline). Not scale-dependent tuning: any deployment running
-      // this many distinct plans wants the cache to fit them.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus)
     // Warm-up: absorb JVM/codegen/session start-up outside the measured
     // window, then run queries in a FIXED (sorted) order so per-query
     // numbers are comparable round over round. The warm-up is a DEDICATED

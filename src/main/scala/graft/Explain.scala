@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dump `.explain("formatted")` for declared queries to files — the
   * optimization-round evidence trail (`plans/rNN/<query>_{before,after}.txt`).
@@ -19,16 +18,7 @@ object Explain {
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.catalog.graft_ts", "graft.sources.GraftTsCatalog")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // codegen cache sized to the 196-plan workload (see Bench)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus)
     names.foreach { n =>
       val df = SparkEntry.queries(n)(spark, sfDir)
       val txt = df.queryExecution.explainString(

@@ -10,7 +10,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Tabl
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
-import org.apache.spark.sql.execution.datasources.{FileStatusCache, InMemoryFileIndex, PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.PartitioningAwareFileIndex
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{DateType, StructField, StructType, TimestampType}
@@ -237,26 +237,21 @@ final class GraftTsV2Table(spark: SparkSession, val ts: TsTable,
     * DateType through the user-specified schema, so directory values never
     * go through inference. A fresh Table (every `load()`) gets a fresh
     * listing; writes invalidate the shared FileStatusCache via
-    * `refreshByPath` at commit. Live reads go through the span-skipping
-    * index ([[GraftTsStatsFileIndex]]) whenever the current manifest
-    * carries per-file ts spans — sub-day file pruning at planning time;
-    * stale spans are impossible (immutable UUID-named files) and files
-    * without spans are never skipped, so this degrades to the plain
-    * listing, never to wrong results. */
+    * `refreshByPath` at commit. Live reads skip files through the current
+    * manifest's skip index ([[GraftTsStatsFileIndex]]) — sub-day file
+    * pruning at planning time; stale spans are impossible (immutable
+    * UUID-named files) and files without entries are never skipped, so
+    * a table without a manifest degrades to the plain listing, never to
+    * wrong results. */
   private[sources] lazy val fileIndex: PartitioningAwareFileIndex =
     snapshot match {
       case Some(snap) =>
         new GraftTsSnapshotFileIndex(spark, new Path(ts.path), snap)
       case None =>
-        val full = StructType(ts.schema.fields :+
-          StructField(TsTable.PartCol, DateType, nullable = true))
-        val (spans, colSpans, blooms) = ts.currentFileIndexes
-        if (spans.nonEmpty)
-          new GraftTsStatsFileIndex(spark, new Path(ts.path), full, spans,
-            ts.tsCol, colSpans, blooms)
-        else
-          new InMemoryFileIndex(spark, Seq(new Path(ts.path)), Map.empty[String, String],
-            Some(full), FileStatusCache.getOrCreate(spark), None, None)
+        new GraftTsStatsFileIndex(spark, new Path(ts.path),
+          StructType(ts.schema.fields :+
+            StructField(TsTable.PartCol, DateType, nullable = true)),
+          ts.currentSkipIndex)
     }
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {

@@ -65,11 +65,12 @@ final class GraftTsSnapshotFileIndex(
 
   override def partitionSpec(): PartitionSpec = spec
 
-  // skip indexes: manifest spans/colStats and the version's Bloom sidecar,
-  // keyed by the RESOLVED path each file serves from. Resolution strips
-  // the table root (and the archive segment) back to the manifest's
-  // TABLE-RELATIVE key — never the basename: one write task landing in
-  // several day partitions gives every partition the SAME part-file name
+  private val skip = snapshot.skipIndex
+
+  // the skip index is keyed by the manifest's TABLE-RELATIVE path:
+  // resolution strips the table root (and the archive segment) back to
+  // it — never the basename: one write task landing in several day
+  // partitions gives every partition the SAME part-file name
   // (part-00000-<jobUUID>), and basename keying collapsed those files
   // onto one span, making the ts-span skip prune files that DO intersect
   // the query range (silent row loss, caught when the V1 facade unified
@@ -83,63 +84,15 @@ final class GraftTsSnapshotFileIndex(
     else p.getName // foreign layout: fall back, matching at worst nothing
   }
 
-  private def resolveByName[A](byRel: Map[String, A]): Map[Path, A] =
-    statuses.flatMap { case (_, st) =>
-      byRel.get(relOf(st.getPath)).map(st.getPath -> _)
-    }.toMap
-
-  private lazy val spanByPath: Map[Path, (Long, Long)] =
-    resolveByName(snapshot.fileTsSpans)
-
-  private lazy val colByPath: Map[Path, Map[String, graft.ts.ColSpan]] =
-    resolveByName(snapshot.manifestColStats)
-
-  private lazy val statCols: Seq[String] =
-    colByPath.valuesIterator.flatMap(_.keysIterator).toSet.toSeq
-
-  private lazy val bloomByPath
-      : Map[Path, Map[String, org.apache.spark.util.sketch.BloomFilter]] =
-    resolveByName(snapshot.fileBlooms).map { case (p, cols) =>
-      p -> cols.map { case (c, bytes) =>
-        c -> org.apache.spark.util.sketch.BloomFilter.readFrom(
-          new java.io.ByteArrayInputStream(bytes))
-      }
-    }
-
-  // probe-GATING names come from the table descriptor (one tiny read),
-  // NOT from the sidecar: a pure range read over a large pinned table
-  // must not pay the full per-file/per-column Bloom sidecar in driver
-  // memory when the filters carry no equality probe. bloomByPath is only
-  // forced once a declared column is actually probed.
-  private lazy val declaredBloomCols: Seq[String] = snapshot.declaredBloomCols
-
   /** Same planning-time file skipping as the live index
-    * ([[GraftTsStatsFileIndex]]): drop files whose recorded closed ts
-    * span cannot intersect the pushed ts bounds, whose declared-stats
-    * span excludes every probed value, or whose Bloom bits reject every
-    * equality probe; unindexed files always survive. A pinned needle
-    * query (one user's rows as of last month's version) plans the same
-    * file set the live lookup would — time travel keeps the indexes. */
+    * ([[GraftTsStatsFileIndex.SkipIndex]]): a pinned needle query (one
+    * user's rows as of last month's version) plans the same file set the
+    * live lookup would — time travel keeps the indexes. */
   override def listFiles(
       partitionFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
       dataFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : Seq[org.apache.spark.sql.execution.datasources.PartitionDirectory] = {
-    val dirs = super.listFiles(partitionFilters, dataFilters)
-    // no data filters → nothing to skip on; return BEFORE forcing any of
-    // the lazy index state (declaredBloomCols costs a descriptor read per
-    // index instance — a plain unfiltered scan, e.g. a change-feed diff
-    // arm, must not pay it)
-    if (dataFilters.isEmpty) return dirs
-    // only an equality conjunct can use a Bloom probe: a range read never
-    // pays the descriptor read
-    val bloomCols =
-      if (GraftTsStatsFileIndex.hasEqProbe(dataFilters)) declaredBloomCols else Nil
-    if (spanByPath.isEmpty && colByPath.isEmpty && bloomCols.isEmpty)
-      return dirs
-    GraftTsStatsFileIndex.skipFiles(dirs, dataFilters, snapshot.tsCol,
-      statCols, bloomCols)(spanByPath.get, colByPath.get,
-      p => bloomByPath.get(p))
-  }
+      : Seq[org.apache.spark.sql.execution.datasources.PartitionDirectory] =
+    skip.skipFiles(super.listFiles(partitionFilters, dataFilters), dataFilters)(relOf)
 
   override protected def leafFiles: mutable.LinkedHashMap[Path, FileStatus] =
     mutable.LinkedHashMap(statuses.map(s => s._2.getPath -> s._2): _*)

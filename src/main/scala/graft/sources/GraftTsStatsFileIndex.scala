@@ -1,7 +1,5 @@
 package graft.sources
 
-import graft.ts.TsTable
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, LessThan, LessThanOrEqual, Literal, XxHash64}
@@ -11,10 +9,9 @@ import org.apache.spark.util.sketch.BloomFilter
 
 /** The live V2 file index with MANIFEST-LEVEL file skipping: the standard
   * directory-listing index (membership stays listing-driven — the live
-  * read's contract), except that `listFiles` consults the current
-  * manifest's per-file ts spans (footer stats recorded at commit,
-  * [[TsTable]] manifests) and drops files whose closed span cannot
-  * intersect the scan's pushed ts bounds.
+  * read's contract), except that `listFiles` hands the listing to the
+  * current manifest's [[GraftTsStatsFileIndex.SkipIndex]], which drops
+  * files whose recorded spans or Bloom bits prove they cannot match.
   *
   * Why this matters at 100 TB: partition pruning already skips whole DAYS,
   * and parquet row-group stats skip within a file at read time — but every
@@ -36,99 +33,98 @@ final class GraftTsStatsFileIndex(
     spark: SparkSession,
     rootPath: Path,
     userSchema: StructType,
-    spans: Map[String, (Long, Long)],
-    tsCol: String,
-    colSpans: Map[String, Map[String, graft.ts.ColSpan]] = Map.empty,
-    blooms: Map[String, Map[String, Array[Byte]]] = Map.empty)
+    skip: GraftTsStatsFileIndex.SkipIndex)
   extends InMemoryFileIndex(spark, Seq(rootPath), Map.empty[String, String],
     Some(userSchema), FileStatusCache.getOrCreate(spark), None, None) {
 
-  // the listing serves QUALIFIED paths — key the span maps the same way
-  private lazy val qualify: String => String = {
-    val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    rel => fs.makeQualified(new Path(rootPath, rel)).toString
-  }
-
-  private lazy val byPath: Map[String, (Long, Long)] =
-    spans.map { case (rel, span) => qualify(rel) -> span }
-
-  private lazy val colByPath: Map[String, Map[String, graft.ts.ColSpan]] =
-    colSpans.map { case (rel, cs) => qualify(rel) -> cs }
-
-  // every column any file has a recorded span for (statsCols, effectively)
-  private lazy val statCols: Seq[String] =
-    colSpans.valuesIterator.flatMap(_.keysIterator).toSet.toSeq
-
-  // deserialized once per index instance (a fresh Table — every load() —
-  // gets a fresh index); O(#files × bits/8) driver memory while planning
-  private lazy val bloomByPath: Map[String, Map[String, BloomFilter]] =
-    blooms.map { case (rel, cols) =>
-      qualify(rel) -> cols.map { case (c, bytes) =>
-        c -> BloomFilter.readFrom(
-          new java.io.ByteArrayInputStream(bytes))
-      }
-    }
-
-  private lazy val bloomCols: Seq[String] =
-    blooms.valuesIterator.flatMap(_.keysIterator).toSet.toSeq
+  // the listing serves QUALIFIED paths: strip the qualified root back to
+  // the manifest's table-relative key
+  private lazy val rootPrefix: String = rootPath
+    .getFileSystem(spark.sessionState.newHadoopConf())
+    .makeQualified(rootPath).toString + "/"
 
   override def listFiles(partitionFilters: Seq[Expression],
-                         dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val dirs = super.listFiles(partitionFilters, dataFilters)
-    if (byPath.isEmpty && colByPath.isEmpty && bloomByPath.isEmpty) return dirs
-    GraftTsStatsFileIndex.skipFiles(dirs, dataFilters, tsCol, statCols,
-      bloomCols)(p => byPath.get(p.toString), p => colByPath.get(p.toString),
-      p => bloomByPath.get(p.toString))
-  }
+                         dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+    skip.skipFiles(super.listFiles(partitionFilters, dataFilters), dataFilters)(
+      p => p.toString.stripPrefix(rootPrefix))
 }
 
 object GraftTsStatsFileIndex {
 
-  /** The per-file keep rule of both V2 file indexes (live and snapshot):
-    * drop a file whose recorded closed ts span misses the pushed ts
-    * bounds, whose declared-stats span excludes every value a conjunct on
-    * that column allows, or whose Bloom bits reject every hash of some
-    * equality conjunct. A file with no entry in an index is kept by that
-    * index, and so is a stats span marked `'e'` (harvested, unskippable).
-    * `statCols`/`bloomCols` name the columns worth deriving bounds and
-    * probes for; the lookups are called only for a bound or probe that
-    * applies, so a lazily-built index is never forced without one.
-    * Returns `dirs` itself when the filters imply no bound and no probe. */
-  private[sources] def skipFiles(dirs: Seq[PartitionDirectory],
-      dataFilters: Seq[Expression], tsCol: String, statCols: Seq[String],
-      bloomCols: Seq[String])(
-      span: Path => Option[(Long, Long)],
-      colSpans: Path => Option[Map[String, graft.ts.ColSpan]],
-      blooms: Path => Option[Map[String, BloomFilter]])
-      : Seq[PartitionDirectory] = {
-    val (lo, hi) = tsBounds(dataFilters, tsCol)
-    // bounds per stats column, from the same pushed conjuncts
-    val colBounds = statCols.flatMap { c =>
-      val b = numBounds(dataFilters, c)
-      if (b._1.isEmpty && b._2.isEmpty) None else Some((c, b._1, b._2))
-    }
-    // per-conjunct equality probe hashes on bloom-indexed columns — a file
-    // must might-contain at least one hash of EVERY equality conjunct
-    val bloomProbes = bloomCols.flatMap { c =>
-      eqProbeHashes(dataFilters, c).map(c -> _)
-    }
-    if (lo.isEmpty && hi.isEmpty && colBounds.isEmpty && bloomProbes.isEmpty)
-      return dirs
-    dirs.map { pd =>
-      pd.copy(files = pd.files.filter { f =>
-        val p = f.getPath
-        span(p).forall { case (mn, mx) =>
-          lo.forall(mx >= _) && hi.forall(mn <= _)
-        } && colBounds.forall { case (c, cLo, cHi) =>
-          colSpans(p).flatMap(_.get(c)) match {
-            case Some(s0) if s0.typ != 'e' =>
-              cLo.forall(s0.hiBD >= _) && cHi.forall(s0.loBD <= _)
-            case _ => true
-          }
-        } && bloomProbes.forall { case (c, hashes) =>
-          blooms(p).flatMap(_.get(c)).forall(bf => hashes.exists(bf.mightContainLong))
+  /** The planning-time skip index both V2 file indexes (live and
+    * snapshot) hold: one committed version's per-file ts spans and
+    * declared-stats spans, keyed by table-relative path, plus that
+    * version's Bloom sidecar. The declared Bloom columns and the sidecar
+    * are read lazily, once per instance, and only when some data filter
+    * is an equality probe ([[hasEqProbe]]), so a range read never pays
+    * for either. An index with no entries skips nothing. */
+  private[graft] final class SkipIndex(
+      tsCol: String,
+      spans: Map[String, (Long, Long)],
+      colSpans: Map[String, Map[String, graft.ts.ColSpan]],
+      declaredBloomCols: () => Seq[String],
+      readSidecar: () => Map[String, Map[String, Array[Byte]]]) {
+
+    // every column any file has a recorded span for (statsCols, effectively)
+    private lazy val statCols: Seq[String] =
+      colSpans.valuesIterator.flatMap(_.keysIterator).toSet.toSeq
+
+    private lazy val bloomCols: Seq[String] = declaredBloomCols()
+
+    // O(#files × bits/8) driver memory while planning
+    private lazy val blooms: Map[String, Map[String, BloomFilter]] =
+      readSidecar().map { case (rel, cols) =>
+        rel -> cols.map { case (c, bytes) =>
+          c -> BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes))
         }
-      })
+      }
+
+    /** The one per-file keep rule of every table read that skips files:
+      * drop a file whose recorded closed ts span misses the pushed ts
+      * bounds, whose declared-stats span excludes every value a conjunct
+      * on that column allows (each `IN` value tested on its own), or
+      * whose Bloom bits reject every hash of some equality conjunct. A
+      * file with no entry in an index is kept by that index, and so is a
+      * stats span marked `'e'` (harvested, unskippable). `relOf` maps a
+      * listed path to its table-relative key. Returns `dirs` itself when
+      * the filters imply no bound and no probe. */
+    def skipFiles(dirs: Seq[PartitionDirectory], dataFilters: Seq[Expression])(
+        relOf: Path => String): Seq[PartitionDirectory] = {
+      // only an equality conjunct can use a Bloom probe
+      val probeCols = if (hasEqProbe(dataFilters)) bloomCols else Nil
+      if (spans.isEmpty && colSpans.isEmpty && probeCols.isEmpty) return dirs
+      val (lo, hi) = tsBounds(dataFilters, tsCol)
+      // bounds and per-conjunct value sets per stats column, from the
+      // same pushed conjuncts
+      val colBounds = statCols.flatMap { c =>
+        val b = numBounds(dataFilters, c)
+        if (b._1.isEmpty && b._2.isEmpty) None else Some((c, b._1, b._2))
+      }
+      val colPoints = statCols.flatMap(c => numPoints(dataFilters, c).map(c -> _))
+      // per-conjunct equality probe hashes on bloom-indexed columns — a
+      // file must might-contain at least one hash of EVERY equality conjunct
+      val bloomProbes = probeCols.flatMap { c =>
+        eqProbeHashes(dataFilters, c).map(c -> _)
+      }
+      if (lo.isEmpty && hi.isEmpty && colBounds.isEmpty && colPoints.isEmpty &&
+          bloomProbes.isEmpty) return dirs
+      def statSpan(rel: String, c: String): Option[graft.ts.ColSpan] =
+        colSpans.get(rel).flatMap(_.get(c)).filter(_.typ != 'e')
+      dirs.map { pd =>
+        pd.copy(files = pd.files.filter { f =>
+          val rel = relOf(f.getPath)
+          spans.get(rel).forall { case (mn, mx) =>
+            lo.forall(mx >= _) && hi.forall(mn <= _)
+          } && colBounds.forall { case (c, cLo, cHi) =>
+            statSpan(rel, c).forall(s0 =>
+              cLo.forall(s0.hiBD >= _) && cHi.forall(s0.loBD <= _))
+          } && colPoints.forall { case (c, vs) =>
+            statSpan(rel, c).forall(s0 => vs.exists(x => x >= s0.loBD && x <= s0.hiBD))
+          } && bloomProbes.forall { case (c, hashes) =>
+            blooms.get(rel).flatMap(_.get(c)).forall(bf => hashes.exists(bf.mightContainLong))
+          }
+        })
+      }
     }
   }
 
@@ -235,20 +231,7 @@ object GraftTsStatsFileIndex {
     var hi: Option[BigDecimal] = None
     def tightenLo(v: BigDecimal): Unit = lo = Some(lo.fold(v)(_.max(v)))
     def tightenHi(v: BigDecimal): Unit = hi = Some(hi.fold(v)(_.min(v)))
-    def isCol(e: Expression): Boolean = e match {
-      case a: AttributeReference => a.name.equalsIgnoreCase(name)
-      case _ => false
-    }
-    def num(l: Any): Option[BigDecimal] = l match {
-      case v: Long => Some(BigDecimal(v))
-      case v: Int => Some(BigDecimal(v))
-      case v: Short => Some(BigDecimal(v.toInt))
-      case v: Byte => Some(BigDecimal(v.toInt))
-      case v: Double if java.lang.Double.isFinite(v) => Some(BigDecimal(v))
-      case v: Float if java.lang.Float.isFinite(v) => Some(BigDecimal(v.toDouble))
-      case v: org.apache.spark.sql.types.Decimal => Some(v.toBigDecimal)
-      case _ => None
-    }
+    def isCol(e: Expression): Boolean = isAttr(e, name)
     filters.foreach {
       case GreaterThanOrEqual(a, Literal(v, _)) if isCol(a) => num(v).foreach(tightenLo)
       case GreaterThan(a, Literal(v, _)) if isCol(a) => num(v).foreach(tightenLo)
@@ -258,15 +241,6 @@ object GraftTsStatsFileIndex {
         num(v).foreach { b => tightenLo(b); tightenHi(b) }
       case EqualTo(Literal(v, _), a) if isCol(a) =>
         num(v).foreach { b => tightenLo(b); tightenHi(b) }
-      // IN probe set → closed [min, max] (the tsBounds rule); all-or-nothing
-      // so a partially-numeric list contributes nothing
-      case In(a, list) if isCol(a) && list.nonEmpty &&
-          list.forall(_.isInstanceOf[Literal]) =>
-        val bs = list.map { case Literal(v, _) => num(v) }
-        if (bs.forall(_.isDefined)) {
-          val vals = bs.map(_.get)
-          tightenLo(vals.min); tightenHi(vals.max)
-        }
       case GreaterThanOrEqual(Literal(v, _), a) if isCol(a) => num(v).foreach(tightenHi)
       case GreaterThan(Literal(v, _), a) if isCol(a) => num(v).foreach(tightenHi)
       case LessThanOrEqual(Literal(v, _), a) if isCol(a) => num(v).foreach(tightenLo)
@@ -274,5 +248,42 @@ object GraftTsStatsFileIndex {
       case _ => ()
     }
     (lo, hi)
+  }
+
+  /** The value sets of the `IN` conjuncts (static or optimized to
+    * `InSet`) on a NUMERIC stats column — a file's span must hold at
+    * least one value of each, tested value by value, which prunes more
+    * than the list's [min, max] would. All-or-nothing per conjunct: a
+    * list with a null or non-numeric member contributes nothing. */
+  private[sources] def numPoints(filters: Seq[Expression],
+                                 name: String): Seq[Seq[BigDecimal]] = {
+    def allNum(vs: Seq[Any]): Option[Seq[BigDecimal]] = {
+      val bs = vs.map(num)
+      if (bs.nonEmpty && bs.forall(_.isDefined)) Some(bs.map(_.get)) else None
+    }
+    filters.flatMap {
+      case In(a, list) if isAttr(a, name) && list.forall(_.isInstanceOf[Literal]) =>
+        allNum(list.map { case Literal(v, _) => v })
+      case InSet(a, hset) if isAttr(a, name) => allNum(hset.toSeq)
+      case _ => None
+    }
+  }
+
+  private def isAttr(e: Expression, name: String): Boolean = e match {
+    case a: AttributeReference => a.name.equalsIgnoreCase(name)
+    case _ => false
+  }
+
+  /** A literal's value as an exact BigDecimal (integral spans never
+    * round); None for anything non-numeric or non-finite. */
+  private def num(l: Any): Option[BigDecimal] = l match {
+    case v: Long => Some(BigDecimal(v))
+    case v: Int => Some(BigDecimal(v))
+    case v: Short => Some(BigDecimal(v.toInt))
+    case v: Byte => Some(BigDecimal(v.toInt))
+    case v: Double if java.lang.Double.isFinite(v) => Some(BigDecimal(v))
+    case v: Float if java.lang.Float.isFinite(v) => Some(BigDecimal(v.toDouble))
+    case v: org.apache.spark.sql.types.Decimal => Some(v.toBigDecimal)
+    case _ => None
   }
 }

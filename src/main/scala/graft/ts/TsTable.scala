@@ -97,15 +97,14 @@ final class TsTable private (
     * day directories, and the ts predicate is pushed to the Parquet scan
     * where sorted row-groups make it a stats-level skip.
     */
-  def readRange(start: Timestamp, end: Timestamp): DataFrame = {
-    // Span fast path: when the current manifest covers the live file set
-    // exactly and every file carries a footer ts span, build the scan
-    // from the explicit SPAN-PRUNED file list — files whose closed span
-    // cannot intersect [start, end] never enter planning (on top of the
-    // day-dir and row-group pruning below). Any mismatch (orphans,
-    // attached files, statless footers, stale pre-evolution handle)
-    // falls back to the directory-listing scan.
-    spanPrunedRange(start, end).getOrElse {
+  def readRange(start: Timestamp, end: Timestamp): DataFrame =
+    // Manifest route: when the current manifest serves the live table
+    // ([[servingManifest]]), the scan plans from its explicit file list,
+    // and files whose closed ts span cannot intersect [start, end] never
+    // enter planning (on top of the day-dir and row-group pruning below).
+    // Otherwise (orphans, attached files, stale pre-evolution handle) the
+    // directory-listing scan serves.
+    servingManifest().fold {
       // Day bounds are computed IN-PLAN via to_date on the timestamp
       // literal, so they resolve under the session timezone (pinned UTC)
       // — the same rule that wrote p_date. A driver-side
@@ -122,26 +121,7 @@ final class TsTable private (
             col(PartCol).between(to_date(lit(start)), to_date(lit(end)))) &&
           col(tsCol).between(lit(start), lit(end)))
         .drop(PartCol)
-    }
-  }
-
-  /** [[readRange]]'s manifest route: Some(pruned frame) iff the span
-    * index is complete AND authoritative for the live state (same
-    * file-set equality guard as [[statsEdge]]; same-schema guard keeps a
-    * stale pre-evolution handle serving ITS projection via the fallback
-    * instead of the manifest's wider one). Metadata cost: one version
-    * listing + one manifest read + one live listing — noise next to any
-    * distributed scan it prunes. */
-  private def spanPrunedRange(start: Timestamp,
-                              end: Timestamp): Option[DataFrame] = {
-    val (_, m) = currentManifest.getOrElse(return None)
-    if (m.files.isEmpty) return None
-    if (m.schema != storedSchema) return None
-    if (!m.files.forall(f => m.stats.contains(f._1))) return None
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (listLiveFiles(fs).toSet != m.files.toSet) return None
-    Some(new TsSnapshot(spark, path, tsCol, m).readRange(start, end))
-  }
+    }(servingSnapshot(_).readRange(start, end))
 
   /** Equality point lookup — `SELECT … WHERE column IN (values)` served
     * through the table's file-skipping indexes (the Delta/Iceberg
@@ -150,98 +130,34 @@ final class TsTable private (
     * span covers everything, so span skipping keeps all files, while
     * per-file Bloom bits — declared via `TsWriteOptions(bloomCols = …)`,
     * built by the writer, collected at commit, carried forward like
-    * spans — keep only files
-    * that MIGHT hold a probed value). Pruning is metadata-only and
-    * conservative: a file is skipped only when its declared-stats span
-    * excludes every value OR its Bloom filter rejects every value's
-    * hash; files without index entries are always read, and any
-    * authority mismatch (foreign files, stale pre-evolution handle,
-    * pre-index manifests) falls back to the plain filtered scan —
-    * soundness over coverage, the spanPrunedRange rule. The exact
-    * predicate re-applies on the survivors, so a Bloom false positive
-    * costs I/O, never correctness. At 100 TB this turns a needle query
-    * (one user's rows, one bad producer's ids) from a full-table scan
-    * into O(files actually holding the needle) reads. */
+    * spans — keep only files that MIGHT hold a probed value). When the
+    * current manifest serves the live table ([[servingManifest]]) the
+    * scan plans from that manifest's file list, and its file index
+    * ([[graft.sources.GraftTsStatsFileIndex.SkipIndex]], the one rule
+    * every skipping read uses) skips a file only when its declared-stats
+    * span excludes every value OR its Bloom filter rejects every value's
+    * hash; files without index entries are always read. Otherwise the
+    * plain filtered scan serves — soundness over coverage. The frame
+    * serves the manifest it was built from, never a later commit's file
+    * set. The exact predicate re-applies on the survivors, so a Bloom
+    * false positive costs I/O, never correctness. Where a probe value
+    * of another type than the column's leaves a cast on the column, the
+    * probe is void (every file kept, no row lost). At 100 TB this turns
+    * a needle query (one user's rows, one bad producer's ids) from a
+    * full-table scan into O(files actually holding the needle) reads. */
   def lookupEq(column: String, values: Seq[Any]): DataFrame = {
     require(storedSchema.fieldNames.contains(column),
       s"lookupEq: unknown column '$column'")
     require(values.nonEmpty && values.forall(_ != null),
       "lookupEq: need at least one non-null probe value")
-    val pred = col(column).isin(values: _*)
-    bloomCandidatesWithManifest(column, values) match {
-      case None => toDF.where(pred)
-      case Some((_, cands, _)) if cands.isEmpty =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], storedSchema)
-      case Some((m, cands, sidecar)) =>
-        // Build the snapshot from the SAME manifest the candidate pass
-        // validated — re-reading currentVersion here would race a
-        // concurrent commit: version N's candidate list filtering version
-        // N+1's file set silently drops rows the new commit added. The
-        // sidecar that pass read, and this handle's declared Bloom
-        // columns, serve the scan's file index, which would otherwise
-        // read both again.
-        val keep = cands.toSet
-        new TsSnapshot(spark, path, tsCol,
-          m.copy(files = m.files.filter(f => keep(f._1))),
-          knownBlooms = Some((liveBloomCols, sidecar.filter(e => keep(e._1)))))
-          .toDF.where(pred)
-    }
+    servingManifest().fold(toDF)(servingSnapshot(_).toDF)
+      .where(col(column).isin(values: _*))
   }
 
-  /** [[lookupEq]]'s pruning: Some(candidate relative paths) when the
-    * current manifest is authoritative for the live state AND some
-    * skipping index exists for the column (Bloom sidecar entries or
-    * declared-stats spans); None = no index / not authoritative, caller
-    * scans everything. Package-visible for spec assertions. */
-  private[graft] def bloomCandidateFiles(column: String,
-      values: Seq[Any]): Option[Seq[String]] =
-    bloomCandidatesWithManifest(column, values).map(_._2)
-
-  /** [[bloomCandidateFiles]] plus the exact manifest the verdict was
-    * computed against, so the consumer reads that file set and no other —
-    * one authority check covers both the pruning and the scan — and that
-    * version's Bloom sidecar as read for the verdict. */
-  private[graft] def bloomCandidatesWithManifest(column: String,
-      values: Seq[Any]): Option[(TsManifest, Seq[String], Map[String, Map[String, Array[Byte]]])] = {
-    val (v, m) = currentManifest.getOrElse(return None)
-    if (m.schema != storedSchema) return None
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (listLiveFiles(fs).toSet != m.files.toSet) return None
-    val sidecar = TsTable.readBloomSidecar(fs, path, v)
-    val blooms = sidecar
-      .flatMap { case (p, cols) => cols.get(column).map(p -> _) }
-    val spans = m.colStats
-      .flatMap { case (p, cs) => cs.get(column).map(p -> _) }
-    if (blooms.isEmpty && spans.isEmpty) return None
-    val dt = storedSchema(column).dataType
-    val hashes = values.map(
-      org.apache.spark.sql.graft.BloomExprs.hashLiteral(_, dt))
-    // numeric probes also test the declared-stats span; a non-numeric
-    // probe set (or partially-numeric — all-or-nothing for soundness)
-    // relies on the Bloom bits alone
-    val nums: Seq[BigDecimal] = values.flatMap {
-      case n: java.lang.Number => Some(BigDecimal(n.toString))
-      case _ => None
-    }
-    val spanUsable = nums.length == values.length
-    Some((m, m.files.map(_._1).filter { p =>
-      val spanHit = spans.get(p) match {
-        // 'e' = harvested-but-unskippable marker: keep the file
-        case Some(s0) if spanUsable && s0.typ != 'e' =>
-          nums.exists(x => x >= s0.loBD && x <= s0.hiBD)
-        case _ => true
-      }
-      val bloomHit = blooms.get(p) match {
-        case Some(bytes) =>
-          val bf = org.apache.spark.util.sketch.BloomFilter.readFrom(
-            new java.io.ByteArrayInputStream(bytes))
-          hashes.exists(bf.mightContainLong)
-        case None => true
-      }
-      spanHit && bloomHit
-    }, sidecar))
-  }
+  /** A serving manifest as a pinned view that knows this handle's Bloom
+    * columns, so its equality probes never open the descriptor. */
+  private def servingSnapshot(m: TsManifest): TsSnapshot =
+    new TsSnapshot(spark, path, tsCol, m, knownBloomCols = Some(liveBloomCols))
 
   /** Per-day layout observability (the IvfIndex.cellStats analogue): one
     * row per `p_date=` directory with file count, bytes, and rows — the
@@ -3057,10 +2973,6 @@ final class TsTable private (
     removed.result()
   }
 
-  /** Relative path + size of every LIVE data file — loose ROOT-LEVEL files
-    * too (the attached plain/hybrid layout the live read serves): a
-    * listing that covered only partition dirs would make a pinned read
-    * silently narrower than the live state. O(#partitions) metadata. */
   /** Metadata-only: the table currently serves NO data files — the
     * committed manifest lists none AND the live tree holds none (loose
     * root-level attach-surface files included, which a manifest-only
@@ -3068,13 +2980,32 @@ final class TsTable private (
     * report false and take the scan path. Cost: one version listing +
     * one manifest read + one live listing — no Spark job. Lets the
     * rewrite verbs skip their discovery scans on fresh tables. */
-  private def servesNoFiles: Boolean = currentManifest.exists { case (_, m) =>
-    m.files.isEmpty && {
-      val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      listLiveFiles(fs).isEmpty
-    }
-  }
+  private def servesNoFiles: Boolean = servingManifest(_.files.isEmpty).isDefined
 
+  /** The current manifest, when it serves the live table: it lists
+    * exactly the live files (path + size) and carries this handle's
+    * schema. The one authority check of every read that plans from a
+    * manifest instead of a listing ([[readRange]], [[lookupEq]],
+    * [[exactSpans]], [[servesNoFiles]]): None on any mismatch (no
+    * manifest, orphans from a crashed append, files attached outside the
+    * facade, a stale pre-evolution handle, which keeps serving ITS
+    * projection through the listing instead of the manifest's wider
+    * one). `need` is the caller's own condition on the manifest, tested
+    * before the live listing so a manifest that fails it costs none.
+    * Cost: one version listing + one manifest read + one live listing —
+    * no Spark job. */
+  private def servingManifest(need: TsManifest => Boolean = _ => true): Option[TsManifest] =
+    currentManifest.map(_._2).filter { m =>
+      need(m) && m.schema == storedSchema && {
+        val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+        listLiveFiles(fs).toSet == m.files.toSet
+      }
+    }
+
+  /** Relative path + size of every LIVE data file — loose ROOT-LEVEL files
+    * too (the attached plain/hybrid layout the live read serves): a
+    * listing that covered only partition dirs would make a pinned read
+    * silently narrower than the live state. O(#partitions) metadata. */
   private def listLiveFiles(
       fs: org.apache.hadoop.fs.FileSystem): Seq[(String, Long)] = {
     val root = new Path(path)
@@ -3197,20 +3128,15 @@ final class TsTable private (
       .collectFirst { case h if h.contains(key) => h(key) }
   }
 
-  /** The V2 scan's file-skip indexes, all from ONE resolved version (so
+  /** The live V2 scan's file-skip index, from ONE resolved version (so
     * a commit landing mid-read cannot pair one version's spans with
-    * another's Bloom bits): the manifest's per-file ts spans (relative
-    * path → closed µs span), its per-file spans of `writeOptions.statsCols`
-    * (relative path → column → closed span), and that version's Bloom
-    * sidecar over `writeOptions.bloomCols` (relative path → column →
-    * serialized filter bytes). All empty when no version exists; spans
-    * are empty on manifests that predate span stats. */
-  private[graft] def currentFileIndexes: (Map[String, (Long, Long)],
-      Map[String, Map[String, ColSpan]], Map[String, Map[String, Array[Byte]]]) =
-    currentManifest.map { case (v, m) =>
-      val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      (m.stats, m.colStats, TsTable.readBloomSidecar(fs, path, v))
-    }.getOrElse((Map.empty, Map.empty, TsTable.NoBlooms))
+    * another's Bloom bits): the current manifest's ts and stats spans and
+    * its version's Bloom sidecar, read only on the first equality probe.
+    * Empty (skips nothing) when no version exists. */
+  private[graft] def currentSkipIndex: graft.sources.GraftTsStatsFileIndex.SkipIndex =
+    currentManifest.fold(new graft.sources.GraftTsStatsFileIndex.SkipIndex(
+      tsCol, Map.empty, Map.empty, () => Nil, () => TsTable.NoBlooms))(
+      m => servingSnapshot(m._2).skipIndex)
 
   /** Manifest-stats fast path for [[minDt]]/[[maxDt]]: when the current
     * manifest's file set matches the live listing exactly (path + size)
@@ -3228,18 +3154,11 @@ final class TsTable private (
     }
 
   /** Every live file's ts span (closed, epoch µs), when the current
-    * manifest describes the live table exactly: its file set matches the
-    * live listing (path + size) and every file carries a span. None on any
-    * mismatch (no manifest, orphans from a crashed append, files attached
-    * outside the facade, statless footers). Cost: one version listing +
-    * one manifest read + one live listing — no Spark job. */
-  private def exactSpans: Option[Seq[(Long, Long)]] = {
-    val (_, m) = currentManifest.getOrElse(return None)
-    if (!m.files.forall(f => m.stats.contains(f._1))) return None
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (listLiveFiles(fs).toSet != m.files.toSet) return None
-    Some(m.files.map(f => m.stats(f._1)))
-  }
+    * manifest serves the live table ([[servingManifest]]) and every file
+    * carries a span. None otherwise (statless footers included). */
+  private def exactSpans: Option[Seq[(Long, Long)]] =
+    servingManifest(m => m.files.forall(f => m.stats.contains(f._1)))
+      .map(m => m.files.map(f => m.stats(f._1)))
 
   /** Declare a rewrite in flight (see [[TsTable.InflightDir]]): one marker
     * file naming the verb's staging dir and its displaced rel paths,
@@ -3362,11 +3281,10 @@ final class TsSnapshot private[ts] (
     // the same — and open-time re-resolution through the archive-resolving
     // format heals displacement either way.
     dirCache: Option[scala.collection.mutable.Map[String, Map[String, Long]]] = None,
-    // (declared Bloom columns, the version's Bloom sidecar) when the
-    // caller already read them — lookupEq's candidate pass — so the file
-    // index probes these instead of re-opening the descriptor and
-    // re-reading the sidecar. None: read on first use.
-    knownBlooms: Option[(Seq[String], Map[String, Map[String, Array[Byte]]])] = None) {
+    // the declared Bloom columns, when the caller already knows them —
+    // a live handle's reads — so the file index gates its equality probes
+    // without opening the descriptor. None: read on the first probe.
+    knownBloomCols: Option[Seq[String]] = None) {
 
   import TsTable.{ArchiveDir, PartCol}
 
@@ -3377,32 +3295,21 @@ final class TsSnapshot private[ts] (
   private[graft] def manifestColStats: Map[String, Map[String, ColSpan]] =
     manifest.colStats
 
-  /** The version's Bloom sidecar (relative path → column → filter bytes),
-    * tolerant of absence — consumed by the snapshot file index so a
-    * pinned needle query skips files exactly like a live one. One small
-    * driver-side read per index instance, none when the caller handed
-    * the sidecar over. */
-  private[graft] def fileBlooms: Map[String, Map[String, Array[Byte]]] =
-    knownBlooms.fold {
-      val fs = new Path(tablePath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      TsTable.readBloomSidecar(fs, tablePath, version)
-    }(_._2)
-
-  /** The Bloom columns the table declares now, which gate the file
-    * index's equality probes: one descriptor read, none when the caller
-    * handed them over. A column whose Bloom bits existed at this version
-    * but was later dropped from the descriptor simply loses its skip
-    * (sound — every file kept). */
-  private[graft] def declaredBloomCols: Seq[String] =
-    knownBlooms.fold(
-      scala.util.Try(TsTable.open(spark, tablePath).writeOptions.bloomCols)
-        .getOrElse(Seq.empty))(_._1)
-
-  /** The version's per-file ts spans (relative path → closed µs span) —
-    * consumed by the snapshot file index for planning-time file skipping.
-    * Empty on pre-stats manifests. */
-  private[graft] def fileTsSpans: Map[String, (Long, Long)] = manifest.stats
+  /** The version's file-skip index: its manifest's ts and stats spans,
+    * and its Bloom sidecar behind the Bloom columns the table declares
+    * (one descriptor read, none when the caller handed them over; a
+    * column whose bits existed at this version but was later dropped
+    * from the descriptor simply loses its skip — every file kept). Both
+    * reads happen on the first equality probe, never for a range read. */
+  private[graft] def skipIndex: graft.sources.GraftTsStatsFileIndex.SkipIndex =
+    new graft.sources.GraftTsStatsFileIndex.SkipIndex(tsCol, manifest.stats,
+      manifest.colStats,
+      () => knownBloomCols.getOrElse(
+        scala.util.Try(TsTable.open(spark, tablePath).writeOptions.bloomCols)
+          .getOrElse(Seq.empty)),
+      () => TsTable.readBloomSidecar(
+        new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration),
+        tablePath, version))
 
   /** (live files, archived files) as fully-qualified path strings.
     * A `def`, not a cached val: every DataFrame construction re-resolves
@@ -3533,7 +3440,7 @@ final class TsSnapshot private[ts] (
     // isNull arm: loose root-level files carry a null p_date (attached
     // plain/hybrid layouts) — the live readRange rule; the span filter
     // above and the ts predicate bound what they contribute.
-    new TsSnapshot(spark, tablePath, tsCol, sub, dirCache).raw
+    new TsSnapshot(spark, tablePath, tsCol, sub, dirCache, knownBloomCols).raw
       .where((col(PartCol).isNull ||
           col(PartCol).between(to_date(lit(start)), to_date(lit(end)))) &&
         col(tsCol).between(lit(start), lit(end)))
@@ -3541,13 +3448,6 @@ final class TsSnapshot private[ts] (
   }
 }
 
-/** One committed version: the action that produced it, the serving schema,
-  * (table-relative path, size) of every data file, and — for files whose
-  * parquet footers carried usable ts statistics — the file's closed ts
-  * span in epoch MICROS (`stats`, keyed by relative path). The span map is
-  * best-effort metadata: a file absent from it is simply never skipped
-  * (attached foreign encodings, statless footers, pre-stats manifests all
-  * degrade to the old scan-everything behavior, never to wrong results). */
 /** Closed min/max of one column in one file, numeric-exact across integer
   * and floating encodings: `typ` 'l' = integral (lo/hi parse as Long),
   * 'd' = floating (lo/hi are Double.toString round-trips). Comparisons go
@@ -3560,6 +3460,13 @@ private[graft] final case class ColSpan(typ: Char, lo: String, hi: String) {
     if (typ == 'l') BigDecimal(hi.toLong) else BigDecimal(hi.toDouble)
 }
 
+/** One committed version: the action that produced it, the serving schema,
+  * (table-relative path, size) of every data file, and — for files whose
+  * parquet footers carried usable ts statistics — the file's closed ts
+  * span in epoch MICROS (`stats`, keyed by relative path). The span map is
+  * best-effort metadata: a file absent from it is simply never skipped
+  * (attached foreign encodings, statless footers, pre-stats manifests all
+  * degrade to the old scan-everything behavior, never to wrong results). */
 private[ts] final case class TsManifest(
     version: Long,
     action: String,

@@ -1,10 +1,9 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Cast, Expression, Literal, ScalarSubquery, XxHash64}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal, ScalarSubquery}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.types.DataType
 
 /** Column bridge for Spark's own Bloom-filter expressions — the machinery
   * behind runtime (injected) join filters, here used DELIBERATELY as a
@@ -37,20 +36,6 @@ object BloomExprs {
     ExpressionUtils.column(
       BloomFilterMightContain(ExpressionUtils.expression(bloom),
         ExpressionUtils.expression(hashed)))
-
-  /** Driver-side xxhash64 (seed 42) of one PROBE value under the column's
-    * type — must produce exactly the hash `functions.xxhash64(col)`
-    * produced at Bloom-build time for the same stored value, so metadata
-    * probes agree with the bits. A value already of the column's external
-    * type rides a plain Literal; anything else goes through a Cast pinned
-    * to UTC (the session rule). Throws on a value the column's type
-    * cannot represent — a caller-side type error, not a skippable file. */
-  def hashLiteral(value: Any, dt: DataType): Long = {
-    val lit0 = Literal(value)
-    val e: Expression =
-      if (lit0.dataType == dt) lit0 else Cast(lit0, dt, Some("UTC"))
-    new XxHash64(Seq(e)).eval(null).asInstanceOf[Long]
-  }
 
   /** A 1-row/1-column DataFrame as a SCALAR SUBQUERY expression —
     * `might_contain` requires its filter side to be a constant or scalar

@@ -140,9 +140,8 @@ class GraftTsProceduresSpec extends SparkSpec {
         "bloom_cols => 'user_id')").head
     assert(r.getString(1) == "user_id" && r.getLong(2) > 0)
     val up = TsTable.open(spark, dir)
-    val cands = up.bloomCandidateFiles("user_id", Seq(3L))
-    assert(cands.isDefined && cands.get.length == 1 &&
-      cands.get.head.startsWith("p_date=2024-03-02/"),
+    val cands = graft.ts.TsBloomSpecAccess.plannedFiles(up, "user_id", Seq(3L))
+    assert(cands.length == 1 && cands.head.startsWith("p_date=2024-03-02/"),
       s"backfilled bloom must prune to the owning file, got $cands")
     assert(up.lookupEq("user_id", Seq(3L)).count() == 1)
   }

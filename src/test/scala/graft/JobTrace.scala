@@ -3,10 +3,9 @@ package graft
 // line launched each Spark job, how many jobs per call site. The lifecycle
 // capstones are job-count bound (q_ts_rollup_dml: 65 jobs, 1.9 s summed task
 // time vs 6.2 s wall in r21's Prof), so the optimization target is WHICH
-// driver-side actions run, not stage shape. Test-scoped like Scratch:
+// driver-side actions run, not stage shape. Test-scoped, never shipped:
 //   sbt "Test/runMain graft.JobTrace <keys>"
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 object JobTrace {
   def main(args: Array[String]): Unit = {
@@ -14,15 +13,7 @@ object JobTrace {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.catalog.graft_ts", "graft.sources.GraftTsCatalog")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus)
     val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val execs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val stageTasks = new java.util.concurrent.ConcurrentHashMap[

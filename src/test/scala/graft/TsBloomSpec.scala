@@ -1,6 +1,7 @@
 package graft
 
 import graft.ts.{TsTable, TsWriteOptions}
+import graft.ts.TsBloomSpecAccess.{listedFiles, plannedFiles}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -9,8 +10,8 @@ import org.apache.spark.sql.functions._
   * `bloomCols`, harvested at commit into a version sidecar, carried
   * forward like ts spans, and consumed by `TsTable.lookupEq` — the
   * needle-query verb min/max spans cannot serve on an unclustered
-  * high-cardinality column. Covers: skipping actually happens (candidate
-  * lists shrink to the owning file), absent-value fast path, correctness
+  * high-cardinality column. Covers: skipping actually happens (the
+  * lookup's plan lists only the owning file), absent-value fast path, correctness
   * parity vs the full filtered scan, conservative fallbacks (foreign
   * file, lost sidecar), self-healing re-harvest, compact survival, and
   * sidecar expiry. */
@@ -45,10 +46,9 @@ class TsBloomSpec extends SparkSpec {
 
   test("lookupEq prunes to the single file holding the probed ids and matches the full scan") {
     val (t, _, _) = build("prune")
-    val cands = t.bloomCandidateFiles("user_id", Seq(2007L))
-    assert(cands.isDefined, "index should be authoritative")
-    assert(cands.get.length == 1, s"expected 1 candidate file, got ${cands.get}")
-    assert(cands.get.head.startsWith("p_date=2024-01-02/"))
+    val cands = plannedFiles(t, "user_id", Seq(2007L))
+    assert(cands.length == 1, s"expected 1 planned file, got $cands")
+    assert(cands.head.startsWith("p_date=2024-01-02/"))
     val got = t.lookupEq("user_id", Seq(2007L))
       .select("ts", "user_id", "value").collect().toSet
     val want = t.toDF.where(col("user_id") === 2007L)
@@ -59,18 +59,18 @@ class TsBloomSpec extends SparkSpec {
   test("multi-value probe unions candidate files; string column probes work") {
     val (t, _, _) = build("multi",
       TsWriteOptions(bloomCols = Seq("user_id", "tag")))
-    val cands = t.bloomCandidateFiles("user_id", Seq(1003L, 3004L))
-    assert(cands.get.length == 2)
+    val cands = plannedFiles(t, "user_id", Seq(1003L, 3004L))
+    assert(cands.length == 2)
     // string bloom column: probe under StringType
-    val byTag = t.bloomCandidateFiles("tag", Seq("u3004"))
-    assert(byTag.get.length == 1 && byTag.get.head.startsWith("p_date=2024-01-03/"))
+    val byTag = plannedFiles(t, "tag", Seq("u3004"))
+    assert(byTag.length == 1 && byTag.head.startsWith("p_date=2024-01-03/"))
     val got = t.lookupEq("tag", Seq("u3004")).count()
     assert(got == t.toDF.where(col("tag") === "u3004").count() && got > 0)
   }
 
   test("absent value: zero candidates, empty result, no data job needed") {
     val (t, _, _) = build("absent")
-    assert(t.bloomCandidateFiles("user_id", Seq(999999L)).get.isEmpty)
+    assert(plannedFiles(t, "user_id", Seq(999999L)).isEmpty)
     assert(t.lookupEq("user_id", Seq(999999L)).isEmpty)
   }
 
@@ -90,7 +90,9 @@ class TsBloomSpec extends SparkSpec {
     Seq((java.sql.Timestamp.valueOf("2024-01-02 09:00:00"), 777L, "x", 1.0))
       .toDF("ts", "user_id", "tag", "value")
       .write.mode("append").parquet(store + "/p_date=2024-01-02")
-    assert(t.bloomCandidateFiles("user_id", Seq(777L)).isEmpty)
+    // not authoritative: the lookup plans every live file, the foreign one too
+    val live = listedFiles(t, t.toDF)
+    assert(live.length > 3 && plannedFiles(t, "user_id", Seq(777L)).toSet == live.toSet)
     assert(t.lookupEq("user_id", Seq(777L)).count() == 1)
     // facade reads name-resolve the id-less foreign file per task (the
     // fallback reader); the stock V2 parquet scan has no per-file
@@ -115,16 +117,15 @@ class TsBloomSpec extends SparkSpec {
       "already-live files in one 'indexing' commit: probes prune, names " +
       "resolve case-insensitively, unknown columns refuse") {
     val (t, store, fs) = build("declare", TsWriteOptions()) // NO indexes
-    // pre-declare: nothing authoritative to prune with
-    assert(t.bloomCandidateFiles("user_id", Seq(2007L)).isEmpty)
+    // pre-declare: no index to prune with, every live file is planned
+    assert(plannedFiles(t, "user_id", Seq(2007L)).toSet == listedFiles(t, t.toDF).toSet)
     val ix = t.declareIndexing(statsCols = Seq("Value"),
       bloomCols = Seq("User_Id")) // mixed case → canonical labels
     assert(ix.snapshotVersions.last._2 == "indexing")
     // the backfilled index is authoritative over every pre-existing file
-    val cands = ix.bloomCandidateFiles("user_id", Seq(2007L))
-    assert(cands.isDefined, "backfilled index should be authoritative")
-    assert(cands.get.length == 1 && cands.get.head.startsWith("p_date=2024-01-02/"),
-      s"expected the one owning file, got ${cands.get}")
+    val cands = plannedFiles(ix, "user_id", Seq(2007L))
+    assert(cands.length == 1 && cands.head.startsWith("p_date=2024-01-02/"),
+      s"expected the one owning file, got $cands")
     val got = ix.lookupEq("user_id", Seq(2007L)).count()
     assert(got == ix.toDF.where(col("user_id") === 2007L).count() && got > 0)
     // the bloom sidecar covers every pre-existing file under the new column
@@ -132,10 +133,10 @@ class TsBloomSpec extends SparkSpec {
       ix.currentVersion.get)
     assert(side.size == 3 && side.values.forall(_.contains("user_id")))
     // the declared VALUE spans backfilled into the manifest colStats too
-    val (_, colSpans, _) = ix.currentFileIndexes
+    val colSpans = graft.ts.TsBloomSpecAccess.colStats(ix)
     assert(colSpans.nonEmpty && colSpans.values.forall(_.contains("value")))
-    // a probe for an absent value still fast-paths to zero candidates
-    assert(ix.bloomCandidateFiles("user_id", Seq(999999L)).get.isEmpty)
+    // a probe for an absent value still plans zero files
+    assert(plannedFiles(ix, "user_id", Seq(999999L)).isEmpty)
     // unknown column refuses with the name
     val e = intercept[IllegalArgumentException](
       ix.declareIndexing(Seq("nope"), Seq.empty))
@@ -170,16 +171,17 @@ class TsBloomSpec extends SparkSpec {
     val (t, store, fs) = build("heal")
     val v = t.currentVersion.get
     fs.delete(new Path(store, f"_ts_versions/v$v%08d.blooms"), false)
-    // colStats spans are absent (no statsCols declared) → no index left
-    assert(t.bloomCandidateFiles("user_id", Seq(2007L)).isEmpty)
+    // colStats spans are absent (no statsCols declared) → no index left,
+    // every live file is planned
+    assert(plannedFiles(t, "user_id", Seq(2007L)).toSet == listedFiles(t, t.toDF).toSet)
     assert(t.lookupEq("user_id", Seq(2007L)).count() ==
       t.toDF.where(col("user_id") === 2007L).count())
     // next commit re-harvests EVERY file, not just the new one
     import spark.implicits._
     t.append(Seq((java.sql.Timestamp.valueOf("2024-01-04 00:00:00"), 4000L, "u4000", 0.0))
       .toDF("ts", "user_id", "tag", "value"))
-    val cands = t.bloomCandidateFiles("user_id", Seq(2007L))
-    assert(cands.isDefined && cands.get.length == 1)
+    val cands = plannedFiles(t, "user_id", Seq(2007L))
+    assert(cands.length == 1, s"got $cands")
   }
 
   test("compact rewrites get fresh blooms; lookups stay correct and pruned") {
@@ -189,8 +191,8 @@ class TsBloomSpec extends SparkSpec {
     t.append(Seq((java.sql.Timestamp.valueOf("2024-01-03 23:59:59"), 2007L, "late", 9.0))
       .toDF("ts", "user_id", "tag", "value"))
     t.compactAll(targetFiles = 1)
-    val cands = t.bloomCandidateFiles("user_id", Seq(2007L))
-    assert(cands.isDefined && cands.get.length == 2,
+    val cands = plannedFiles(t, "user_id", Seq(2007L))
+    assert(cands.length == 2,
       s"2007 lives in day-2 and the late day-3 row: $cands")
     assert(t.lookupEq("user_id", Seq(2007L)).count() ==
       t.toDF.where(col("user_id") === 2007L).count())
@@ -211,9 +213,54 @@ class TsBloomSpec extends SparkSpec {
     val (t, _, _) = build("span",
       TsWriteOptions(statsCols = Seq("user_id"), bloomCols = Seq("value")))
     // user_id has NO bloom, but per-day disjoint ranges give tight spans
-    val cands = t.bloomCandidateFiles("user_id", Seq(1003L))
-    assert(cands.isDefined && cands.get.length == 1)
-    assert(cands.get.head.startsWith("p_date=2024-01-01/"))
+    val cands = plannedFiles(t, "user_id", Seq(1003L))
+    assert(cands.length == 1, s"got $cands")
+    assert(cands.head.startsWith("p_date=2024-01-01/"))
+  }
+
+  test("an IN list prunes value by value against declared-stats spans, as IN and as InSet") {
+    val (t, store, _) = build("points",
+      TsWriteOptions(statsCols = Seq("user_id"), bloomCols = Seq("value")))
+    // day 2's span [2000, 2049] lies inside the list's [min, max] but
+    // holds none of its values
+    val two = plannedFiles(t, "user_id", Seq(1003L, 3004L))
+    assert(two.map(_.split("/").head).toSet == Set("p_date=2024-01-01", "p_date=2024-01-03"),
+      s"got $two")
+    // more values than the optimizer's IN-list threshold become an InSet
+    val many = (1000L to 1005L) ++ (3000L to 3005L)
+    val viaSet = plannedFiles(t, "user_id", many)
+    assert(viaSet.map(_.split("/").head).toSet ==
+      Set("p_date=2024-01-01", "p_date=2024-01-03"), s"got $viaSet")
+    assert(t.lookupEq("user_id", many).count() ==
+      t.toDF.where(col("user_id").isin(many: _*)).count())
+    // the live V2 scan applies the same rule
+    val q = spark.read.format("graft-ts").load(store).where(col("user_id").isin(1003L, 3004L))
+    val scan = V2ScanAccess.parquetScan(q.queryExecution.executedPlan)
+    assert(scan.fileIndex.listFiles(scan.partitionFilters, scan.dataFilters)
+      .map(_.files.length).sum == 2)
+  }
+
+  test("a probe value of another type than the column's never loses a row") {
+    val (store, _) = freshStore("probetype")
+    import spark.implicits._
+    def day(d: Int): DataFrame = (0 until 20).map { i =>
+      (java.sql.Timestamp.valueOf(f"2024-01-0$d%d 00:00:${i % 60}%02d"), 100 * d + i % 5)
+    }.toDF("ts", "k")
+    val t = TsTable.create(spark, store, day(1).schema, tsCol = "ts",
+      writeOptions = TsWriteOptions(bloomCols = Seq("k")))
+    t.append(day(1)); t.append(day(2))
+    // an Int probe on the Int column prunes to the owning file
+    val owning = plannedFiles(t, "k", Seq(201))
+    assert(owning.map(_.split("/").head) == Seq("p_date=2024-01-02"))
+    assert(t.lookupEq("k", Seq(201)).count() == 4)
+    // other probe types: Catalyst casts one side; where it casts the
+    // column the probe is void and every file is kept — the owning file
+    // is always planned and the rows are all found
+    Seq[Any](201L, 201.0, new java.math.BigDecimal("201")).foreach { v =>
+      val planned = plannedFiles(t, "k", Seq(v))
+      assert(owning.forall(planned.contains), s"$v (${v.getClass}) planned $planned")
+      assert(t.lookupEq("k", Seq(v)).count() == 4, s"$v (${v.getClass})")
+    }
   }
 
   test("V2 scan consumes the bloom index: a plain SQL equality/IN predicate skips files at planning time") {
@@ -238,27 +285,45 @@ class TsBloomSpec extends SparkSpec {
     assert(q2.count() == t.toDF.where(col("user_id").isin(1003L, 3004L)).count())
   }
 
-  test("the candidate pass returns the manifest it validated: prune and scan share one authority check") {
-    val (t, _, _) = build("race")
-    val Some((mVersion, mFiles, cands)) =
-      graft.ts.TsBloomSpecAccess.candidatesWithManifest(t, "user_id", Seq(2007L))
-    assert(mVersion == t.currentVersion.get)
-    assert(cands.forall(mFiles.contains),
-      "candidates must come from the validated manifest's own file set")
-    // a commit lands BETWEEN the candidate pass and the scan: the probed
-    // user gains rows in a NEW file the old candidate list cannot know.
-    // lookupEq must never pair version-N candidates with version-N+1's
-    // file set — a fresh call revalidates and sees the new rows.
+  test("a lookupEq frame serves the version it was built at; a fresh one plans " +
+      "a later commit's file; a file the manifest does not know is always kept") {
+    val (t, store, _) = build("race")
+    val v = t.currentVersion.get
+    val atV = t.lookupEq("user_id", Seq(2007L))
+    val filesAtV = listedFiles(t, atV)
+    assert(filesAtV.length == 1 && filesAtV.head.startsWith("p_date=2024-01-02/"))
+    val rowsAtV = atV.count()
+    assert(rowsAtV > 0 &&
+      rowsAtV == t.openAt(v).toDF.where(col("user_id") === 2007L).count())
+    // a commit lands after the frame was built: the probed user gains a
+    // row in a NEW file. The built frame keeps serving version v's files
+    // and rows; a fresh lookup plans the new file too.
     import spark.implicits._
     t.append(Seq((java.sql.Timestamp.valueOf("2024-01-04 00:00:00"),
       2007L, "late", 42.0)).toDF("ts", "user_id", "tag", "value"))
-    val Some((mv2, _, cands2)) =
-      graft.ts.TsBloomSpecAccess.candidatesWithManifest(t, "user_id", Seq(2007L))
-    assert(mv2 == mVersion + 1, "revalidation must see the new commit")
-    assert(cands2.length == cands.length + 1,
-      s"the new file holding 2007 must join the candidates: $cands2")
-    assert(t.lookupEq("user_id", Seq(2007L)).count() ==
-      t.toDF.where(col("user_id") === 2007L).count())
+    assert(listedFiles(t, atV) == filesAtV)
+    assert(atV.count() == rowsAtV)
+    val fresh = plannedFiles(t, "user_id", Seq(2007L))
+    assert(fresh.length == 2 && fresh.exists(_.startsWith("p_date=2024-01-04/")),
+      s"the new file holding 2007 must be planned: $fresh")
+    assert(t.lookupEq("user_id", Seq(2007L)).count() == rowsAtV + 1)
+    // a foreign file the manifest does not know (it holds user 777, not
+    // 2007): the lookup plans every live file, and the live V2 scan keeps
+    // it while still skipping the indexed files that cannot hold 2007
+    Seq((java.sql.Timestamp.valueOf("2024-01-03 09:00:00"), 777L, "x", 1.0))
+      .toDF("ts", "user_id", "tag", "value")
+      .write.mode("append").parquet(store + "/p_date=2024-01-03")
+    val live = listedFiles(t, t.toDF)
+    val foreign = live.filterNot(f => fresh.contains(f) ||
+      graft.ts.TsBloomSpecAccess.liveDated(t).contains(f))
+    assert(foreign.nonEmpty, s"no foreign file among $live")
+    assert(plannedFiles(t, "user_id", Seq(2007L)).toSet == live.toSet)
+    val q = spark.read.format("graft-ts").load(store).where(col("user_id") === 2007L)
+    val scan = V2ScanAccess.parquetScan(q.queryExecution.executedPlan)
+    val kept = scan.fileIndex.listFiles(scan.partitionFilters, scan.dataFilters)
+      .flatMap(_.files).map(_.getPath.getName)
+    assert(kept.toSet == (fresh ++ foreign).map(_.split("/").last).toSet,
+      s"V2 must keep the 2 indexed holders of 2007 and the foreign file: $kept")
   }
 
   test("an all-null bloom column records an empty filter: probes skip the file, commits do not re-scan it") {
@@ -298,9 +363,9 @@ class TsBloomSpec extends SparkSpec {
     assert(java.util.Arrays.equals(day2Entry, emptyBits),
       "all-null file must record the canonical EMPTY filter")
     // … and every probe rejects it: null never equals anything
-    val cands = t.bloomCandidateFiles("user_id", Seq(1001L))
-    assert(cands.isDefined && cands.get.length == 1 &&
-      cands.get.head.startsWith("p_date=2024-01-01/"), s"got $cands")
+    val cands = plannedFiles(t, "user_id", Seq(1001L))
+    assert(cands.length == 1 &&
+      cands.head.startsWith("p_date=2024-01-01/"), s"got $cands")
     assert(t.lookupEq("user_id", Seq(1001L)).count() == 20)
   }
 
@@ -349,9 +414,11 @@ class TsBloomSpec extends SparkSpec {
     (files, bytes)
   }
 
-  test("a pinned range-only read never opens the descriptor; lookupEq's scan reuses " +
-      "the candidate pass's sidecar") {
-    val (t, _, _) = build("lazy")
+  test("range reads never read the Bloom sidecar; lookupEq reads it once, " +
+      "on its scan's first listing") {
+    val (t, store, fs) = build("lazy")
+    val sidecarLen = fs.getFileStatus(
+      new Path(store, f"_ts_versions/v${t.currentVersion.get}%08d.blooms")).getLen
     val pinned = t.openAt(t.currentVersion.get)
     val range = pinned.readRange(java.sql.Timestamp.valueOf("2024-01-02 00:00:00"),
       java.sql.Timestamp.valueOf("2024-01-02 00:00:30"))
@@ -362,11 +429,37 @@ class TsBloomSpec extends SparkSpec {
     // descriptor and the sidecar, and bloom-skips to the owning file
     val (eqFiles, eqBytes) = listFresh(pinned.toDF.where(col("user_id") === 2007L))
     assert(eqFiles == 1 && eqBytes > 0, s"equality read kept $eqFiles files, read $eqBytes bytes")
-    // lookupEq hands its index the sidecar and Bloom columns it already has
-    val lookup = t.lookupEq("user_id", Seq(2007L))
-    val (lookupFiles, lookupBytes) = listFresh(lookup)
-    assert(lookupFiles == 1 && lookupBytes == 0,
-      s"lookupEq's scan kept $lookupFiles files and read $lookupBytes bytes while listing")
+    // a live V2 load() plus the planning of a range-only scan: descriptor
+    // and manifest only, never the sidecar
+    def v2Listed(pred: org.apache.spark.sql.Column): (Int, Long) = {
+      var files = 0
+      val bytes = bytesReadHere {
+        val q = spark.read.format("graft-ts").load(store).where(pred)
+        val scan = V2ScanAccess.parquetScan(q.queryExecution.executedPlan)
+        files = scan.fileIndex.listFiles(scan.partitionFilters, scan.dataFilters)
+          .map(_.files.length).sum
+      }
+      (files, bytes)
+    }
+    val (v2RangeFiles, v2RangeBytes) = v2Listed(col("ts").between(
+      java.sql.Timestamp.valueOf("2024-01-02 00:00:00"),
+      java.sql.Timestamp.valueOf("2024-01-02 00:00:30")))
+    assert(v2RangeFiles == 1 && v2RangeBytes < sidecarLen,
+      s"V2 range read kept $v2RangeFiles files and read $v2RangeBytes bytes " +
+        s"(sidecar: $sidecarLen)")
+    val (v2EqFiles, v2EqBytes) = v2Listed(col("user_id") === 2007L)
+    assert(v2EqFiles == 1 && v2EqBytes >= v2RangeBytes + sidecarLen,
+      s"V2 equality read kept $v2EqFiles files and read $v2EqBytes bytes")
+    // lookupEq: frame construction plus its scan's listing read the
+    // sidecar exactly once
+    var lookup: DataFrame = null
+    var lookupFiles = 0
+    val lookupBytes = bytesReadHere {
+      lookup = t.lookupEq("user_id", Seq(2007L))
+      lookupFiles = listFresh(lookup)._1
+    }
+    assert(lookupFiles == 1 && lookupBytes >= sidecarLen && lookupBytes < 2 * sidecarLen,
+      s"lookupEq kept $lookupFiles files and read $lookupBytes bytes (sidecar: $sidecarLen)")
     assert(lookup.count() == t.toDF.where(col("user_id") === 2007L).count() &&
       lookup.count() > 0)
   }

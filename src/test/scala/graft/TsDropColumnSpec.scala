@@ -147,8 +147,10 @@ class TsDropColumnSpec extends SparkSpec {
     // under the restored membership, so pruning is live immediately
     val probe = back.toDF.select("user_id").where(col("user_id").isNotNull)
       .limit(1).collect().head.getLong(0)
-    val cands = back.bloomCandidateFiles("user_id", Seq(probe))
-    assert(cands.isDefined, "bloom index not authoritative after restore")
+    val A = graft.ts.TsBloomSpecAccess
+    assert(A.plannedFiles(back, "user_id", Seq(probe)).nonEmpty)
+    assert(A.plannedFiles(back, "user_id", Seq(Long.MinValue)).isEmpty,
+      "skip index not serving after restore")
     assert(back.lookupEq("user_id", Seq(probe)).count() ==
       back.toDF.where(col("user_id") === probe).count())
   }

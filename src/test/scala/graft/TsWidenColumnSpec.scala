@@ -82,13 +82,12 @@ class TsWidenColumnSpec extends SparkSpec {
     assert(wide.snapshotVersions.last._2 == "indexing",
       "the widen must re-harvest the column's bits under the wide type")
     // probes hash LONG now — the rebuilt bits must both prune and find
-    val cands = wide.bloomCandidateFiles("user_id", Seq(202L))
-    assert(cands.isDefined && cands.get.length == 1 &&
-      cands.get.head.startsWith("p_date=2024-03-02/"),
+    val cands = graft.ts.TsBloomSpecAccess.plannedFiles(wide, "user_id", Seq(202L))
+    assert(cands.length == 1 && cands.head.startsWith("p_date=2024-03-02/"),
       s"post-widen probe must prune to the owning file, got $cands")
     assert(wide.lookupEq("user_id", Seq(202L)).count() == 1,
       "a wrongly-skipped file would lose this row")
-    assert(wide.bloomCandidateFiles("user_id", Seq(999L)).get.isEmpty)
+    assert(graft.ts.TsBloomSpecAccess.plannedFiles(wide, "user_id", Seq(999L)).isEmpty)
   }
 
   test("widen with TWO declared bloom columns: the widened column still " +
@@ -116,18 +115,16 @@ class TsWidenColumnSpec extends SparkSpec {
     // stale INT-hashed bits must still be dropped so the indexing commit
     // genuinely re-harvests under LONG — otherwise probes hash the wide
     // type against narrow-type bits and silently skip narrow-era files
-    val cands = wide.bloomCandidateFiles("user_id", Seq(202L))
-    assert(cands.isDefined && cands.get.length == 1 &&
-      cands.get.head.startsWith("p_date=2024-03-02/"),
+    val cands = graft.ts.TsBloomSpecAccess.plannedFiles(wide, "user_id", Seq(202L))
+    assert(cands.length == 1 && cands.head.startsWith("p_date=2024-03-02/"),
       s"post-widen probe must prune to the owning file, got $cands")
     assert(wide.lookupEq("user_id", Seq(101L)).count() == 1,
       "narrow-era row lost: stale narrow-type bits were carried forward")
     assert(wide.lookupEq("user_id", Seq(202L)).count() == 1)
-    assert(wide.bloomCandidateFiles("user_id", Seq(999L)).get.isEmpty)
+    assert(graft.ts.TsBloomSpecAccess.plannedFiles(wide, "user_id", Seq(999L)).isEmpty)
     // the untouched second column's bits keep working across the widen
-    val other = wide.bloomCandidateFiles("other_id", Seq(9001L))
-    assert(other.isDefined && other.get.length == 1 &&
-      other.get.head.startsWith("p_date=2024-03-01/"),
+    val other = graft.ts.TsBloomSpecAccess.plannedFiles(wide, "other_id", Seq(9001L))
+    assert(other.length == 1 && other.head.startsWith("p_date=2024-03-01/"),
       s"the other bloom column must keep pruning, got $other")
     assert(wide.lookupEq("other_id", Seq(9002L)).count() == 1)
   }
@@ -194,16 +191,15 @@ class TsWidenColumnSpec extends SparkSpec {
     // probes hash decimal(20,2) now — rebuilt bits must prune AND find
     // (compact-long vs byte-array decimals hash differently, the same
     // trap as int/long)
-    val cands = wide.bloomCandidateFiles("amount",
+    val cands = graft.ts.TsBloomSpecAccess.plannedFiles(wide, "amount",
       Seq(new java.math.BigDecimal("222.22")))
-    assert(cands.isDefined && cands.get.length == 1 &&
-      cands.get.head.startsWith("p_date=2024-03-02/"),
+    assert(cands.length == 1 && cands.head.startsWith("p_date=2024-03-02/"),
       s"post-widen probe must prune to the owning file, got $cands")
     assert(wide.lookupEq("amount",
       Seq(new java.math.BigDecimal("111.11"))).count() == 1,
       "narrow-era row lost: stale narrow-type bits were carried forward")
-    assert(wide.bloomCandidateFiles("amount",
-      Seq(new java.math.BigDecimal("999.99"))).get.isEmpty)
+    assert(graft.ts.TsBloomSpecAccess.plannedFiles(wide, "amount",
+      Seq(new java.math.BigDecimal("999.99"))).isEmpty)
   }
 
   test("decimal refusals: scale change, precision shrink, and " +

@@ -112,7 +112,7 @@ class WriteTimeBloomSpec extends SparkSpec {
       assert(t.lookupEq(c, Seq(v)).count() == t.toDF.where(col(c) === lit(v)).count(),
         s"lookupEq on $c")
     }
-    assert(t.bloomCandidateFiles("nul", Seq("x")).get.isEmpty)
+    assert(graft.ts.TsBloomSpecAccess.plannedFiles(t, "nul", Seq("x")).isEmpty)
   }
 
   test("the V2 SQL INSERT path writes footer bits too") {

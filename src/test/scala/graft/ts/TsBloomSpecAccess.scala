@@ -1,10 +1,12 @@
 package graft.ts
 
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Test-side window into the `private[ts]` bloom sidecar reader, harvest
-  * and footer bits, so the Bloom specs can assert carry-forward coverage
-  * and write-time bits without widening the production API. */
+/** Test-side window into the `private[ts]` bloom sidecar reader, harvest,
+  * footer bits and manifest stats, and onto the files a lookup's plan
+  * reads, so the Bloom specs can assert carry-forward coverage, write-time
+  * bits and file skipping without widening the production API. */
 object TsBloomSpecAccess {
   def sidecar(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
       path: String, v: Long): Map[String, Map[String, Array[Byte]]] =
@@ -36,12 +38,25 @@ object TsBloomSpecAccess {
     TsTable.open(t.spark, t.path, t.tsCol)
   }
 
-  /** The candidate pass WITH the manifest it validated — (manifest
-    * version, manifest file names, candidates) — so the race spec can
-    * assert lookupEq's prune and scan share one authority check. */
-  def candidatesWithManifest(t: TsTable, column: String, values: Seq[Any])
-      : Option[(Long, Seq[String], Seq[String])] =
-    t.bloomCandidatesWithManifest(column, values).map { case (m, cands, _) =>
-      (m.version, m.files.map(_._1), cands)
-    }
+  /** The current manifest's per-file declared-stats spans. */
+  def colStats(t: TsTable): Map[String, Map[String, ColSpan]] =
+    TsTable.readManifest(t.spark, t.path, t.currentVersion.get).colStats
+
+  /** The table-relative files the `lookupEq` plan's file index lists —
+    * the files that lookup actually reads. */
+  def plannedFiles(t: TsTable, column: String, values: Seq[Any]): Seq[String] =
+    listedFiles(t, t.lookupEq(column, values))
+
+  /** The table-relative files the file index of `df`'s (V1) scan lists;
+    * `listedFiles(t, t.toDF)` is every live file. */
+  def listedFiles(t: TsTable, df: DataFrame): Seq[String] = {
+    val scan = df.queryExecution.sparkPlan.collectFirst {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }.get
+    def bare(p: Path): String = Path.getPathWithoutSchemeAndAuthority(p).toString
+    val root = bare(new Path(t.path)) + "/"
+    scan.relation.location.listFiles(scan.partitionFilters, scan.dataFilters)
+      .flatMap(_.files)
+      .map(f => bare(f.getPath).stripPrefix(root).stripPrefix(TsTable.ArchiveDir + "/"))
+  }
 }
