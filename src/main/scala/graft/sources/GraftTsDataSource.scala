@@ -9,10 +9,10 @@ import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.ScanBuilder
-import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
+import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, WriteBuilder}
 import org.apache.spark.sql.execution.datasources.PartitioningAwareFileIndex
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
-import org.apache.spark.sql.sources.DataSourceRegister
+import org.apache.spark.sql.sources.{DataSourceRegister, InsertableRelation}
 import org.apache.spark.sql.types.{DateType, StructField, StructType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -38,13 +38,15 @@ import scala.jdk.CollectionConverters._
   *     filters internally (`derivedDateBounds`) — users never mention
   *     `p_date`, yet day-directory pruning still happens (asserted in
   *     GraftTsSourceSpec).
-  *   - `df.write.format("graft-ts").mode("append").save(path)` — appends go
-  *     through [[GraftTsWriteBuilder]], which (a) validates the batch schema,
-  *     (b) has the ENGINE establish the sort/placement invariant via
-  *     `RequiresDistributionAndOrdering` (a range shuffle on ts + per-task
-  *     ascending sort — the V2-native form of `TsTable.append`'s
-  *     repartition + sortWithinPartitions), and (c) rejects rows that reach
-  *     back before the stored max ts per row, at write time. Out-of-order
+  *   - `df.write.format("graft-ts").mode("append").save(path)` and SQL
+  *     `INSERT INTO` run the facade's own [[TsTable.append]];
+  *     `mode("overwrite")` and `INSERT OVERWRITE` run [[TsTable.overwrite]]
+  *     (see [[GraftTsV2Table.newWriteBuilder]]). Spark's analyzer first
+  *     resolves the batch against the table schema (by name or by
+  *     position), so a mis-shaped batch fails before any job; the facade
+  *     then applies the one append contract — null and out-of-order ts
+  *     rejected, CHECK constraints, the declared `fileSpan` and
+  *     `maxRecordsPerFile` layout, one snapshot commit. Out-of-order
   *     appends FAIL, whatever API issued them.
   *
   * Table creation stays explicit (`TsTable.create`), mirroring the
@@ -52,11 +54,9 @@ import scala.jdk.CollectionConverters._
   * date-partitioned parquet dirs) via `TsTable.open`'s descriptor rules.
   *
   * 100 TB notes: reads are the stock distributed parquet scan over a
-  * partition-pruned file listing; writes are one range shuffle keyed by ts
-  * (contiguous time slices per task — heavy days split across tasks, quiet
-  * days share one), then task-local sequential parquet writes committed by
-  * driver-side renames of `_tmp-` staged files (invisible to concurrent
-  * readers until commit).
+  * partition-pruned file listing; writes are the facade's placement
+  * shuffle (per day, or per hour slot on `fileSpan = "hour"` tables) and
+  * parquet write, committed as one snapshot version.
   */
 final class GraftTsDataSource extends TableProvider with DataSourceRegister
     with org.apache.spark.sql.sources.StreamSourceProvider
@@ -202,8 +202,9 @@ final class GraftTsDataSource extends TableProvider with DataSourceRegister
 }
 
 /** One graft-ts store as a V2 Table: reads via the parquet V2 scan with
-  * connector-derived partition pruning, writes via the ordered-append
-  * enforcing [[GraftTsWriteBuilder]], row-level `DELETE FROM … WHERE …`
+  * connector-derived partition pruning, writes via the facade's own
+  * append and overwrite verbs ([[newWriteBuilder]]), row-level
+  * `DELETE FROM … WHERE …`
   * via the facade's copy-on-write [[TsTable.deleteWhere]] (so a SQL
   * delete prunes to hit files, archives the originals for pinned
   * readers, and commits a "delete" version exactly like the API verb). */
@@ -213,7 +214,7 @@ final class GraftTsV2Table(spark: SparkSession, val ts: TsTable,
     with org.apache.spark.sql.connector.catalog.SupportsDelete {
 
   // The connector's timestamp encoding is INT64 micros (see
-  // TsTable.appendValidated: INT96 is deprecated and unfilterable). The V2
+  // TsTable.tableWriter: INT96 is deprecated and unfilterable). The V2
   // parquet ScanBuilder decides ts-filter convertibility from THIS session
   // conf, so pin it at table resolution; per-file read still adapts to
   // whatever encoding each file actually has.
@@ -231,7 +232,8 @@ final class GraftTsV2Table(spark: SparkSession, val ts: TsTable,
 
   override def capabilities(): java.util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
-      TableCapability.TRUNCATE, TableCapability.OVERWRITE_BY_FILTER).asJava
+      TableCapability.V1_BATCH_WRITE, TableCapability.TRUNCATE,
+      TableCapability.OVERWRITE_BY_FILTER).asJava
 
   /** Partition-aware file listing rooted at the store; `p_date` resolves as
     * DateType through the user-specified schema, so directory values never
@@ -271,13 +273,31 @@ final class GraftTsV2Table(spark: SparkSession, val ts: TsTable,
       scanTsCol, filterable)
   }
 
+  /** Every connector write lands through the facade: `V1_BATCH_WRITE`
+    * makes Spark plan the write as a V1 fallback whose relation calls
+    * [[TsTable.append]], or [[TsTable.overwrite]] once the builder was
+    * truncated (`mode("overwrite")`, `INSERT OVERWRITE`). Spark's fallback
+    * always passes `overwrite = false` to the relation, so the builder's
+    * truncate flag decides. */
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     // a pinned version is an immutable historical state — writes target
     // the LIVE table only (drop the asOf option to append)
     if (snapshot.isDefined)
       throw new UnsupportedOperationException(
         s"${name()} is a pinned snapshot (asOf) — time-traveled tables are read-only")
-    new GraftTsWriteBuilder(spark, ts, info)
+    new WriteBuilder with SupportsTruncate {
+      private var truncating = false
+      override def truncate(): WriteBuilder = { truncating = true; this }
+      override def build(): V1Write = {
+        val replace = truncating
+        new V1Write {
+          override def toInsertableRelation: InsertableRelation = (data, _) => {
+            if (replace) ts.overwrite(data) else ts.append(data)
+            spark.catalog.refreshByPath(ts.path)
+          }
+        }
+      }
+    }
   }
 
   /** Translatability gate for SQL DELETE: every conjunct must map onto a

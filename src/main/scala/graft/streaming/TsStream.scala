@@ -115,10 +115,10 @@ case class ScdState(curType: String, validFromUs: Long, nEvents: Long,
   *
   * The reference is batch-only, but its ordered-append contract IS a stream
   * sink contract: each microbatch must start at-or-after the stored max
-  * timestamp. `appendSink` enforces exactly that — `TsTable.append` runs
-  * per microbatch inside `foreachBatch`, so a time-regressing batch fails
-  * the streaming query the same way the reference's `append` raises
-  * `ValueError`.
+  * timestamp. `appendSink` enforces exactly that — each microbatch lands
+  * through the graft-ts sink's `TsTable.append`, so a time-regressing
+  * batch fails the streaming query the same way the reference's `append`
+  * raises `ValueError`.
   *
   * Everything here composes builtin Structured Streaming operators —
   * incremental hash aggregation with watermark-based state eviction — so
@@ -1194,18 +1194,21 @@ object TsStream extends Serializable {
         p.right.map(_.ts), p.right.map(_.value)))
   }
 
-  /** Ordered streaming sink: lands each microbatch in `table` through the
-    * monotonic-append guard. The TsTable write path does its own day
-    * shuffle + within-partition sort, so files stay ts-sorted regardless of
-    * microbatch layout. */
+  /** Ordered streaming sink: the graft-ts sink
+    * ([[org.apache.spark.sql.graft.GraftTsStreamSink]]) over `table`, so
+    * each microbatch lands through the monotonic-append guard, and a
+    * checkpoint-replayed batch is skipped by the sink's manifest-stamped
+    * batch id instead of appended twice. The TsTable write path does its
+    * own day shuffle + within-partition sort, so files stay ts-sorted
+    * regardless of microbatch layout. */
   def appendSink(stream: DataFrame, table: TsTable, checkpointDir: String,
                  filesPerDay: Int = 1): DataStreamWriter[Row] =
-    stream.writeStream
+    stream.writeStream.format("graft-ts")
       .outputMode("append")
+      .option("path", table.path)
+      .option("tsCol", table.tsCol)
+      .option("filesPerDay", filesPerDay.toString)
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        table.append(batch, filesPerDay)
-      }
 
   /** Run a write until no more input is available, then stop (batch-style
     * drain; the production analogue is a continuous trigger). */

@@ -304,17 +304,41 @@ final class TsTable private (
                                     strict: Boolean,
                                     meta: Map[String, String]): Unit = {
     require(filesPerDay >= 1, "filesPerDay must be >= 1")
-    val names = batch.schema.fieldNames.toSeq
-    require(names.contains(tsCol), s"batch is missing ts column '$tsCol'")
-    require(names.toSet == storedSchema.fieldNames.toSet,
-      s"batch columns ${names.mkString(",")} != table columns ${storedSchema.fieldNames.mkString(",")}")
-    // Schema checks above run FIRST so a malformed batch gets the intended
+    // Schema checks run FIRST so a malformed batch gets the intended
     // message, not an AnalysisException out of the strict-mode window query.
+    requireTableColumns(batch)
     if (strict) {
       val pinned = batch.persist()
       try appendValidated(pinned, filesPerDay, strict = true, meta)
       finally pinned.unpersist()
     } else appendValidated(batch, filesPerDay, strict = false, meta)
+  }
+
+  /** A batch write carries exactly the table's columns (any order). */
+  private def requireTableColumns(batch: DataFrame): Unit = {
+    val names = batch.schema.fieldNames.toSeq
+    require(names.contains(tsCol), s"batch is missing ts column '$tsCol'")
+    require(names.toSet == storedSchema.fieldNames.toSet,
+      s"batch columns ${names.mkString(",")} != table columns ${storedSchema.fieldNames.mkString(",")}")
+  }
+
+  /** Replace the table's data with `batch` — the connector's
+    * `mode("overwrite")` and SQL `INSERT OVERWRITE`. The batch passes
+    * [[append]]'s validation except the stored-max guard (the data it
+    * would have to follow is replaced), is placed by the table's declared
+    * layout, and replaces EVERY live file through [[stageAndSwap]]: the
+    * replaced files are archived, so a reader pinned on an earlier version
+    * keeps resolving, and the "overwrite" version commits through the
+    * same conflict gates as every rewrite. An empty batch empties the
+    * table and still commits. */
+  private[graft] def overwrite(batch: DataFrame): Unit = {
+    requireTableColumns(batch)
+    val shape = validateBatch(batch, "overwrite")
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    stageAndSwap(listLiveFiles(fs), "overwrite", "_delete_tmp_") { tmp =>
+      shape.foreach(writePlaced(batch, _, filesPerDay = 1,
+        new Path(tmp, "dated").toString))
+    }
   }
 
   /** Schema-EVOLVING append — the one deliberate departure from `append`'s
@@ -987,7 +1011,7 @@ final class TsTable private (
     * only FALSE violates, NULL passes) — split out so callers that already
     * run an aggregate over the batch can RIDE the violation sums on it
     * instead of paying a second pass (r21 verdict: lifecycle keys are
-    * job-count bound; appendValidated fuses these into its stats agg). */
+    * job-count bound; validateBatch fuses these into its stats agg). */
   private def violationAggs(cs: Seq[(String, String)]) =
     cs.zipWithIndex.map { case ((_, sql), i) =>
       sum(when(coalesce(expr(sql), lit(true)) === false, 1L).otherwise(0L))
@@ -1035,15 +1059,23 @@ final class TsTable private (
   private def appendValidated(batch: DataFrame, filesPerDay: Int,
                               strict: Boolean,
                               meta: Map[String, String] = Map.empty): Unit = {
-    // µs-instant physical encoding: INT96 (Spark's parquet default) is
-    // deprecated AND unfilterable — ParquetFilters cannot build row-group
-    // predicates over INT96, so the sorted-row-group stats-skipping this
-    // table's read path depends on silently degrades to post-scan
-    // filtering. INT64 micros is the lossless match for the table's data
-    // model. Session-wide for the same reason as Tables.init: the parquet
-    // writer re-reads session conf at execution time.
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     if (strict) requireSortedBatch(batch)
+    validateBatch(batch, "append").foreach { shape => // empty batch: no-op
+      maxDt.foreach { cur =>
+        if (shape.minTs.before(cur))
+          throw new IllegalArgumentException(
+            s"append: batch min ts ${shape.minTs} precedes stored max ts $cur " +
+              "(the table is append-ordered; out-of-order appends are rejected)")
+      }
+      writePlaced(batch, shape, filesPerDay, path)
+      commitVersion("append", meta = meta)
+    }
+  }
+
+  /** The one stats aggregate every batch write validates with: rejects
+    * null ts values and CHECK violations, and sizes the placement (days,
+    * and hours when the table slots by hour). None for an empty batch. */
+  private def validateBatch(batch: DataFrame, verb: String): Option[BatchShape] = {
     // the hour-count arm only when the table slots by hour. Day and hour
     // counts are set sizes, not DISTINCT aggregates: a DISTINCT plans an
     // Expand and a second shuffle (one more job per append), while each
@@ -1057,25 +1089,26 @@ final class TsTable private (
       else baseAggs
     // CHECK-violation sums RIDE the stats aggregate (one batch pass instead
     // of two — the r22 lifecycle job-batching item).
-    // Rejection order is unchanged: empty-batch no-op, then null-ts, then
-    // the first violated constraint — all read from the same row.
+    // Rejection order: empty batch, then null-ts, then the first violated
+    // constraint — all read from the same row.
     val aggs = statAggs ++ violationAggs(tableChecks)
     val stats = batch.agg(aggs.head, aggs.tail: _*).head
-    if (stats.getLong(1) == 0L) return // empty batch: no-op
+    if (stats.getLong(1) == 0L) return None
     if (stats.getLong(1) != stats.getLong(2))
-      throw new IllegalArgumentException(s"append: null values in '$tsCol'")
+      throw new IllegalArgumentException(s"$verb: null values in '$tsCol'")
     firstViolationIn(stats, statAggs.size, tableChecks).foreach {
-      case (n, cnt) => throwViolation("append", n, cnt)
+      case (n, cnt) => throwViolation(verb, n, cnt)
     }
-    val nDays = stats.getLong(3)
-    val batchMin = stats.getAs[Timestamp](0)
-    maxDt.foreach { cur =>
-      if (batchMin.before(cur))
-        throw new IllegalArgumentException(
-          s"append: batch min ts $batchMin precedes stored max ts $cur " +
-            "(the table is append-ordered; out-of-order appends are rejected)")
-    }
+    Some(BatchShape(stats.getAs[Timestamp](0), stats.getLong(3),
+      if (hourly) stats.getLong(4) else 0L))
+  }
 
+  /** Place a validated batch by the table's declared layout and write it
+    * as `p_date` directories under `dest` (the table root for an append, a
+    * staging dir for an overwrite). */
+  private def writePlaced(batch: DataFrame, shape: BatchShape,
+                          filesPerDay: Int, dest: String): Unit = {
+    val hourly = writeOptions.fileSpan == "hour"
     val withDate = withFieldIds(batch
       .select(storedSchema.fieldNames.map(col).toSeq: _*)) // canonical column order
       .withColumn(PartCol, to_date(col(tsCol)))
@@ -1095,20 +1128,19 @@ final class TsTable private (
     // index serves as the effective sub-day partition at planning time.
     val placed =
       if (hourly && filesPerDay == 1)
-        withDate.repartitionByRange(stats.getLong(4).toInt.max(1),
+        withDate.repartitionByRange(shape.hours.toInt.max(1),
           col(PartCol), date_trunc("hour", col(tsCol)))
       else if (hourly)
         withDate.repartitionByRange(
-          (stats.getLong(4) * filesPerDay).toInt.max(1),
+          (shape.hours * filesPerDay).toInt.max(1),
           col(PartCol), date_trunc("hour", col(tsCol)), col(tsCol))
       else if (filesPerDay == 1) withDate.repartition(col(PartCol))
       else withDate.repartitionByRange(
-        (nDays * filesPerDay).toInt.max(1), col(PartCol), col(tsCol))
+        (shape.days * filesPerDay).toInt.max(1), col(PartCol), col(tsCol))
     val writer = tableWriter(
       placed.sortWithinPartitions(col(PartCol), col(tsCol)), "append")
     writeOptions.maxRecordsPerFile.foreach(n => writer.option("maxRecordsPerFile", n.toString))
-    writer.partitionBy(PartCol).save(path)
-    commitVersion("append", meta = meta)
+    writer.partitionBy(PartCol).save(dest)
   }
 
   /** The writer every table data write goes through: the table's parquet
@@ -1118,6 +1150,14 @@ final class TsTable private (
     * harvest scan). */
   private def tableWriter(df: DataFrame, mode: String)
       : org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] = {
+    // µs-instant physical encoding: INT96 (Spark's parquet default) is
+    // deprecated AND unfilterable — ParquetFilters cannot build row-group
+    // predicates over INT96, so the sorted-row-group stats-skipping this
+    // table's read path depends on silently degrades to post-scan
+    // filtering. INT64 micros is the lossless match for the table's data
+    // model. Session-wide for the same reason as Tables.init: the parquet
+    // writer re-reads session conf at execution time.
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     val w = df.write.format(TsTable.Fmt).mode(mode)
       .option("compression", writeOptions.codec)
     writeOptions.rowGroupBytes.foreach(b => w.option("parquet.block.size", b.toString))
@@ -1180,8 +1220,8 @@ final class TsTable private (
     * per-file sortedness invariant the append path writes).
     *
     * WHY: every `append` that touches a day adds at least one file to it, so
-    * a day fed by many small batches (the streaming `foreachBatch` sink is
-    * the worst case: one file per micro-batch) accumulates files whose
+    * a day fed by many small batches (the graft-ts streaming sink is the
+    * worst case: one file per micro-batch) accumulates files whose
     * per-file open/footer cost eventually dominates `readRange` — the
     * classic small-files problem. The reference never meets it (HDF5 rows
     * append in place to ONE table per day — `[pub: tstables/tstable.py —
@@ -1991,7 +2031,7 @@ final class TsTable private (
   }
 
   /** The copy-on-write swap every rewrite verb commits through
-    * ([[cowExec]]'s verbs and [[compactDays]]): `stage` writes the
+    * ([[cowExec]]'s verbs, [[compactDays]] and [[overwrite]]): `stage` writes the
     * replacement files under `<tmp>/dated` (day directories) and
     * `<tmp>/loose` (root-level files); this method owns everything else,
     * in this order:
@@ -2030,8 +2070,6 @@ final class TsTable private (
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val (guarded, planV) = guardDisplaced(displaced, action)
-    // same µs-instant encoding rationale as appendValidated
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     // WRITER-UNIQUE staging (raced in RewriteConflictStressSpec): a shared
     // name let one racer delete another's in-flight staging out from under
     // its write job. A crashed run's temp is reclaimed by vacuumStaging.
@@ -2713,7 +2751,7 @@ final class TsTable private (
     // CAS-retry loop: losing the rename race means another writer took the
     // version number — re-list (the listing then includes BOTH writers'
     // files: each manifest is a consistent point-in-time state) and take
-    // the next number. Without the retry, a V2 write whose data renames
+    // the next number. Without the retry, a write whose data files
     // already landed would report FAILURE for a metadata race, leaving a
     // torn visible-but-"failed" batch a retry would double-append.
     var next = 0L
@@ -2903,9 +2941,9 @@ final class TsTable private (
   }
 
   /** Reclaim crash leftovers — the janitor every staged-write design
-    * needs: a killed rewrite leaves `_delete_tmp*`/`_compact_tmp_*`
-    * directories, a killed V2 write leaves `_tmp-*` files inside day
-    * partitions. All are invisible to reads (the underscore rule) but
+    * needs: a killed rewrite or overwrite leaves `_delete_tmp*` /
+    * `_compact_tmp_*` directories, and stray `_tmp-*` files can sit inside
+    * day partitions. All are invisible to reads (the underscore rule) but
     * hold real bytes forever. Deletes those older than `olderThanMs`
     * (mtime; default 24 h) and returns the paths removed. A RUNNING
     * rewrite is protected structurally, not by age: its in-flight marker
@@ -3107,25 +3145,25 @@ final class TsTable private (
     * return the first commit stamped `streamSink == sinkId`. In steady
     * state the newest append carries the stamp, so this is one read;
     * bounded by retained history when the sink has never written. */
-  def lastSinkBatch(sinkId: String): Option[Long] = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    TsTable.listVersions(spark, path).sorted.reverse.iterator
-      .map(v => TsTable.readManifestHeaderAt(fs, path, v))
-      .collectFirst {
-        case h if h.get("streamSink").contains(sinkId) &&
-          h.contains("streamBatch") => h("streamBatch").toLong
-      }
-  }
+  def lastSinkBatch(sinkId: String): Option[Long] =
+    headersNewestFirst.collectFirst {
+      case h if h.get("streamSink").contains(sinkId) &&
+        h.contains("streamBatch") => h("streamBatch").toLong
+    }
 
-  /** Newest committed value of a manifest-header meta key (same
-    * newest→oldest header walk as [[lastSinkBatch]]) — how consumers that
-    * persist their own progress inside the table's commit log (the
-    * rollup sync cursor) read it back. */
-  private[ts] def latestMeta(key: String): Option[String] = {
+  /** Newest committed value of a manifest-header meta key (the same
+    * header walk as [[lastSinkBatch]]) — how consumers that persist their
+    * own progress inside the table's commit log (the rollup sync cursor)
+    * read it back. */
+  private[ts] def latestMeta(key: String): Option[String] =
+    headersNewestFirst.collectFirst { case h if h.contains(key) => h(key) }
+
+  /** Committed manifest headers, newest→oldest, read lazily (one line
+    * each) so a walk stops at the first header it needs. */
+  private def headersNewestFirst: Iterator[Map[String, String]] = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     TsTable.listVersions(spark, path).sorted.reverse.iterator
       .map(v => TsTable.readManifestHeaderAt(fs, path, v))
-      .collectFirst { case h if h.contains(key) => h(key) }
   }
 
   /** The live V2 scan's file-skip index, from ONE resolved version (so
@@ -3546,6 +3584,11 @@ object TsTable {
   /** What a [[TsTable.mergeInto]] did: matched-row updates vs new-row
     * inserts (both 0 = nothing happened, no version committed). */
   final case class MergeResult(updated: Long, inserted: Long)
+
+  /** A validated non-empty batch: its min ts (the append guard's operand)
+    * and the distinct days and hours (0 unless the table slots by hour)
+    * its placement sizes on. */
+  private final case class BatchShape(minTs: Timestamp, days: Long, hours: Long)
 
   /** localCheckpoint with a handle that ACTUALLY frees the checkpoint
     * blocks: `Dataset.unpersist()` is a no-op on checkpoint results (the
@@ -4058,7 +4101,7 @@ object TsTable {
   /** Closed ts span (epoch µs) of one parquet file, from footer metadata
     * ONLY — no data pages read. Usable iff the ts column is physically
     * INT64 TIMESTAMP (µs/ms/ns, UTC-adjusted — every engine-written file
-    * is µs, `appendValidated`'s outputTimestampType pin) and EVERY row
+    * is µs, `tableWriter`'s outputTimestampType pin) and EVERY row
     * group carries non-null min/max statistics. Anything else → None and
     * the file just never gets skipped (INT96 attachments, statless
     * writers, local-semantics NTZ — soundness over coverage). Static and

@@ -19,8 +19,9 @@ import org.apache.spark.sql.execution.streaming.Sink
   * Each micro-batch lands through the facade's ordered-append path (day
   * shuffle + within-partition ts sort + monotonicity guard + span-stats
   * commit), identical to `TsTable.append` — a time-regressing batch fails
-  * the QUERY, the same contract the `foreachBatch`-based
-  * `TsStream.appendSink` enforces, now without user-side glue.
+  * the QUERY. This is the one streaming write path: `TsStream.appendSink`
+  * is this sink with the table's path and ts column filled in, and batch
+  * writes through the connector land through the same `TsTable.append`.
   *
   * Exactly-once: every commit this sink produces is stamped with a sink
   * identity (derived from the query's checkpoint location) and the

@@ -112,7 +112,7 @@ final class GraftTsStreamSource(sqlContext: SQLContext, path: String,
 
   override def getOffset: Option[Offset] = {
     // re-open per poll: the listing must see commits made through OTHER
-    // handles (the facade, the V2 writer, a foreign session). The engine
+    // handles (the facade, the connector, a foreign session). The engine
     // dedups: an offset equal to the last committed one plans no batch.
     val live = TsTable.open(spark, path).currentVersion.getOrElse(return None)
     val capped = maxVersionsPerTrigger match {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ts.TsTable
+import graft.ts.{TsTable, TsWriteOptions}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
@@ -214,16 +214,12 @@ class GraftTsSourceSpec extends SparkSpec {
       Seq("ts", "user_id", "value"))
   }
 
-  test("a day spanning multiple range-partitions stays sorted per file") {
+  test("an hour-slotted day written through the connector stays sorted per file") {
     val dir = freshDir()
-    TsTable.create(spark, dir, schema)
-    // enough same-day rows that the ts range shuffle splits the day; AQE
-    // would (correctly) coalesce this tiny shuffle back to one partition,
-    // so pin it off to observe the at-scale multi-slice shape
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try append(mkRows((0 until 400).map(i =>
+    TsTable.create(spark, dir, schema, writeOptions = TsWriteOptions(fileSpan = "hour"))
+    // seven hours of one day: the table's hour slots split the day
+    append(mkRows((0 until 400).map(i =>
       (f"2024-03-01 ${i / 60 + 1}%02d:${i % 60}%02d:00", i.toLong, i.toDouble))), dir)
-    finally spark.conf.set("spark.sql.adaptive.enabled", "true")
     val files = new java.io.File(s"$dir/p_date=2024-03-01")
       .listFiles().filter(_.getName.startsWith("part-"))
     assert(files.length > 1, "expected the day split across >1 sorted files")
@@ -234,6 +230,77 @@ class GraftTsSourceSpec extends SparkSpec {
         s"${f.getName} not sorted")
     }
     assert(v2(dir).count() == 400)
+  }
+
+  /** Every live data file of `dir` with its row count. */
+  private def liveFiles(dir: String): Seq[(String, Long)] =
+    new java.io.File(dir).listFiles().filter(_.getName.startsWith("p_date="))
+      .flatMap(_.listFiles().filter(_.getName.startsWith("part-")))
+      .map(f => f.getPath -> spark.read.parquet(f.getPath).count())
+      .sortBy(_._1).toSeq
+
+  test("SQL INSERT into a fileSpan=hour table writes no file spanning two hours") {
+    val dir = freshDir()
+    TsTable.create(spark, dir, schema, writeOptions = TsWriteOptions(fileSpan = "hour"))
+    spark.sql(s"INSERT INTO graft_ts.`$dir` VALUES " + (0 until 12).map { i =>
+      f"(TIMESTAMP '2024-03-01 ${i / 3 + 1}%02d:${i % 3 * 20}%02d:00', $i, $i.0)"
+    }.mkString(", "))
+    val files = liveFiles(dir)
+    assert(files.map(_._2).sum == 12L)
+    files.foreach { case (f, _) =>
+      val hours = spark.read.parquet(f)
+        .select(countDistinct(date_trunc("hour", col("ts")))).head.getLong(0)
+      assert(hours == 1L, s"$f holds rows of $hours hours")
+    }
+    assert(files.length == 4)
+  }
+
+  test("a maxRecordsPerFile table caps the files a connector append writes") {
+    val dir = freshDir()
+    TsTable.create(spark, dir, schema,
+      writeOptions = TsWriteOptions(maxRecordsPerFile = Some(10L)))
+    append(mkRows((0 until 45).map(i =>
+      (f"2024-03-01 10:${i}%02d:00", i.toLong, i.toDouble))), dir)
+    val files = liveFiles(dir)
+    assert(files.map(_._2).sum == 45L)
+    assert(files.forall(_._2 <= 10L), s"files over the cap: $files")
+  }
+
+  test("a connector overwrite swaps through the staged copy-on-write " +
+      "protocol: a failure after staging leaves the table untouched") {
+    val dir = freshDir()
+    val t = TsTable.create(spark, dir, schema)
+    append(mkRows(Seq(("2024-03-01 10:00:00", 1L, 1.0),
+      ("2024-03-02 10:00:00", 2L, 2.0))), dir)
+    val filesBefore = liveFiles(dir)
+    val versionBefore = t.currentVersion
+    val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
+    TsTable.rewriteRaceHook = (phase, action) =>
+      if (phase == "staged" && action == "overwrite") {
+        fired.set(true)
+        throw new IllegalStateException("injected failure after staging")
+      }
+    try intercept[Exception](mkRows(Seq(("2024-04-01 10:00:00", 9L, 9.0)))
+      .write.format("graft-ts").mode("overwrite").save(dir))
+    finally TsTable.rewriteRaceHook = (_, _) => ()
+    assert(fired.get(), "the staged hook never fired for the overwrite")
+    assert(liveFiles(dir) == filesBefore)
+    assert(v2(dir).count() == 2L)
+    assert(t.currentVersion == versionBefore)
+  }
+
+  test("an empty connector overwrite empties the table and commits one " +
+      "overwrite version") {
+    val dir = freshDir()
+    val t = TsTable.create(spark, dir, schema)
+    append(mkRows(Seq(("2024-03-01 10:00:00", 1L, 1.0))), dir)
+    val before = t.snapshotVersions
+    mkRows(Seq.empty).write.format("graft-ts").mode("overwrite").save(dir)
+    assert(v2(dir).count() == 0L)
+    assert(liveFiles(dir).isEmpty)
+    val after = t.snapshotVersions
+    assert(after.dropRight(1) == before)
+    assert(after.last._2 == "overwrite")
   }
 
   test("SQL surface: SELECT over the connector prunes; INSERT enforces the guard") {

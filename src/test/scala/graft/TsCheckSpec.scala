@@ -10,7 +10,7 @@ import java.sql.Timestamp
 
 /** CHECK constraints: declared once, enforced on every write face (facade
   * append, schema-evolving append, update/merge rewrites, SQL INSERT
-  * through the V2 writer), SQL semantics (NULL passes, FALSE violates),
+  * through the connector), SQL semantics (NULL passes, FALSE violates),
   * persisted in the descriptor. */
 class TsCheckSpec extends SparkSpec {
 

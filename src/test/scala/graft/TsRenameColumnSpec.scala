@@ -207,9 +207,9 @@ class TsRenameColumnSpec extends SparkSpec {
   test("V2-written files (SQL INSERT INTO) carry field ids too: a rename " +
       "after a connector write serves the inserted rows under the new label") {
     val (t, store) = build("v2write")
-    // a connector write lands through GraftTsWrite (ParquetUtils
-    // prepareWrite over the id-stamped table schema) — if that path
-    // dropped the ids, the rename below would silently null this row
+    // a connector write lands through TsTable.append, whose writer
+    // re-attaches the descriptor's field ids — if that path dropped the
+    // ids, the rename below would silently null this row
     spark.sql(s"INSERT INTO graft_ts.`$store` VALUES " +
       "(990001, TIMESTAMP '2024-01-02 00:00:01', 424242, 'purchase', 77.25, '{}')")
     val renamed = TsTable.open(spark, store).renameColumn("value", "px")
