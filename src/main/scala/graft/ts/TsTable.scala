@@ -44,16 +44,32 @@ import scala.reflect.ClassTag
 final class TsTable private (
     val spark: SparkSession,
     val path: String,
-    val tsCol: String,
-    private val storedSchema: StructType,
-    val writeOptions: TsWriteOptions,
-    private val tableChecks: Seq[(String, String)] = Seq.empty,
-    private val droppedCols: Seq[String] = Seq.empty,
-    // field-id high-water (0 = pre-id table, by-name semantics): the next
-    // id any evolution verb may assign; never decreases, ids never reused
-    private val nextFieldId: Long = 0L) {
+    private[ts] val desc: TsDescriptor) {
 
   import TsTable._
+
+  def tsCol: String = desc.tsCol
+
+  def writeOptions: TsWriteOptions = desc.options
+
+  def schema: StructType = desc.schema
+
+  /** This handle, or a fresh one on the live descriptor when another
+    * handle changed the stored descriptor since this one was opened — the
+    * one stale-handle rule. Every verb that rewrites files or writes the
+    * descriptor runs on the handle it returns: through a stale handle a
+    * rewrite would drop columns another handle added, judge writes
+    * against CHECKs that are no longer the table's, and write back a
+    * descriptor erasing another handle's columns, CHECKs, index
+    * declarations and drop tombstones. `append`, `overwrite` and the reads
+    * keep this handle's own descriptor on purpose: a stale, narrower
+    * projection stays valid to read and to append (the live schema reads
+    * its missing columns as null); a CHECK added through another handle
+    * gates them once the handle is reopened. */
+  private def live: TsTable = {
+    val serving = TsTable.open(spark, path, tsCol)
+    if (serving.desc == desc) this else serving
+  }
 
   /** Re-attach the descriptor's parquet field ids to a frame about to be
     * WRITTEN as table data. Id metadata rides AttributeReferences through
@@ -64,19 +80,19 @@ final class TsTable private (
     * before each write funnel makes ids unconditional; pass-through for
     * pre-id tables and non-table columns (`p_date`). */
   private def withFieldIds(df: DataFrame): DataFrame =
-    if (!hasFieldIds(storedSchema)) df
+    if (!hasFieldIds(schema)) df
     else {
-      val byName = storedSchema.fields.map(f => f.name -> f.metadata).toMap
+      val byName = schema.fields.map(f => f.name -> f.metadata).toMap
       df.select(df.columns.map { n =>
         byName.get(n).fold(col(n))(m => col(n).as(n, m))
       }.toIndexedSeq: _*)
     }
 
   /** Declared CHECK constraints, (name, SQL predicate) — see [[addCheck]]. */
-  def checks: Seq[(String, String)] = tableChecks
+  def checks: Seq[(String, String)] = desc.checks
 
   /** Names retired by [[dropColumns]] — see its re-add guard. */
-  def dropped: Seq[String] = droppedCols
+  def dropped: Seq[String] = desc.dropped
 
   /** Full table as a DataFrame (data columns only; partition column dropped). */
   def toDF: DataFrame = raw.drop(PartCol)
@@ -89,7 +105,7 @@ final class TsTable private (
     * file falls back to by-name resolution instead of refusing. */
   def raw: DataFrame =
     spark.read.format(TsTable.Fmt)
-      .schema(withPartCol(storedSchema)).load(path)
+      .schema(withPartCol(schema)).load(path)
 
   /** Closed-interval time-range read: rows with `start <= ts <= end`
     * (the reference filters `timestamp >= start & timestamp <= end`).
@@ -146,7 +162,7 @@ final class TsTable private (
     * a needle query (one user's rows, one bad producer's ids) from a
     * full-table scan into O(files actually holding the needle) reads. */
   def lookupEq(column: String, values: Seq[Any]): DataFrame = {
-    require(storedSchema.fieldNames.contains(column),
+    require(schema.fieldNames.contains(column),
       s"lookupEq: unknown column '$column'")
     require(values.nonEmpty && values.forall(_ != null),
       "lookupEq: need at least one non-null probe value")
@@ -318,8 +334,8 @@ final class TsTable private (
   private def requireTableColumns(batch: DataFrame): Unit = {
     val names = batch.schema.fieldNames.toSeq
     require(names.contains(tsCol), s"batch is missing ts column '$tsCol'")
-    require(names.toSet == storedSchema.fieldNames.toSet,
-      s"batch columns ${names.mkString(",")} != table columns ${storedSchema.fieldNames.mkString(",")}")
+    require(names.toSet == schema.fieldNames.toSet,
+      s"batch columns ${names.mkString(",")} != table columns ${schema.fieldNames.mkString(",")}")
   }
 
   /** Replace the table's data with `batch` — the connector's
@@ -359,13 +375,17 @@ final class TsTable private (
     * Returns the handle carrying the union schema (TsTable is immutable;
     * `this` keeps serving the old projection, which stays valid). */
   def appendEvolved(batch: DataFrame, filesPerDay: Int = 1,
-                    strict: Boolean = false): TsTable = {
+                    strict: Boolean = false): TsTable =
+    live.appendEvolvedLive(batch, filesPerDay, strict)
+
+  private def appendEvolvedLive(batch: DataFrame, filesPerDay: Int,
+                                strict: Boolean): TsTable = {
     require(batch.schema.fieldNames.contains(tsCol),
       s"batch is missing ts column '$tsCol'")
     require(!batch.schema.fieldNames.contains(PartCol),
       s"'$PartCol' is reserved for the partition column")
     val batchFields = batch.schema.fields.map(f => f.name -> f).toMap
-    storedSchema.fields.foreach { f =>
+    schema.fields.foreach { f =>
       batchFields.get(f.name).foreach { bf =>
         require(bf.dataType == f.dataType,
           s"append: column '${f.name}' type ${bf.dataType.simpleString} " +
@@ -373,30 +393,29 @@ final class TsTable private (
       }
     }
     val added = batch.schema.fields
-      .filterNot(f => storedSchema.fieldNames.contains(f.name))
+      .filterNot(f => schema.fieldNames.contains(f.name))
     // the dropColumns re-add guard: un-rewritten files still physically
     // carry a dropped column's OLD bytes, and parquet resolves by name —
     // re-adding the name would resurrect stale values row-by-row
     val retired = added.map(_.name)
-      .filter(n => droppedCols.exists(_.equalsIgnoreCase(n)))
+      .filter(n => dropped.exists(_.equalsIgnoreCase(n)))
     require(retired.isEmpty,
       s"append: column(s) ${retired.mkString(", ")} were dropped from this " +
         "table and files may still carry their old bytes — re-adding the " +
         "name would resurrect stale values; use a new column name")
     val union = StructType(
-      storedSchema.fields.map(_.copy(nullable = true)) ++
+      schema.fields.map(_.copy(nullable = true)) ++
         stampAdded(added.map(_.copy(nullable = true))))
-    val bumpedNext = bumpNextFieldId(added.length)
     // the descriptor must also be rewritten when a NARROWER batch is about
     // to null-fill a column the stored schema declares non-nullable —
     // otherwise Catalyst's non-null constraint propagation would reason
     // (and codegen would assume) over a lie
-    val needRewrite = added.nonEmpty || storedSchema.fields.exists(f =>
+    val needRewrite = added.nonEmpty || schema.fields.exists(f =>
       !f.nullable && !batchFields.contains(f.name))
     val evolved =
       if (!needRewrite) this
-      else new TsTable(spark, path, tsCol, union, writeOptions, tableChecks,
-        droppedCols, bumpedNext)
+      else new TsTable(spark, path, desc.copy(schema = union,
+        nextFieldId = bumpNextFieldId(added.length)))
     val aligned = batch.select(union.fields.map(f =>
       if (batchFields.contains(f.name)) col(f.name)
       else lit(null).cast(f.dataType).as(f.name)).toSeq: _*)
@@ -406,25 +425,23 @@ final class TsTable private (
     // between the two leaves written columns invisible behind the old
     // descriptor — recovered by the next evolve — never a corrupt table.
     evolved.append(aligned, filesPerDay, strict)
-    if (needRewrite)
-      TsTable.writeDescriptor(spark, path, union, tsCol, writeOptions,
-        tableChecks, droppedCols, bumpedNext)
+    if (needRewrite) TsTable.writeDescriptor(spark, path, evolved.desc)
     evolved
   }
 
   /** Fresh ids for evolution-added columns (pass-through on pre-id
     * tables); ids come from the high-water and are never reused. */
   private def stampAdded(added: Seq[StructField]): Seq[StructField] =
-    if (!hasFieldIds(storedSchema) || added.isEmpty) added
+    if (!hasFieldIds(schema) || added.isEmpty) added
     else stampFieldIds(StructType(added), effectiveNextFieldId).fields.toSeq
 
   private[ts] def effectiveNextFieldId: Long =
-    if (!hasFieldIds(storedSchema)) 0L
-    else math.max(nextFieldId,
-      storedSchema.fields.map(TsTable.fieldId).max + 1)
+    if (!hasFieldIds(schema)) 0L
+    else math.max(desc.nextFieldId,
+      schema.fields.map(TsTable.fieldId).max + 1)
 
   private def bumpNextFieldId(added: Int): Long =
-    if (!hasFieldIds(storedSchema)) 0L else effectiveNextFieldId + added
+    if (!hasFieldIds(schema)) 0L else effectiveNextFieldId + added
 
   /** Pure-DDL schema evolution — [[appendEvolved]]'s descriptor rule
     * without a batch (the `ALTER TABLE … ADD COLUMNS` verb, wired to SQL
@@ -438,21 +455,12 @@ final class TsTable private (
     * and the reserved partition column are refused. Returns the handle
     * carrying the widened schema (`this` keeps serving its projection,
     * the appendEvolved rule). */
-  def addColumns(cols: Seq[StructField]): TsTable = {
-    // pure-DDL verbs share the rewrite verbs' stale-handle rule: the
-    // descriptor re-writes from THIS handle's state, so a handle held
-    // across another session's evolution would silently drop the newer
-    // columns/checks/options — delegate to the live descriptor's handle
-    // when ANY descriptor state moved.
-    val serving = TsTable.open(spark, path, tsCol)
-    if (serving.schema != storedSchema || serving.checks != tableChecks ||
-        serving.dropped != droppedCols ||
-        serving.writeOptions != writeOptions)
-      return serving.addColumns(cols)
+  def addColumns(cols: Seq[StructField]): TsTable = live.addColumnsLive(cols)
 
+  private def addColumnsLive(cols: Seq[StructField]): TsTable = {
     require(cols.nonEmpty, "addColumns: no columns")
     val clash = cols.map(_.name).filter(n =>
-      storedSchema.fieldNames.exists(_.equalsIgnoreCase(n)))
+      schema.fieldNames.exists(_.equalsIgnoreCase(n)))
     require(clash.isEmpty,
       s"addColumns: column(s) ${clash.mkString(", ")} already exist")
     require(!cols.exists(_.name.equalsIgnoreCase(PartCol)),
@@ -462,20 +470,15 @@ final class TsTable private (
     require(dup.isEmpty, s"addColumns: duplicate column(s) ${dup.mkString(", ")}")
     // the dropColumns re-add guard (see appendEvolved's rationale)
     val retired = cols.map(_.name)
-      .filter(n => droppedCols.exists(_.equalsIgnoreCase(n)))
+      .filter(n => dropped.exists(_.equalsIgnoreCase(n)))
     require(retired.isEmpty,
       s"addColumns: column(s) ${retired.mkString(", ")} were dropped from " +
         "this table and files may still carry their old bytes — re-adding " +
         "the name would resurrect stale values; use a new column name")
-    val union = StructType(storedSchema.fields ++
+    val union = StructType(schema.fields ++
       stampAdded(cols.map(_.copy(nullable = true))))
-    val bumpedNext = bumpNextFieldId(cols.length)
-    TsTable.writeDescriptor(spark, path, union, tsCol, writeOptions,
-      tableChecks, droppedCols, bumpedNext)
-    val t = new TsTable(spark, path, tsCol, union, writeOptions, tableChecks,
-      droppedCols, bumpedNext)
-    t.commitVersion("evolve", Some(union))
-    t
+    TsTable.install(spark, path, desc.copy(schema = union,
+      nextFieldId = bumpNextFieldId(cols.length)), Some("evolve"))
   }
 
   /** Pure-DDL column DROP — [[addColumns]]'s inverse (`ALTER TABLE …
@@ -506,52 +509,30 @@ final class TsTable private (
     * (`this` keeps serving its projection, the appendEvolved rule —
     * which for a DROPPED column means a stale handle still reads it;
     * reopen for the narrowed view). */
-  def dropColumns(names: Seq[String]): TsTable = {
-    // pure-DDL verbs share the rewrite verbs' stale-handle rule: the
-    // descriptor re-writes from THIS handle's state, so a handle held
-    // across another session's evolution would silently drop the newer
-    // columns/checks/options — delegate to the live descriptor's handle
-    // when ANY descriptor state moved.
-    val serving = TsTable.open(spark, path, tsCol)
-    if (serving.schema != storedSchema || serving.checks != tableChecks ||
-        serving.dropped != droppedCols ||
-        serving.writeOptions != writeOptions)
-      return serving.dropColumns(names)
+  def dropColumns(names: Seq[String]): TsTable = live.dropColumnsLive(names)
 
+  private def dropColumnsLive(names: Seq[String]): TsTable = {
     require(names.nonEmpty, "dropColumns: no columns")
     require(!names.exists(_.equalsIgnoreCase(tsCol)),
       s"dropColumns: '$tsCol' is the table's order identity and cannot be dropped")
     val unknown = names.filterNot(n =>
-      storedSchema.fieldNames.exists(_.equalsIgnoreCase(n)))
+      schema.fieldNames.exists(_.equalsIgnoreCase(n)))
     require(unknown.isEmpty,
       s"dropColumns: unknown column(s) ${unknown.mkString(", ")}")
-    val narrowed = StructType(storedSchema.fields.filterNot(f =>
+    val narrowed = StructType(schema.fields.filterNot(f =>
       names.exists(_.equalsIgnoreCase(f.name))))
-    // every CHECK must still resolve against the narrowed schema
-    tableChecks.foreach { case (n, sql) =>
-      val ok = scala.util.Try {
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], narrowed)
-          .where(expr(sql)).queryExecution.analyzed
-      }.isSuccess
-      require(ok,
-        s"dropColumns: CHECK constraint '$n' ($sql) references a dropped " +
-          "column — dropCheck it first")
-    }
-    val canonical = storedSchema.fieldNames
+    requireChecksResolve("dropColumns", narrowed,
+      "references a dropped column — dropCheck it first")
+    val canonical = schema.fieldNames
       .filter(f => names.exists(_.equalsIgnoreCase(f))).toSeq
     val newOpts = writeOptions.copy(
       statsCols = writeOptions.statsCols.filterNot(c =>
         canonical.exists(_.equalsIgnoreCase(c))),
       bloomCols = writeOptions.bloomCols.filterNot(c =>
         canonical.exists(_.equalsIgnoreCase(c))))
-    val newDropped = droppedCols ++ canonical
-    TsTable.writeDescriptor(spark, path, narrowed, tsCol, newOpts,
-      tableChecks, newDropped, effectiveNextFieldId)
-    val t = new TsTable(spark, path, tsCol, narrowed, newOpts, tableChecks,
-      newDropped, effectiveNextFieldId)
-    t.commitVersion("evolve", Some(narrowed))
-    t
+    TsTable.install(spark, path, desc.copy(schema = narrowed,
+      options = newOpts, dropped = dropped ++ canonical,
+      nextFieldId = effectiveNextFieldId), Some("evolve"))
   }
 
   /** Pure-DDL column RENAME (`ALTER TABLE … RENAME COLUMN`, wired to SQL
@@ -587,24 +568,16 @@ final class TsTable private (
     * stats/bloom membership follows the rename. Returns the handle
     * carrying the renamed schema (`this` keeps serving the old
     * projection, the appendEvolved rule — reopen for the new view). */
-  def renameColumn(oldName: String, newName: String): TsTable = {
-    // pure-DDL verbs share the rewrite verbs' stale-handle rule: the
-    // descriptor re-writes from THIS handle's state, so a handle held
-    // across another session's evolution would silently drop the newer
-    // columns/checks/options — delegate to the live descriptor's handle
-    // when ANY descriptor state moved.
-    val serving = TsTable.open(spark, path, tsCol)
-    if (serving.schema != storedSchema || serving.checks != tableChecks ||
-        serving.dropped != droppedCols ||
-        serving.writeOptions != writeOptions)
-      return serving.renameColumn(oldName, newName)
+  def renameColumn(oldName: String, newName: String): TsTable =
+    live.renameColumnLive(oldName, newName)
 
-    require(TsTable.hasFieldIds(storedSchema),
+  private def renameColumnLive(oldName: String, newName: String): TsTable = {
+    require(TsTable.hasFieldIds(schema),
       "renameColumn: this table predates field-id stamping — its files " +
         "resolve columns by NAME, so a pure-DDL rename would null the " +
         "column's history; run migrateFieldIds() (one governed " +
         "copy-on-write rewrite) to upgrade in place")
-    val field = storedSchema.fields.find(_.name.equalsIgnoreCase(oldName))
+    val field = schema.fields.find(_.name.equalsIgnoreCase(oldName))
     require(field.isDefined, s"renameColumn: unknown column '$oldName'")
     val canonicalOld = field.get.name
     // an id-stamped table can still hold attached FOREIGN (id-less) files
@@ -630,38 +603,26 @@ final class TsTable private (
       s"renameColumn: '$PartCol' is reserved for the partition column")
     require(!newName.equalsIgnoreCase(canonicalOld),
       s"renameColumn: '$oldName' -> '$newName' is a no-op")
-    require(!storedSchema.fieldNames.exists(_.equalsIgnoreCase(newName)),
+    require(!schema.fieldNames.exists(_.equalsIgnoreCase(newName)),
       s"renameColumn: column '$newName' already exists")
-    require(!droppedCols.exists(_.equalsIgnoreCase(newName)),
+    require(!dropped.exists(_.equalsIgnoreCase(newName)),
       s"renameColumn: '$newName' was retired by an earlier drop/rename " +
         "and its stale per-file index entries would gate the new name; " +
         "use a fresh name")
-    val renamed = StructType(storedSchema.fields.map(f =>
+    val renamed = StructType(schema.fields.map(f =>
       if (f.name == canonicalOld) f.copy(name = newName) else f))
-    // every CHECK must still resolve under the renamed schema — the SQL
-    // text references columns by name and cannot be rewritten safely
-    tableChecks.foreach { case (n, sql) =>
-      val ok = scala.util.Try {
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], renamed)
-          .where(expr(sql)).queryExecution.analyzed
-      }.isSuccess
-      require(ok,
-        s"renameColumn: CHECK constraint '$n' ($sql) references " +
-          s"'$canonicalOld' — dropCheck it, rename, re-add under the new name")
-    }
+    // the SQL text references columns by name and cannot be rewritten safely
+    requireChecksResolve("renameColumn", renamed, s"references " +
+      s"'$canonicalOld' — dropCheck it, rename, re-add under the new name")
     def follow(cols: Seq[String]): Seq[String] =
       cols.map(c => if (c.equalsIgnoreCase(canonicalOld)) newName else c)
     val newOpts = writeOptions.copy(statsCols = follow(writeOptions.statsCols),
       bloomCols = follow(writeOptions.bloomCols))
-    val newTsCol = if (canonicalOld == tsCol) newName else tsCol
-    val newDropped = droppedCols :+ canonicalOld // retire the old label
-    TsTable.writeDescriptor(spark, path, renamed, newTsCol, newOpts,
-      tableChecks, newDropped, effectiveNextFieldId)
-    val t = new TsTable(spark, path, newTsCol, renamed, newOpts, tableChecks,
-      newDropped, effectiveNextFieldId)
-    t.commitVersion("rename", Some(renamed))
-    t
+    TsTable.install(spark, path, desc.copy(schema = renamed,
+      tsCol = if (canonicalOld == tsCol) newName else tsCol,
+      options = newOpts,
+      dropped = dropped :+ canonicalOld, // retire the old label
+      nextFieldId = effectiveNextFieldId), Some("rename"))
   }
 
   /** Pure-DDL type WIDENING (`ALTER TABLE … ALTER COLUMN … TYPE` on the
@@ -688,19 +649,11 @@ final class TsTable private (
     * values before hashing, so the rebuilt bits match every future
     * probe. CHECK constraints must still analyze under the wide type
     * (numeric predicates do; refused otherwise, like rename). */
-  def widenColumn(name: String, to: DataType): TsTable = {
-    // pure-DDL verbs share the rewrite verbs' stale-handle rule: the
-    // descriptor re-writes from THIS handle's state, so a handle held
-    // across another session's evolution would silently drop the newer
-    // columns/checks/options — delegate to the live descriptor's handle
-    // when ANY descriptor state moved.
-    val serving = TsTable.open(spark, path, tsCol)
-    if (serving.schema != storedSchema || serving.checks != tableChecks ||
-        serving.dropped != droppedCols ||
-        serving.writeOptions != writeOptions)
-      return serving.widenColumn(name, to)
+  def widenColumn(name: String, to: DataType): TsTable =
+    live.widenColumnLive(name, to)
 
-    val field = storedSchema.fields.find(_.name.equalsIgnoreCase(name))
+  private def widenColumnLive(name: String, to: DataType): TsTable = {
+    val field = schema.fields.find(_.name.equalsIgnoreCase(name))
     require(field.isDefined, s"widenColumn: unknown column '$name'")
     val canonical = field.get.name
     val from = field.get.dataType
@@ -712,19 +665,10 @@ final class TsTable private (
         "float -> double, decimal(p,s) -> decimal(p+k,s); long -> double " +
         "would lose precision past 2^53, and a decimal SCALE change " +
         "re-encodes values instead of embedding them)")
-    val widened = StructType(storedSchema.fields.map(f =>
+    val widened = StructType(schema.fields.map(f =>
       if (f.name == canonical) f.copy(dataType = to) else f))
-    // every CHECK must still resolve under the widened schema (rename's rule)
-    tableChecks.foreach { case (n, sql) =>
-      val ok = scala.util.Try {
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], widened)
-          .where(expr(sql)).queryExecution.analyzed
-      }.isSuccess
-      require(ok,
-        s"widenColumn: CHECK constraint '$n' ($sql) does not analyze over " +
-          s"${to.simpleString} — dropCheck it, widen, re-add")
-    }
+    requireChecksResolve("widenColumn", widened,
+      s"does not analyze over ${to.simpleString} — dropCheck it, widen, re-add")
     // a bloom-indexed column's bits must re-harvest under the WIDE type:
     // commit the widen with the column undeclared (its carried entries
     // drop), then re-declare — the indexing commit backfills every file
@@ -734,13 +678,10 @@ final class TsTable private (
       if (!inBloom) writeOptions
       else writeOptions.copy(bloomCols =
         writeOptions.bloomCols.filterNot(_.equalsIgnoreCase(canonical)))
-    TsTable.writeDescriptor(spark, path, widened, tsCol, optsForWiden,
-      tableChecks, droppedCols, effectiveNextFieldId)
-    val t = new TsTable(spark, path, tsCol, widened, optsForWiden,
-      tableChecks, droppedCols, effectiveNextFieldId)
-    t.commitVersion("widen", Some(widened))
+    val t = TsTable.install(spark, path, desc.copy(schema = widened,
+      options = optsForWiden, nextFieldId = effectiveNextFieldId), Some("widen"))
     if (inBloom)
-      t.declareIndexing(writeOptions.statsCols, writeOptions.bloomCols)
+      t.declareIndexingLive(writeOptions.statsCols, writeOptions.bloomCols)
     else t
   }
 
@@ -761,33 +702,23 @@ final class TsTable private (
     * carrying the new declarations (`this` keeps its old ones — reopen
     * or use the returned handle, the evolution rule). */
   def declareIndexing(statsCols: Seq[String],
-                      bloomCols: Seq[String]): TsTable = {
-    // pure-DDL verbs share the rewrite verbs' stale-handle rule: the
-    // descriptor re-writes from THIS handle's state, so a handle held
-    // across another session's evolution would silently drop the newer
-    // columns/checks/options — delegate to the live descriptor's handle
-    // when ANY descriptor state moved.
-    val serving = TsTable.open(spark, path, tsCol)
-    if (serving.schema != storedSchema || serving.checks != tableChecks ||
-        serving.dropped != droppedCols ||
-        serving.writeOptions != writeOptions)
-      return serving.declareIndexing(statsCols, bloomCols)
+                      bloomCols: Seq[String]): TsTable =
+    live.declareIndexingLive(statsCols, bloomCols)
 
+  private def declareIndexingLive(statsCols: Seq[String],
+                                  bloomCols: Seq[String]): TsTable = {
     def resolve(kind: String, cols: Seq[String]): Seq[String] = cols.map { c =>
-      storedSchema.fields.find(_.name.equalsIgnoreCase(c)).map(_.name)
+      schema.fields.find(_.name.equalsIgnoreCase(c)).map(_.name)
         .getOrElse(throw new IllegalArgumentException(
           s"requirement failed: declareIndexing: $kind column '$c' is not " +
             "a table column"))
     }
     val rs = resolve("stats", statsCols)
     val rb = resolve("bloom", bloomCols)
-    val newOpts = writeOptions.copy(statsCols = rs, bloomCols = rb)
-    TsTable.writeDescriptor(spark, path, storedSchema, tsCol, newOpts,
-      tableChecks, droppedCols, effectiveNextFieldId)
-    val t = new TsTable(spark, path, tsCol, storedSchema, newOpts,
-      tableChecks, droppedCols, effectiveNextFieldId)
-    t.commitVersion("indexing") // per-column carry-forward backfills here
-    t
+    // the indexing commit's per-column carry-forward backfills here
+    TsTable.install(spark, path, desc.copy(
+      options = writeOptions.copy(statsCols = rs, bloomCols = rb),
+      nextFieldId = effectiveNextFieldId), Some("indexing"))
   }
 
   /** In-place upgrade to parquet field ids — the verb that makes
@@ -826,34 +757,23 @@ final class TsTable private (
     * rule); run `compact` after on hour-slotted tables. */
   def migrateFieldIds(filesPerDay: Int = 1): Int = {
     require(filesPerDay >= 1, "filesPerDay must be >= 1")
-    // the pre-field-id arm re-WRITES the descriptor from this handle's
-    // state, so migrate takes the pure-DDL verbs' FOUR-WAY staleness test
-    // (schema, checks, dropped, writeOptions — the widenColumn rule), not
-    // just compactDays' schema check: a stale handle stamping ids would
-    // otherwise silently clobber e.g. a CHECK another session added to
-    // the id-less table
-    val serving = TsTable.open(spark, path, tsCol)
-    if (serving.schema != storedSchema || serving.checks != tableChecks ||
-        serving.dropped != droppedCols ||
-        serving.writeOptions != writeOptions)
-      return serving.migrateFieldIds(filesPerDay)
+    live.migrateFieldIdsLive(filesPerDay)
+  }
+
+  private def migrateFieldIdsLive(filesPerDay: Int): Int = {
+    val idless = idlessLiveFiles()
     val target: TsTable =
-      if (TsTable.hasFieldIds(storedSchema)) this
+      if (TsTable.hasFieldIds(schema)) this
       else {
-        val stamped = TsTable.stampFieldIds(storedSchema)
+        val stamped = TsTable.stampFieldIds(schema)
         TsTable.enableFieldIdResolution(spark)
-        TsTable.writeDescriptor(spark, path, stamped, tsCol, writeOptions,
-          tableChecks, droppedCols, stamped.fields.length + 1L)
-        new TsTable(spark, path, tsCol, stamped, writeOptions, tableChecks,
-          droppedCols, stamped.fields.length + 1L)
+        // a descriptor-only upgrade (empty or fully-id-stamped files under
+        // a pre-id descriptor) still needs its pinnable "migrate" version
+        TsTable.install(spark, path, desc.copy(schema = stamped,
+          nextFieldId = stamped.fields.length + 1L),
+          if (idless.isEmpty) Some("migrate") else None)
       }
-    val idless = target.idlessLiveFiles()
-    if (idless.isEmpty) {
-      // descriptor-only upgrade (empty or fully-id-stamped files under a
-      // pre-id descriptor) still needs its pinnable "migrate" version
-      if (target ne this) target.commitVersion("migrate", Some(target.schema))
-      return 0
-    }
+    if (idless.isEmpty) return 0
     // Attached foreign files typically postdate the last commit, and the
     // rewrite conflict gate refuses to rewrite a dated file no manifest
     // lists (guardDisplaced — indistinguishable from another rewrite's
@@ -906,15 +826,14 @@ final class TsTable private (
   def backfillWithMeta(batch: DataFrame, filesPerDay: Int,
                                       meta: Map[String, String]): Long = {
     require(filesPerDay >= 1, "filesPerDay must be >= 1")
-    val names = batch.schema.fieldNames.toSeq
-    require(names.contains(tsCol), s"batch is missing ts column '$tsCol'")
-    require(names.toSet == storedSchema.fieldNames.toSet,
-      s"batch columns ${names.mkString(",")} != table columns ${storedSchema.fieldNames.mkString(",")}")
-    val serving = TsTable.open(spark, path, tsCol)
-    if (serving.schema != storedSchema)
-      return serving.backfillWithMeta(batch, filesPerDay, meta)
+    live.backfillLive(batch, filesPerDay, meta)
+  }
+
+  private def backfillLive(batch: DataFrame, filesPerDay: Int,
+                           meta: Map[String, String]): Long = {
+    requireTableColumns(batch)
     val proj = batch
-      .select(storedSchema.fieldNames.map(col).toSeq: _*)
+      .select(schema.fieldNames.map(col).toSeq: _*)
       .withColumn(PartCol, to_date(col(tsCol)))
     proj.persist()
     try {
@@ -923,7 +842,7 @@ final class TsTable private (
       val (n, nTs, nDays) = (st.getLong(0), st.getLong(1), st.getLong(2))
       if (n == 0) return 0L
       require(n == nTs, s"backfill: null values in '$tsCol'")
-      if (tableChecks.nonEmpty) enforceChecks(proj.drop(PartCol), "backfill")
+      if (checks.nonEmpty) enforceChecks(proj.drop(PartCol), "backfill")
       cowExec(Seq.empty, "backfill", filesPerDay,
         inserts = Some(proj), insertDays = nDays.toInt,
         meta = meta)(identity)
@@ -946,65 +865,54 @@ final class TsTable private (
     * a "constraint" version for auditability. Returns the handle
     * carrying the constraint. */
   def addCheck(name: String, predicateSql: String,
-               validateExisting: Boolean = true): TsTable = {
-    // pure-DDL verbs share the rewrite verbs' stale-handle rule: the
-    // descriptor re-writes from THIS handle's state, so a handle held
-    // across another session's evolution would silently drop the newer
-    // columns/checks/options — delegate to the live descriptor's handle
-    // when ANY descriptor state moved.
-    val serving = TsTable.open(spark, path, tsCol)
-    if (serving.schema != storedSchema || serving.checks != tableChecks ||
-        serving.dropped != droppedCols ||
-        serving.writeOptions != writeOptions)
-      return serving.addCheck(name, predicateSql, validateExisting)
+               validateExisting: Boolean = true): TsTable =
+    live.addCheckLive(name, predicateSql, validateExisting)
 
+  private def addCheckLive(name: String, predicateSql: String,
+                           validateExisting: Boolean): TsTable = {
     require(name.matches("[A-Za-z0-9_.-]+"),
       s"addCheck: constraint name '$name' must be [A-Za-z0-9_.-]+")
-    require(!tableChecks.exists(_._1.equalsIgnoreCase(name)),
+    require(!checks.exists(_._1.equalsIgnoreCase(name)),
       s"addCheck: constraint '$name' already exists")
-    // the predicate must parse, resolve against THIS schema, and be boolean
-    val probe = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], storedSchema)
-      .where(expr(predicateSql))
-    probe.queryExecution.analyzed // force analysis: unknown columns fail here
+    val added = Seq(name -> predicateSql)
+    requireChecksResolve("addCheck", schema,
+      "does not analyze as a boolean over the table's columns", added)
     if (validateExisting) {
-      firstViolation(toDF, Seq(name -> predicateSql)).foreach { case (n, cnt) =>
+      firstViolation(toDF, added).foreach { case (n, cnt) =>
         throw new IllegalArgumentException(
           s"addCheck: $cnt existing row(s) violate '$n' ($predicateSql) — " +
             "clean the table first or pass validateExisting = false")
       }
     }
-    val next = tableChecks :+ (name -> predicateSql)
-    TsTable.writeDescriptor(spark, path, storedSchema, tsCol, writeOptions,
-      next, droppedCols, effectiveNextFieldId)
-    val t = new TsTable(spark, path, tsCol, storedSchema, writeOptions, next,
-      droppedCols, effectiveNextFieldId)
-    t.commitVersion("constraint", meta = Map("check" -> name))
-    t
+    TsTable.install(spark, path, desc.copy(checks = checks ++ added,
+      nextFieldId = effectiveNextFieldId), Some("constraint"),
+      Map("check" -> name))
+  }
+
+  /** Refuses, naming `verb` and `hint`, when a CHECK of `cs` does not
+    * analyze as a boolean predicate over `over` — the probe every schema
+    * change and [[addCheck]] run before installing a descriptor. */
+  private def requireChecksResolve(verb: String, over: StructType, hint: String,
+                                   cs: Seq[(String, String)] = checks): Unit = {
+    val probe = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], over)
+    cs.foreach { case (n, sql) =>
+      scala.util.Try(probe.where(expr(sql)).queryExecution.analyzed).failed
+        .foreach(e => throw new IllegalArgumentException(
+          s"requirement failed: $verb: CHECK constraint '$n' ($sql) $hint", e))
+    }
   }
 
   /** Remove a CHECK constraint; returns the handle without it. */
-  def dropCheck(name: String): TsTable = {
-    // pure-DDL verbs share the rewrite verbs' stale-handle rule: the
-    // descriptor re-writes from THIS handle's state, so a handle held
-    // across another session's evolution would silently drop the newer
-    // columns/checks/options — delegate to the live descriptor's handle
-    // when ANY descriptor state moved.
-    val serving = TsTable.open(spark, path, tsCol)
-    if (serving.schema != storedSchema || serving.checks != tableChecks ||
-        serving.dropped != droppedCols ||
-        serving.writeOptions != writeOptions)
-      return serving.dropCheck(name)
+  def dropCheck(name: String): TsTable = live.dropCheckLive(name)
 
-    require(tableChecks.exists(_._1.equalsIgnoreCase(name)),
-      s"dropCheck: no constraint '$name' (have: ${tableChecks.map(_._1).mkString(", ")})")
-    val next = tableChecks.filterNot(_._1.equalsIgnoreCase(name))
-    TsTable.writeDescriptor(spark, path, storedSchema, tsCol, writeOptions,
-      next, droppedCols, effectiveNextFieldId)
-    val t = new TsTable(spark, path, tsCol, storedSchema, writeOptions, next,
-      droppedCols, effectiveNextFieldId)
-    t.commitVersion("constraint", meta = Map("check" -> name))
-    t
+  private def dropCheckLive(name: String): TsTable = {
+    require(checks.exists(_._1.equalsIgnoreCase(name)),
+      s"dropCheck: no constraint '$name' (have: ${checks.map(_._1).mkString(", ")})")
+    TsTable.install(spark, path, desc.copy(
+      checks = checks.filterNot(_._1.equalsIgnoreCase(name)),
+      nextFieldId = effectiveNextFieldId), Some("constraint"),
+      Map("check" -> name))
   }
 
   /** Per-constraint violating-row-count aggregate columns (SQL CHECK rule:
@@ -1039,7 +947,7 @@ final class TsTable private (
 
   /** The CHECK-violation rejection shared by every enforcement face. */
   private def throwViolation(verb: String, name: String, cnt: Long): Nothing = {
-    val sql = tableChecks.find(_._1 == name).map(_._2).getOrElse("")
+    val sql = checks.find(_._1 == name).map(_._2).getOrElse("")
     throw new IllegalArgumentException(
       s"$verb: $cnt row(s) violate CHECK constraint '$name' ($sql) — " +
         "nothing was written")
@@ -1048,7 +956,7 @@ final class TsTable private (
   /** Enforcement shared by every batch write face: throws on the first
     * violated constraint. */
   private[graft] def enforceChecks(df: DataFrame, verb: String): Unit =
-    firstViolation(df, tableChecks).foreach { case (n, cnt) =>
+    firstViolation(df, checks).foreach { case (n, cnt) =>
       throwViolation(verb, n, cnt)
     }
 
@@ -1091,12 +999,12 @@ final class TsTable private (
     // of two — the r22 lifecycle job-batching item).
     // Rejection order: empty batch, then null-ts, then the first violated
     // constraint — all read from the same row.
-    val aggs = statAggs ++ violationAggs(tableChecks)
+    val aggs = statAggs ++ violationAggs(checks)
     val stats = batch.agg(aggs.head, aggs.tail: _*).head
     if (stats.getLong(1) == 0L) return None
     if (stats.getLong(1) != stats.getLong(2))
       throw new IllegalArgumentException(s"$verb: null values in '$tsCol'")
-    firstViolationIn(stats, statAggs.size, tableChecks).foreach {
+    firstViolationIn(stats, statAggs.size, checks).foreach {
       case (n, cnt) => throwViolation(verb, n, cnt)
     }
     Some(BatchShape(stats.getAs[Timestamp](0), stats.getLong(3),
@@ -1110,7 +1018,7 @@ final class TsTable private (
                           filesPerDay: Int, dest: String): Unit = {
     val hourly = writeOptions.fileSpan == "hour"
     val withDate = withFieldIds(batch
-      .select(storedSchema.fieldNames.map(col).toSeq: _*)) // canonical column order
+      .select(schema.fieldNames.map(col).toSeq: _*)) // canonical column order
       .withColumn(PartCol, to_date(col(tsCol)))
     // filesPerDay=1: hash-shuffle by day, one task → one sorted file per day.
     // filesPerDay>1: range-shuffle on (day, ts) into nDays·filesPerDay slots,
@@ -1170,7 +1078,7 @@ final class TsTable private (
 
   /** Declared Bloom columns the stored schema still carries. */
   private[graft] def liveBloomCols: Seq[String] =
-    writeOptions.bloomCols.filter(storedSchema.fieldNames.contains)
+    writeOptions.bloomCols.filter(schema.fieldNames.contains)
 
   /** Strict-mode validation (reference ValueError parity, SURVEY §5.2.4
     * property (c)): the batch must be ts-sorted in physical row order.
@@ -1273,11 +1181,16 @@ final class TsTable private (
     require(targetFiles >= 1, "targetFiles must be >= 1")
     dates.foreach(d =>
       require(DateDirRe.matches(d), s"date must be YYYY-MM-DD, got '$d'"))
+    live.compactDaysLive(dates, targetFiles, clusterBy)
+  }
+
+  private def compactDaysLive(dates: Seq[String], targetFiles: Int,
+                              clusterBy: Seq[String]): Seq[String] = {
     // resolve clusterBy case-insensitively to the canonical stored names —
     // the file's convention for every column-addressing verb (rename,
     // drop, stats narrowing); validation and Morton coding use these
     val cluster = clusterBy.map { c =>
-      storedSchema.fields.find(_.name.equalsIgnoreCase(c)).map(_.name)
+      schema.fields.find(_.name.equalsIgnoreCase(c)).map(_.name)
         .getOrElse(throw new IllegalArgumentException(
           s"requirement failed: compact clusterBy: unknown column '$c'"))
     }
@@ -1286,21 +1199,13 @@ final class TsTable private (
         "clusterBy needs >= 2 columns — a 1-D cluster is the plain " +
           "ts-sorted compact (or sort the day by that column externally)")
       cluster.foreach { c =>
-        val dt = storedSchema(c).dataType
+        val dt = schema(c).dataType
         require(dt.isInstanceOf[org.apache.spark.sql.types.NumericType] ||
           dt == TimestampType || dt == DateType,
           s"compact clusterBy: '$c' is ${dt.simpleString} — z-order ranks " +
             "need a numeric/temporal axis")
       }
     }
-    // REWRITE verbs must run against the LIVE descriptor: a stale handle
-    // held across an appendEvolved serves a narrower projection — fine
-    // for reads, destructive for a rewrite (it would drop the evolved
-    // columns from the rewritten files and commit a narrowed manifest).
-    // Delegate once to a freshly-opened handle when the descriptor moved.
-    val serving = TsTable.open(spark, path, tsCol)
-    if (serving.schema != storedSchema)
-      return serving.compactDays(dates, targetFiles, clusterBy)
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // hour-slotted tables bin-pack per HOUR slot, not per day — a plain
@@ -1347,7 +1252,7 @@ final class TsTable private (
       // cowExec staging rule (explicit statuses, no lazy listing to
       // silently narrow the compacted output)
       val days = new TsSnapshot(spark, path, tsCol,
-        TsManifest(-1L, "staging", tsCol, storedSchema, displaced)).raw
+        TsManifest(-1L, "staging", tsCol, schema, displaced)).raw
       // targetFiles=1: hash by day — one task → one sorted file per day;
       // >1: range on (day, ts) — each heavy day splits into ~targetFiles
       // contiguous ts slices (the append filesPerDay rule).
@@ -1503,13 +1408,7 @@ final class TsTable private (
   def deleteWhere(predicate: org.apache.spark.sql.Column,
                   filesPerDay: Int = 1): Long = {
     require(filesPerDay >= 1, "filesPerDay must be >= 1")
-    // same stale-handle rule as compactDays: a rewrite through a
-    // pre-evolution projection would drop evolved columns — delegate to
-    // the live descriptor's handle when the schema moved
-    val serving = TsTable.open(spark, path, tsCol)
-    if (serving.schema != storedSchema)
-      return serving.deleteWhere(predicate, filesPerDay)
-    cowRewrite(predicate, "delete", filesPerDay)((df, cond) => df.where(!cond))
+    live.cowRewrite(predicate, "delete", filesPerDay)((df, cond) => df.where(!cond))
   }
 
   /** Row-level UPDATE, copy-on-write — `deleteWhere`'s sibling and the
@@ -1526,7 +1425,12 @@ final class TsTable private (
     * of rows updated (0 = no hit, nothing rewritten, no commit). */
   def updateWhere(predicate: org.apache.spark.sql.Column,
                   assignments: Map[String, org.apache.spark.sql.Column],
-                  filesPerDay: Int = 1): Long = {
+                  filesPerDay: Int = 1): Long =
+    live.updateWhereLive(predicate, assignments, filesPerDay)
+
+  private def updateWhereLive(predicate: org.apache.spark.sql.Column,
+      assignments: Map[String, org.apache.spark.sql.Column],
+      filesPerDay: Int): Long = {
     require(filesPerDay >= 1, "filesPerDay must be >= 1")
     require(assignments.nonEmpty, "updateWhere: no assignments")
     require(!assignments.keySet.exists(_.equalsIgnoreCase(tsCol)),
@@ -1534,17 +1438,14 @@ final class TsTable private (
         "in time with deleteWhere + append, not an update")
     require(!assignments.keySet.exists(_.equalsIgnoreCase(PartCol)),
       s"updateWhere: '$PartCol' is derived from '$tsCol', not assignable")
-    val unknown = assignments.keySet.filterNot(storedSchema.fieldNames.contains)
+    val unknown = assignments.keySet.filterNot(schema.fieldNames.contains)
     require(unknown.isEmpty,
       s"updateWhere: unknown columns ${unknown.mkString(", ")}")
-    val serving = TsTable.open(spark, path, tsCol)
-    if (serving.schema != storedSchema)
-      return serving.updateWhere(predicate, assignments, filesPerDay)
     cowRewrite(predicate, "update", filesPerDay,
         enforceAfterRewrite = true) { (df, cond) =>
       df.select(df.columns.map { c =>
         if (assignments.contains(c))
-          when(cond, assignments(c).cast(storedSchema(c).dataType))
+          when(cond, assignments(c).cast(schema(c).dataType))
             .otherwise(col(c)).as(c)
         else col(c)
       }.toSeq: _*)
@@ -1602,16 +1503,21 @@ final class TsTable private (
   def mergeInto(source: DataFrame, keys: Seq[String],
                 updateCols: Option[Seq[String]] = None,
                 insert: Boolean = true,
-                filesPerDay: Int = 1): TsTable.MergeResult = {
+                filesPerDay: Int = 1): TsTable.MergeResult =
+    live.mergeIntoLive(source, keys, updateCols, insert, filesPerDay)
+
+  private def mergeIntoLive(source: DataFrame, keys: Seq[String],
+      updateCols: Option[Seq[String]], insert: Boolean,
+      filesPerDay: Int): TsTable.MergeResult = {
     require(filesPerDay >= 1, "filesPerDay must be >= 1")
     require(keys.nonEmpty, "mergeInto: no key columns")
     val srcCols = source.schema.fieldNames.toSeq
     keys.foreach { k =>
       require(srcCols.contains(k), s"mergeInto: source is missing key column '$k'")
-      require(storedSchema.fieldNames.contains(k),
+      require(schema.fieldNames.contains(k),
         s"mergeInto: key column '$k' is not a table column")
     }
-    val foreign = srcCols.filterNot(storedSchema.fieldNames.contains)
+    val foreign = srcCols.filterNot(schema.fieldNames.contains)
     require(foreign.isEmpty,
       s"mergeInto: source columns ${foreign.mkString(", ")} are not table columns")
     require(updateCols.forall(_.forall(srcCols.contains)),
@@ -1629,10 +1535,6 @@ final class TsTable private (
       "mergeInto: nothing to do — no update columns and insert = false")
     require(!insert || srcCols.contains(tsCol),
       s"mergeInto: inserts need '$tsCol' in the source to place rows")
-    // same stale-handle rule as the other rewrite verbs
-    val serving = TsTable.open(spark, path, tsCol)
-    if (serving.schema != storedSchema)
-      return serving.mergeInto(source, keys, updateCols, insert, filesPerDay)
     // Materialize the source EXACTLY ONCE (the Delta MERGE materializeSource
     // rule) — localCheckpoint truncates the plan to the computed rows, so
     // the several passes below (cardinality check, MATCHED discovery,
@@ -1675,7 +1577,7 @@ final class TsTable private (
         "SQL MERGE cardinality violation")
     // the source projected onto the stored schema, p_date derived
     def onStored(df: DataFrame): DataFrame = df
-      .select(storedSchema.fields.map { f =>
+      .select(schema.fields.map { f =>
         (if (srcCols.contains(f.name)) col(f.name).cast(f.dataType)
          else lit(null).cast(f.dataType)).as(f.name)
       }.toSeq: _*)
@@ -1756,7 +1658,7 @@ final class TsTable private (
       df.join(marked, keys, "left")
         .select(df.columns.map { c =>
           if (upd.contains(c))
-            when(col("__matched"), col(s"__u_$c").cast(storedSchema(c).dataType))
+            when(col("__matched"), col(s"__u_$c").cast(schema(c).dataType))
               .otherwise(col(c)).as(c)
           else col(c)
         }.toSeq: _*)
@@ -1887,20 +1789,18 @@ final class TsTable private (
     * must STILL be live at its planned length. A pure filesystem check,
     * so it also sees a concurrent writer's IN-FLIGHT swap (files archived
     * ahead of a commit the manifest gate can't observe yet). On conflict:
-    * drop the staged temp, throw retryable — the live table is untouched. */
+    * throw retryable — the live table is untouched. */
   private def requireDisplacedLive(fs: org.apache.hadoop.fs.FileSystem,
                                    displaced: Seq[(String, Long)],
-                                   action: String, staged: Path): Unit =
+                                   action: String): Unit =
     displaced.foreach { case (r, l) =>
       val ok = try fs.getFileStatus(new Path(path, r)).getLen == l
       catch { case _: java.io.FileNotFoundException => false }
-      if (!ok) {
-        fs.delete(staged, true)
+      if (!ok)
         throw new TsTable.ConcurrentRewriteException(
           s"$action: planned input $r was displaced while staging " +
             "(concurrent rewrite); staged output dropped, live table " +
             "untouched — retry the verb on a fresh handle")
-      }
     }
 
   /** Roll a completed swap back after a commit-time conflict: ARCHIVE
@@ -1985,7 +1885,7 @@ final class TsTable private (
           // that skips a just-displaced path — a vanished input surfaces
           // loudly (resolution or open) and classifies as the conflict
           parts += xform(new TsSnapshot(spark, path, tsCol,
-            TsManifest(-1L, "staging", tsCol, storedSchema,
+            TsManifest(-1L, "staging", tsCol, schema,
               displaced.filter(_._1.contains("/")))).raw)
         inserts.foreach(parts += _)
         val df = withFieldIds(parts.result().reduce(_.unionByName(_)))
@@ -2000,7 +1900,7 @@ final class TsTable private (
         // same synthetic-manifest read; raw already carries the null p_date
         // the predicate may name (the live-read semantic for loose files)
         val looseDf = withFieldIds(xform(new TsSnapshot(spark, path, tsCol,
-            TsManifest(-1L, "staging", tsCol, storedSchema,
+            TsManifest(-1L, "staging", tsCol, schema,
               displaced.filterNot(_._1.contains("/")))).raw)
           .drop(PartCol))
           .repartitionByRange(loose.length.max(1), col(tsCol))
@@ -2012,20 +1912,18 @@ final class TsTable private (
       // already-written staging files costs one cheap re-read, never a
       // recompute of the rewrite, and a violation aborts BEFORE anything
       // archives — the live table is untouched.
-      if (enforceAfterRewrite && tableChecks.nonEmpty) {
+      if (enforceAfterRewrite && checks.nonEmpty) {
         val parts = Seq.newBuilder[DataFrame]
         val datedStage = new Path(tmp, "dated")
         if (fs.exists(datedStage))
           parts += spark.read.option("basePath", datedStage.toString)
-            .schema(withPartCol(storedSchema)).parquet(datedStage.toString)
+            .schema(withPartCol(schema)).parquet(datedStage.toString)
             .drop(PartCol)
         val looseStage = new Path(tmp, "loose")
         if (fs.exists(looseStage))
-          parts += spark.read.schema(storedSchema).parquet(looseStage.toString)
-        parts.result().reduceOption(_.unionByName(_)).foreach { staged =>
-          try enforceChecks(staged, action)
-          catch { case e: Throwable => fs.delete(tmp, true); throw e }
-        }
+          parts += spark.read.schema(schema).parquet(looseStage.toString)
+        parts.result().reduceOption(_.unionByName(_))
+          .foreach(enforceChecks(_, action))
       }
     }
   }
@@ -2044,7 +1942,8 @@ final class TsTable private (
     *   3. `stage`, whose missing-table-file failures classify as the
     *      retryable conflict ([[stagingSwapRace]]; staging dropped, live
     *      table untouched);
-    *   4. the pre-swap gate ([[requireDisplacedLive]]);
+    *   4. the pre-swap gate ([[requireDisplacedLive]]); any failure in
+    *      3-4 (or in the hooks between them) drops the staging dir;
     *   5. archive EXACTLY the displaced inputs (never a fresh listing — a
     *      concurrent append's new file must stay live), then move the
     *      staged files in and delete the staging dir;
@@ -2077,20 +1976,23 @@ final class TsTable private (
       s"$stagingPrefix${java.util.UUID.randomUUID().toString}")
     val marker = writeInflightMarker(fs, tmp.getName, displaced.map(_._1))
     try {
-    // the staging read touches ONLY the planned inputs, so a missing
-    // table file here (plan-time PATH_NOT_FOUND or task-time FAILED_READ)
-    // means a concurrent rewrite took them
-    try stage(tmp)
-    catch { case e: Throwable if stagingSwapRace(e, displaced) =>
-      fs.delete(tmp, true)
-      throw new TsTable.ConcurrentRewriteException(
-        s"$action: a planned input vanished during the staging rewrite " +
-          "(concurrent rewrite); staged output dropped, live table " +
-          "untouched — retry the verb on a fresh handle", e)
-    }
-    TsTable.rewriteRaceHook("staged", action)
-    requireDisplacedLive(fs, displaced, action, staged = tmp)
-    TsTable.rewriteRaceHook("archiving", action)
+    // any failure before the first archive leaves the live table untouched:
+    // drop the staged output and rethrow
+    try {
+      // the staging read touches ONLY the planned inputs, so a missing
+      // table file here (plan-time PATH_NOT_FOUND or task-time FAILED_READ)
+      // means a concurrent rewrite took them
+      try stage(tmp)
+      catch { case e: Throwable if stagingSwapRace(e, displaced) =>
+        throw new TsTable.ConcurrentRewriteException(
+          s"$action: a planned input vanished during the staging rewrite " +
+            "(concurrent rewrite); staged output dropped, live table " +
+            "untouched — retry the verb on a fresh handle", e)
+      }
+      TsTable.rewriteRaceHook("staged", action)
+      requireDisplacedLive(fs, displaced, action)
+      TsTable.rewriteRaceHook("archiving", action)
+    } catch { case e: Throwable => fs.delete(tmp, true); throw e }
     // A file vanishing mid-archive is a rewrite that won the sub-gate
     // window: re-live ONLY what this verb itself archived (the vanished
     // file was archived by the winner — re-living it would resurrect rows
@@ -2160,8 +2062,6 @@ final class TsTable private (
     * (partition pruning fires on the p_date conjunct exactly as in the
     * DataFrame path — asserted in SqlSurfaceSpec). */
   def registerView(name: String): Unit = raw.createOrReplaceTempView(name)
-
-  def schema: StructType = storedSchema
 
   // ───────────────────────── snapshots / time travel ──────────────────────
 
@@ -2269,14 +2169,14 @@ final class TsTable private (
       val it = fs.listFiles(archRoot, true)
       while (it.hasNext) { val f = it.next(); archN += 1; archB += f.getLen }
     }
-    Seq((path, tsCol, storedSchema.fieldNames.length,
+    Seq((path, tsCol, schema.fieldNames.length,
       partitionDates.length.toLong, files.length.toLong, files.map(_._2).sum,
       vs.length.toLong, if (vs.isEmpty) 0L else vs.max,
       archN, archB,
       writeOptions.statsCols.mkString(","),
       writeOptions.bloomCols.mkString(","),
-      tableChecks.map(_._1).mkString(","),
-      droppedCols.mkString(",")))
+      checks.map(_._1).mkString(","),
+      dropped.mkString(",")))
       .toDF("path", "ts_col", "n_columns", "n_partitions", "n_files",
         "n_bytes", "n_versions", "current_version", "n_archived_files",
         "n_archived_bytes", "stats_cols", "bloom_cols", "checks", "dropped")
@@ -2484,7 +2384,9 @@ final class TsTable private (
     * (resolution, retirement renames, the manifest commit). The append
     * monotonicity guard re-anchors on the restored maxDt naturally.
     * Returns the new version number. */
-  def restore(version: Long): Long = {
+  def restore(version: Long): Long = live.restoreLive(version)
+
+  private def restoreLive(version: Long): Long = {
     val snap = openAt(version)
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -2527,37 +2429,35 @@ final class TsTable private (
       (archived.toString, new Path(path, rel).toString)
     }
     TsTable.copyFiles(spark, displaced)
-    // 3. the version's own schema becomes the stored descriptor again
-    // (reopen via TsTable.open for a handle carrying it; this handle keeps
-    // serving its constructed projection, the appendEvolved rule).
-    // Restoring to a pre-drop state clears that column's tombstone: the
-    // schema carries it again and the files' bytes are authoritative —
-    // and its statsCols/bloomCols membership comes back with it
-    // (optionsForRestoredSchema), not the current handle's post-drop
-    // narrowing, so span/Bloom skipping on the column survives the trip.
-    val restoredOpts = optionsForRestoredSchema(snap)
-    val restoredDropped = droppedCols.filterNot(d =>
-      snap.schema.fieldNames.exists(_.equalsIgnoreCase(d)))
-    // the field-id high-water NEVER rolls back with a restore — a later
-    // re-add must not recycle an id the displaced-era files still carry
-    val restoredNext =
-      if (!TsTable.hasFieldIds(snap.schema)) 0L
-      else math.max(effectiveNextFieldId,
-        snap.schema.fields.map(TsTable.fieldId).max + 1)
-    TsTable.writeDescriptor(spark, path, snap.schema, snap.tsCol,
-      restoredOpts, tableChecks, restoredDropped, restoredNext)
-    // commit through a handle carrying the RESTORED schema and options —
-    // committing on `this` would harvest the restore version's spans and
-    // Bloom bits under the pre-restore narrowing, leaving the resurrected
-    // column declared in the descriptor but index-blind until the commit
-    // after next
     TsTable.rewriteRaceHook("swapped", "restore")
-    new TsTable(spark, path, snap.tsCol, snap.schema, restoredOpts,
-      tableChecks, restoredDropped, restoredNext)
-      .commitVersion("restore", Some(snap.schema), displaced = guarded,
+    // 3. the version's own schema becomes the stored descriptor again
+    // (descriptorAt), and the version commits through the handle carrying
+    // it — committing on `this` would harvest the restore version's spans
+    // and Bloom bits under the pre-restore narrowing, leaving a
+    // resurrected column declared in the descriptor but index-blind until
+    // the commit after next. This handle keeps serving its constructed
+    // projection (the appendEvolved rule).
+    TsTable.install(spark, path, descriptorAt(snap), None)
+      .commitVersion("restore", displaced = guarded,
         displacedPlanVersion = planV)
     } finally clearInflightMarker(fs, marker)
   }
+
+  /** The descriptor a restore or clone to `snap` installs: the version's
+    * own schema and ts column, this handle's CHECKs, and
+    *   - the index membership [[optionsForRestoredSchema]] derives;
+    *   - the tombstones of names still absent: a restore/clone to a
+    *     pre-drop state carries the column again, and the files' bytes are
+    *     authoritative for it;
+    *   - the field-id high-water, which NEVER rolls back — a later re-add
+    *     must not recycle an id the displaced-era files still carry. */
+  private def descriptorAt(snap: TsSnapshot): TsDescriptor =
+    TsDescriptor(snap.schema, snap.tsCol, optionsForRestoredSchema(snap),
+      checks,
+      dropped.filterNot(d => snap.schema.fieldNames.exists(_.equalsIgnoreCase(d))),
+      if (!TsTable.hasFieldIds(snap.schema)) 0L
+      else math.max(effectiveNextFieldId,
+        snap.schema.fields.map(TsTable.fieldId).max + 1))
 
   /** Write options consistent with a restore/clone to `snap`'s schema.
     * `dropColumns` narrows statsCols/bloomCols when a column leaves; a
@@ -2574,7 +2474,7 @@ final class TsTable private (
   private def optionsForRestoredSchema(snap: TsSnapshot): TsWriteOptions = {
     val inSchema: String => Boolean =
       c => snap.schema.fieldNames.exists(_.equalsIgnoreCase(c))
-    val resurrected = droppedCols.filter(inSchema)
+    val resurrected = dropped.filter(inSchema)
     val base = writeOptions.copy(
       statsCols = writeOptions.statsCols.filter(inSchema),
       bloomCols = writeOptions.bloomCols.filter(inSchema))
@@ -2630,24 +2530,7 @@ final class TsTable private (
       (s, new Path(destPath, rel).toString)
     }
     TsTable.copyFiles(spark, pairs)
-    // a clone of a pre-drop version legitimately carries the column (the
-    // restore rule); tombstones only follow for names still absent
-    val cloneDropped = droppedCols.filterNot(d =>
-      snap.schema.fieldNames.exists(_.equalsIgnoreCase(d)))
-    // a resurrected column regains its index membership exactly as in
-    // restore — derived from the SOURCE version's artifacts before the
-    // clone writes its own descriptor
-    val cloneOpts = optionsForRestoredSchema(snap)
-    val cloneNext =
-      if (!TsTable.hasFieldIds(snap.schema)) 0L
-      else math.max(effectiveNextFieldId,
-        snap.schema.fields.map(TsTable.fieldId).max + 1)
-    TsTable.writeDescriptor(spark, destPath, snap.schema, snap.tsCol,
-      cloneOpts, tableChecks, cloneDropped, cloneNext)
-    val t = new TsTable(spark, destPath, snap.tsCol, snap.schema, cloneOpts,
-      tableChecks, cloneDropped, cloneNext)
-    t.commitVersion("clone", Some(snap.schema))
-    t
+    TsTable.install(spark, destPath, descriptorAt(snap), Some("clone"))
   }
 
   /** Commit the CURRENT live layout as a new version without moving any
@@ -2742,7 +2625,6 @@ final class TsTable private (
     * files. Cost: one listing per day partition — the same O(#partitions)
     * metadata walk `partitionStats` does, never O(rows). */
   private[graft] def commitVersion(action: String,
-                                   schemaOverride: Option[StructType] = None,
                                    meta: Map[String, String] = Map.empty,
                                    displaced: Seq[(String, Long)] = Seq.empty,
                                    displacedPlanVersion: Option[Long] = None): Long = {
@@ -2866,7 +2748,7 @@ final class TsTable private (
       // already-live files at this commit instead of staying index-blind
       // behind a file-level carried entry forever
       val declaredStats = writeOptions.statsCols
-        .filter(storedSchema.fieldNames.contains).toSet
+        .filter(schema.fieldNames.contains).toSet
       val needSpans = files.map(_._1).filterNot(p =>
         carried.contains(p) && declaredStats.subsetOf(
           carriedCols.get(p).map(_.keySet).getOrElse(Set.empty)))
@@ -2897,8 +2779,7 @@ final class TsTable private (
         else Some(TsTable.writeBloomSidecarTmp(fs, path, next, blooms))
       try {
         TsTable.writeManifest(spark, path,
-          TsManifest(next, action, tsCol,
-            schemaOverride.getOrElse(storedSchema), files, carried ++ fresh,
+          TsManifest(next, action, tsCol, schema, files, carried ++ fresh,
             meta, carriedCols ++ freshCols))
         committed = true
         bloomTmp.foreach { t =>
@@ -3034,7 +2915,7 @@ final class TsTable private (
     * no Spark job. */
   private def servingManifest(need: TsManifest => Boolean = _ => true): Option[TsManifest] =
     currentManifest.map(_._2).filter { m =>
-      need(m) && m.schema == storedSchema && {
+      need(m) && m.schema == schema && {
         val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
         listLiveFiles(fs).toSet == m.files.toSet
       }
@@ -3077,7 +2958,7 @@ final class TsTable private (
     val tc = tsCol
     val cols = writeOptions.statsCols
     val keys = liveBloomCols.map(c =>
-      c -> BloomParquetWriteSupport.footerKey(storedSchema(c), writeOptions.bloomBits)).toMap
+      c -> BloomParquetWriteSupport.footerKey(schema(c), writeOptions.bloomBits)).toMap
     def harvest(conf: org.apache.hadoop.conf.Configuration,
                 f: (String, Boolean, Boolean)) = {
       val (r, wantSpans, wantBlooms) = f
@@ -3111,7 +2992,7 @@ final class TsTable private (
     if (cols.isEmpty) return TsTable.NoBlooms
     val root = new Path(path)
     val df = spark.read.format(TsTable.Fmt).option("basePath", path)
-      .schema(withPartCol(storedSchema))
+      .schema(withPartCol(schema))
       .load(relPaths.map(r => new Path(root, r).toString): _*)
     // capacity at bits/items ≈ 10 → ~7 hash functions, ~1% fpp at capacity
     val items = (writeOptions.bloomBits / 10L).max(1L)
@@ -3514,6 +3395,66 @@ private[ts] final case class TsManifest(
     stats: Map[String, (Long, Long)] = Map.empty,
     meta: Map[String, String] = Map.empty,
     colStats: Map[String, Map[String, ColSpan]] = Map.empty)
+
+/** The stored table descriptor (`_ts_schema.json`): everything a handle
+  * knows about its table besides the data and the versions. The one owner
+  * of the descriptor's line format:
+  *   1. the schema as JSON;
+  *   2. the ts column;
+  *   3. the write options ([[TsWriteOptions.encode]]; absent in round-2-era
+  *      descriptors, which decode to the defaults);
+  *   4. (optional) `checks=` CHECK constraints as `name:base64(sql)`, so
+  *      arbitrary predicate text never collides with the line format;
+  *   5. (optional) `dropped=` names retired by dropColumns/renameColumn —
+  *      the re-add guard's persistent memory;
+  *   6. (optional) `nextFieldId=` the field-id high-water.
+  * An optional line is written only when it or a later one has content;
+  * an empty placeholder keeps the numbering fixed. */
+private[ts] final case class TsDescriptor(
+    schema: StructType,
+    tsCol: String,
+    options: TsWriteOptions = TsWriteOptions(),
+    checks: Seq[(String, String)] = Seq.empty,
+    dropped: Seq[String] = Seq.empty,
+    // field-id high-water (0 = pre-id table, by-name semantics): the next
+    // id any evolution verb may assign; never decreases, ids never reused
+    // after a drop/rename, or old files' bytes would resurrect under a
+    // recycled id
+    nextFieldId: Long = 0L) {
+  def encode: String = {
+    val checksLine =
+      if (checks.isEmpty) ""
+      else "checks=" + checks.map { case (n, sql) =>
+        n + ":" + java.util.Base64.getEncoder.encodeToString(sql.getBytes("UTF-8"))
+      }.mkString(",") + "\n"
+    val droppedLine =
+      if (dropped.isEmpty && nextFieldId <= 0) ""
+      else (if (checksLine.isEmpty) "checks=\n" else "") +
+        "dropped=" + dropped.mkString("|") + "\n"
+    val nextIdLine = if (nextFieldId <= 0) "" else s"nextFieldId=$nextFieldId\n"
+    schema.json + "\n" + tsCol + "\n" + options.encode + "\n" + checksLine +
+      droppedLine + nextIdLine
+  }
+}
+
+private[ts] object TsDescriptor {
+  def decode(text: String): TsDescriptor = {
+    val lines = text.trim.split("\n").map(_.trim)
+    def line(i: Int, key: String): Option[String] =
+      lines.lift(i).filter(_.startsWith(key)).map(_.stripPrefix(key))
+    TsDescriptor(
+      DataType.fromJson(lines(0)).asInstanceOf[StructType],
+      lines(1),
+      lines.lift(2).map(TsWriteOptions.decode).getOrElse(TsWriteOptions()),
+      line(3, "checks=").toSeq.flatMap(_.split(",")).filter(_.nonEmpty).map { part =>
+        val Array(n, b64) = part.split(":", 2)
+        (n, new String(java.util.Base64.getDecoder.decode(b64), "UTF-8"))
+      },
+      line(4, "dropped=").toSeq.flatMap(_.split("\\|")).filter(_.nonEmpty),
+      lines.drop(5).find(_.startsWith("nextFieldId="))
+        .map(_.stripPrefix("nextFieldId=").toLong).getOrElse(0L))
+  }
+}
 
 /** Write-side sizing/compression knobs — the analogue of the reference's
   * `create_ts(..., filters=, expectedrows_per_partition=, chunkshape=)`
@@ -4320,12 +4261,9 @@ object TsTable {
     // pure DDL and retires name-collision resurrection for these tables
     val stamped = stampFieldIds(schema)
     enableFieldIdResolution(spark)
-    writeDescriptor(spark, path, stamped, tsCol, writeOptions,
-      nextFieldId = stamped.fields.length + 1L)
-    val t = new TsTable(spark, path, tsCol, stamped, writeOptions,
-      nextFieldId = stamped.fields.length + 1L)
-    t.commitVersion("create") // v1: the empty table is a pinnable state
-    t
+    // v1: the empty table is a pinnable state
+    install(spark, path, TsDescriptor(stamped, tsCol, writeOptions,
+      nextFieldId = stamped.fields.length + 1L), Some("create"))
   }
 
   /** Field-id read/write resolution is a session conf, not a per-read
@@ -4337,56 +4275,37 @@ object TsTable {
     spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
   }
 
+  /** The one step every descriptor change takes: install `d` at `path`
+    * ([[writeDescriptor]]), build its handle, and commit `action` on it
+    * (None: the caller commits, or nothing does). Descriptor first, version
+    * second: a crash in between leaves the new descriptor serving, and the
+    * next commit records the version. */
+  private[ts] def install(spark: SparkSession, path: String, d: TsDescriptor,
+                          action: Option[String],
+                          meta: Map[String, String] = Map.empty): TsTable = {
+    writeDescriptor(spark, path, d)
+    val t = new TsTable(spark, path, d)
+    action.foreach(t.commitVersion(_, meta))
+    t
+  }
+
   /** (Re)write the schema descriptor via temp-file + rename, so a crash
     * mid-write leaves either the old or the new descriptor, never a
     * truncated one (the delete+rename pair is not atomic on every
     * filesystem, but the non-atomic window holds a complete temp file,
     * not partial bytes). */
   private[ts] def writeDescriptor(spark: SparkSession, path: String,
-                                  schema: StructType, tsCol: String,
-                                  writeOptions: TsWriteOptions,
-                                  checks: Seq[(String, String)] = Seq.empty,
-                                  dropped: Seq[String] = Seq.empty,
-                                  nextFieldId: Long = 0L): Unit = {
+                                  d: TsDescriptor): Unit = {
     val dir = new Path(path)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val target = new Path(dir, SchemaFile)
     val tmp = new Path(dir, SchemaFile + ".tmp")
     val out = fs.create(tmp, true)
-    // line 4 (optional): CHECK constraints — base64 SQL so arbitrary
-    // predicate text never collides with the descriptor's line format
-    val checksLine =
-      if (checks.isEmpty) ""
-      else "checks=" + checks.map { case (n, sql) =>
-        val b64 = java.util.Base64.getEncoder
-          .encodeToString(sql.getBytes("UTF-8"))
-        s"$n:$b64"
-      }.mkString(",") + "\n"
-    // line 5 (optional): names retired by dropColumns — the re-add guard's
-    // persistent memory (an empty checks line keeps line numbering fixed)
-    val needDropped = dropped.nonEmpty || nextFieldId > 0
-    val droppedLine =
-      if (!needDropped) ""
-      else (if (checksLine.isEmpty) "checks=\n" else "") +
-        "dropped=" + dropped.mkString("|") + "\n"
-    // line 6 (optional): the field-id high-water — ids are NEVER reused
-    // after a drop/rename, or old files' bytes would resurrect under a
-    // recycled id (empty placeholder lines keep numbering fixed)
-    val nextIdLine =
-      if (nextFieldId <= 0) "" else s"nextFieldId=$nextFieldId\n"
-    try out.write((schema.json + "\n" + tsCol + "\n" + writeOptions.encode +
-      "\n" + checksLine + droppedLine + nextIdLine).getBytes("UTF-8"))
+    try out.write(d.encode.getBytes("UTF-8"))
     finally out.close()
     if (fs.exists(target)) fs.delete(target, false)
     require(fs.rename(tmp, target), s"failed to install schema descriptor at $target")
   }
-
-  private def decodeChecks(line: String): Seq[(String, String)] =
-    if (!line.startsWith("checks=") || line == "checks=") Seq.empty
-    else line.stripPrefix("checks=").split(",").toSeq.map { part =>
-      val Array(n, b64) = part.split(":", 2)
-      (n, new String(java.util.Base64.getDecoder.decode(b64), "UTF-8"))
-    }
 
   /** Attach to an existing table; schema + write options come from the
     * stored descriptor (or, for plain partitioned-Parquet dirs, from the
@@ -4424,26 +4343,15 @@ object TsTable {
             "tmp before opening")
       res
     }
-    if (descriptor.isDefined) {
-      val text = descriptor.get
-      val lines = text.trim.split("\n")
-      val opts = if (lines.length >= 3) TsWriteOptions.decode(lines(2)) else TsWriteOptions()
-      val checks = if (lines.length >= 4) decodeChecks(lines(3).trim) else Seq.empty
-      val dropped =
-        if (lines.length >= 5 && lines(4).trim.startsWith("dropped="))
-          lines(4).trim.stripPrefix("dropped=").split("\\|").toSeq.filter(_.nonEmpty)
-        else Seq.empty
-      val nextId = lines.drop(5).map(_.trim)
-        .find(_.startsWith("nextFieldId="))
-        .map(_.stripPrefix("nextFieldId=").toLong).getOrElse(0L)
-      val sch = DataType.fromJson(lines(0)).asInstanceOf[StructType]
-      if (hasFieldIds(sch)) enableFieldIdResolution(spark)
-      new TsTable(spark, path, lines(1).trim, sch, opts, checks, dropped,
-        nextId)
-    } else {
-      val inferred = spark.read.parquet(path).schema
-      val dataSchema = StructType(inferred.filterNot(_.name == PartCol))
-      new TsTable(spark, path, tsCol, dataSchema, TsWriteOptions())
+    descriptor match {
+      case Some(text) =>
+        val d = TsDescriptor.decode(text)
+        if (hasFieldIds(d.schema)) enableFieldIdResolution(spark)
+        new TsTable(spark, path, d)
+      case None =>
+        val inferred = spark.read.parquet(path).schema
+        new TsTable(spark, path,
+          TsDescriptor(StructType(inferred.filterNot(_.name == PartCol)), tsCol))
     }
   }
 }

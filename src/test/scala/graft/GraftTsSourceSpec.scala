@@ -287,6 +287,8 @@ class GraftTsSourceSpec extends SparkSpec {
     assert(liveFiles(dir) == filesBefore)
     assert(v2(dir).count() == 2L)
     assert(t.currentVersion == versionBefore)
+    assert(!new java.io.File(dir).listFiles.exists(
+      _.getName.startsWith("_delete_tmp_")), "the staging dir was left behind")
   }
 
   test("an empty connector overwrite empties the table and commits one " +

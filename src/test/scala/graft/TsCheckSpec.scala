@@ -69,6 +69,7 @@ class TsCheckSpec extends SparkSpec {
     TsTable.create(spark, dir, schema)
       .append(mkRows(Seq(
         ("2024-03-01 10:00:00", 1L, 1.0), ("2024-03-02 10:00:00", 2L, 2.0))))
+    val stale = TsTable.open(spark, dir) // opened before the CHECK exists
     val t = TsTable.open(spark, dir).addCheck("nonneg", "value >= 0")
     val v = t.currentVersion.get
     // an update that would write a violating row: rejected, live untouched
@@ -91,6 +92,18 @@ class TsCheckSpec extends SparkSpec {
       keys = Seq("ts", "user_id")) == TsTable.MergeResult(0L, 1L))
     // delete never violates and is not gated
     assert(t.deleteWhere(col("user_id") === 9L) == 1L)
+    // a handle opened before the CHECK existed is gated all the same: its
+    // rewrites run on the live descriptor
+    val v2 = t.currentVersion.get
+    val e3 = intercept[IllegalArgumentException](
+      stale.updateWhere(col("user_id") === 2L, Map("value" -> lit(-5.0))))
+    assert(e3.getMessage.contains("nonneg"), e3.getMessage)
+    val e4 = intercept[IllegalArgumentException](
+      stale.mergeInto(mkRows(Seq(("2024-03-04 10:00:00", 8L, -1.0))),
+        keys = Seq("ts", "user_id")))
+    assert(e4.getMessage.contains("nonneg"), e4.getMessage)
+    assert(t.currentVersion.get == v2, "no commit on a rejected rewrite")
+    assert(t.toDF.where(col("value") < 0).count() == 0)
   }
 
   test("SQL INSERT through the V2 writer enforces checks per row") {

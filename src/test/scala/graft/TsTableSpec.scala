@@ -724,6 +724,26 @@ class TsTableSpec extends SparkSpec {
     assert(re2.toDF.where(col("tag") === "x").count() == 1,
       "delete through a stale handle dropped an evolved column")
     assert(re2.toDF.count() == 1)
+    // an evolving append and a restore through the stale handle keep what
+    // other handles added to the descriptor: a column, a CHECK, an index
+    val other = TsTable.open(spark, dir).addCheck("pos", "user_id > 0")
+      .declareIndexing(Seq("user_id"), Seq.empty)
+    val v = other.currentVersion.get
+    tab.appendEvolved(spark.createDataFrame(
+      spark.sparkContext.parallelize(
+        Seq(Row(t("2024-03-02 10:00:00"), 3L, 3.0, "n")), 1),
+      StructType(schema.fields :+ StructField("note", StringType))))
+    val re3 = TsTable.open(spark, dir)
+    assert(re3.schema.fieldNames.toSeq ==
+      Seq("ts", "user_id", "value", "tag", "note"))
+    assert(re3.checks == Seq("pos" -> "user_id > 0"))
+    assert(re3.writeOptions.statsCols == Seq("user_id"))
+    tab.restore(v)
+    val re4 = TsTable.open(spark, dir)
+    assert(re4.checks == Seq("pos" -> "user_id > 0"),
+      "restore through a stale handle erased a CHECK")
+    assert(re4.schema.fieldNames.toSeq == Seq("ts", "user_id", "value", "tag"))
+    assert(re4.writeOptions.statsCols == Seq("user_id"))
   }
 
   test("schema evolution: added column null-backfills history, survives reopen") {

@@ -32,9 +32,9 @@ object TsBloomSpecAccess {
 
   /** Re-declare `t`'s Bloom bit count in its descriptor (no commit). */
   def withBloomBits(t: TsTable, bits: Long): TsTable = {
-    TsTable.writeDescriptor(t.spark, t.path, t.schema, t.tsCol,
-      t.writeOptions.copy(bloomBits = bits), t.checks, t.dropped,
-      t.effectiveNextFieldId)
+    TsTable.writeDescriptor(t.spark, t.path, t.desc.copy(
+      options = t.writeOptions.copy(bloomBits = bits),
+      nextFieldId = t.effectiveNextFieldId))
     TsTable.open(t.spark, t.path, t.tsCol)
   }
 
