@@ -120,7 +120,7 @@ final class TsTable private (
     // enter planning (on top of the day-dir and row-group pruning below).
     // Otherwise (orphans, attached files, stale pre-evolution handle) the
     // directory-listing scan serves.
-    servingManifest().fold {
+    servingSnapshot.fold {
       // Day bounds are computed IN-PLAN via to_date on the timestamp
       // literal, so they resolve under the session timezone (pinned UTC)
       // — the same rule that wrote p_date. A driver-side
@@ -137,7 +137,7 @@ final class TsTable private (
             col(PartCol).between(to_date(lit(start)), to_date(lit(end)))) &&
           col(tsCol).between(lit(start), lit(end)))
         .drop(PartCol)
-    }(servingSnapshot(_).readRange(start, end))
+    }(_.readRange(start, end))
 
   /** Equality point lookup — `SELECT … WHERE column IN (values)` served
     * through the table's file-skipping indexes (the Delta/Iceberg
@@ -166,14 +166,17 @@ final class TsTable private (
       s"lookupEq: unknown column '$column'")
     require(values.nonEmpty && values.forall(_ != null),
       "lookupEq: need at least one non-null probe value")
-    servingManifest().fold(toDF)(servingSnapshot(_).toDF)
+    servingSnapshot.fold(toDF)(_.toDF)
       .where(col(column).isin(values: _*))
   }
 
-  /** A serving manifest as a pinned view that knows this handle's Bloom
-    * columns, so its equality probes never open the descriptor. */
-  private def servingSnapshot(m: TsManifest): TsSnapshot =
-    new TsSnapshot(spark, path, tsCol, m, knownBloomCols = Some(liveBloomCols))
+  /** The serving manifest ([[servingManifest]]) as a pinned view that
+    * knows this handle's Bloom columns, so its equality probes never open
+    * the descriptor, and the live file sizes that check just listed, so
+    * resolving its files lists no directory again. */
+  private def servingSnapshot: Option[TsSnapshot] =
+    servingManifest().map(m => new TsSnapshot(spark, path, tsCol, m,
+      Some(TsSnapshot.liveDirCache(path, m)), Some(liveBloomCols)))
 
   /** Per-day layout observability (the IvfIndex.cellStats analogue): one
     * row per `p_date=` directory with file count, bytes, and rows — the
@@ -2510,7 +2513,10 @@ final class TsTable private (
     * zero-copy read of a version is `openAt`/`option("asOf")`, which
     * stays inside the one-table expiry invariant. Refuses a non-empty
     * destination. Returns the new table's handle. */
-  def cloneAt(version: Long, destPath: String): TsTable = {
+  def cloneAt(version: Long, destPath: String): TsTable =
+    live.cloneAtLive(version, destPath)
+
+  private def cloneAtLive(version: Long, destPath: String): TsTable = {
     val snap = openAt(version)
     val destRoot = new Path(destPath)
     val fs = destRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -3055,7 +3061,8 @@ final class TsTable private (
   private[graft] def currentSkipIndex: graft.sources.GraftTsStatsFileIndex.SkipIndex =
     currentManifest.fold(new graft.sources.GraftTsStatsFileIndex.SkipIndex(
       tsCol, Map.empty, Map.empty, () => Nil, () => TsTable.NoBlooms))(
-      m => servingSnapshot(m._2).skipIndex)
+      m => new TsSnapshot(spark, path, tsCol, m._2,
+        knownBloomCols = Some(liveBloomCols)).skipIndex)
 
   /** Manifest-stats fast path for [[minDt]]/[[maxDt]]: when the current
     * manifest's file set matches the live listing exactly (path + size)
@@ -3122,7 +3129,10 @@ final class TsTable private (
   /** Every archived rel path named by ANY in-flight marker (whatever its
     * age — reclaim correctness beats GC liveness; stale crash orphans are
     * bounded by vacuumStaging's cutoff). One small read per marker, and
-    * markers exist only while rewrites are actually in flight. */
+    * markers exist only while rewrites are actually in flight. A marker
+    * cleared between the listing and its read belongs to a rewrite that
+    * has ended (committed or rolled back): it protects nothing any more,
+    * as if the listing had run a moment later. */
   private def inflightProtectedRels(
       fs: org.apache.hadoop.fs.FileSystem): Set[String] = {
     val dir = new Path(path, TsTable.InflightDir)
@@ -3130,13 +3140,15 @@ final class TsTable private (
     fs.listStatus(dir).iterator
       .filter(st => st.isFile && st.getPath.getName.endsWith(".marker"))
       .flatMap { st =>
-        val in = fs.open(st.getPath)
         val bytes =
           try {
-            val buf = new java.io.ByteArrayOutputStream()
-            org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
-            buf.toByteArray
-          } finally in.close()
+            val in = fs.open(st.getPath)
+            try {
+              val buf = new java.io.ByteArrayOutputStream()
+              org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
+              buf.toByteArray
+            } finally in.close()
+          } catch { case _: java.io.FileNotFoundException => Array.emptyByteArray }
         new String(bytes, "UTF-8").split("\n").iterator
           .filter(l => l.nonEmpty && !l.startsWith("staging="))
       }.toSet
@@ -3183,7 +3195,8 @@ final class TsTable private (
   * compact/retention), with the recorded size as an integrity guard — a
   * same-name file with a different length is a foreign rewrite, reported
   * loudly instead of served silently. Resolution is one directory listing
-  * per referenced partition (live + archive), metadata-scale. */
+  * per referenced partition, plus its archive directory only when one of
+  * its files is not live at its recorded size — metadata-scale. */
 final class TsSnapshot private[ts] (
     val spark: SparkSession,
     val tablePath: String,
@@ -3253,25 +3266,23 @@ final class TsSnapshot private[ts] (
     val root = new Path(tablePath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def listDir(dir: Path): Map[String, Long] =
-      if (!fs.exists(dir)) Map.empty
-      else fs.listStatus(dir).iterator.filter(_.isFile)
+      try fs.listStatus(dir).iterator.filter(_.isFile)
         .map(st => st.getPath.getName -> st.getLen).toMap
+      catch { case _: java.io.FileNotFoundException => Map.empty }
     def sizesIn(dir: Path): Map[String, Long] = dirCache match {
       case Some(c) => c.getOrElseUpdate(dir.toString, listDir(dir))
       case None => listDir(dir)
     }
-    val byDir = manifest.files.groupBy(f => f._1.split("/").init.mkString("/"))
+    val byDir = manifest.files.groupBy(f => TsSnapshot.relDirOf(f._1))
     val out = Seq.newBuilder[(String, Path, Long, Boolean)]
     byDir.foreach { case (relDir, files) =>
       // relDir "" = loose root-level files (attached plain/hybrid layout);
       // their partition date is the empty sentinel (p_date null downstream)
       val date =
         if (relDir.isEmpty) "" else relDir.split("/").last.stripPrefix(s"$PartCol=")
-      val liveDir = if (relDir.isEmpty) root else new Path(root, relDir)
-      val archDir = if (relDir.isEmpty) new Path(root, ArchiveDir)
-        else new Path(new Path(root, ArchiveDir), relDir)
-      val liveSizes = sizesIn(liveDir)
-      val archSizes = sizesIn(archDir)
+      val liveSizes = sizesIn(TsSnapshot.dirOf(root, relDir))
+      // listed only when some file is not live at its recorded size
+      lazy val archSizes = sizesIn(TsSnapshot.dirOf(new Path(root, ArchiveDir), relDir))
       files.foreach { case (relPath, size) =>
         val name = relPath.split("/").last
         if (liveSizes.get(name).contains(size))
@@ -3364,6 +3375,32 @@ final class TsSnapshot private[ts] (
           col(PartCol).between(to_date(lit(start)), to_date(lit(end)))) &&
         col(tsCol).between(lit(start), lit(end)))
       .drop(PartCol)
+  }
+}
+
+object TsSnapshot {
+  private def relDirOf(relPath: String): String =
+    relPath.split("/").init.mkString("/")
+
+  /** A manifest's table-relative directory under `base`, the table root
+    * or the archive ("" = `base` itself, home of loose attached files). */
+  private def dirOf(base: Path, relDir: String): Path =
+    if (relDir.isEmpty) base else new Path(base, relDir)
+
+  /** A [[TsSnapshot]] dir cache holding the live sizes of `m`'s files,
+    * for a manifest just checked to list exactly the live data files
+    * ([[TsTable]]'s `servingManifest`), so equal to that check's
+    * listing: resolving the snapshot lists no live directory again. Sound
+    * within the one plan-construction call, the cache's rule. */
+  private[ts] def liveDirCache(tablePath: String, m: TsManifest)
+      : scala.collection.mutable.Map[String, Map[String, Long]] = {
+    val root = new Path(tablePath)
+    val cache = scala.collection.mutable.Map.empty[String, Map[String, Long]]
+    m.files.groupBy(f => relDirOf(f._1)).foreach {
+      case (relDir, files) => cache(dirOf(root, relDir).toString) =
+        files.map { case (rel, size) => rel.split("/").last -> size }.toMap
+    }
+    cache
   }
 }
 
@@ -4055,11 +4092,14 @@ object TsTable {
   /** `f` over each item with the Hadoop conf, one Spark task per item
     * (at most `defaultParallelism` slices), results in input order — for
     * per-file work that must run at cluster bandwidth, never streamed
-    * through the driver JVM. */
+    * through the driver JVM. The conf ships as a
+    * [[org.apache.spark.sql.graft.LeanConfiguration]] (every property,
+    * no provenance). */
   private[ts] def onExecutors[A: ClassTag, B: ClassTag](spark: SparkSession,
       items: Seq[A])(f: (org.apache.hadoop.conf.Configuration, A) => B): Seq[B] = {
     val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
+      new org.apache.spark.sql.graft.LeanConfiguration(
+        spark.sparkContext.hadoopConfiguration))
     val slices = math.min(items.length,
       spark.sparkContext.defaultParallelism).max(1)
     spark.sparkContext.parallelize(items, slices)

@@ -88,10 +88,12 @@ final class ArchiveResolvingParquetFileFormat extends ParquetFileFormat {
     // EACH super call writes its requested-schema into the Configuration
     // it is handed and broadcasts that object BY REFERENCE in local mode —
     // two readers sharing one Configuration would silently serve the
-    // second reader's schema to the first one's tasks. Copy per reader.
+    // second reader's schema to the first one's tasks. Copy per reader;
+    // the copy is a LeanConfiguration, so the broadcast serializes
+    // without per-property provenance.
     val base = super.buildReaderWithPartitionValues(sparkSession, dataSchema,
       partitionSchema, requiredSchema, filters, options,
-      new Configuration(hadoopConf))
+      new LeanConfiguration(hadoopConf))
     // FOREIGN-file fallback: an id-stamped table can still hold attached
     // plain-parquet files (the hybrid-layout contract). Under field-id
     // resolution those files refuse to read ("file schema doesn't contain
@@ -102,7 +104,7 @@ final class ArchiveResolvingParquetFileFormat extends ParquetFileFormat {
       if (!hasIds(dataSchema) && !hasIds(requiredSchema)) None
       else Some(super.buildReaderWithPartitionValues(sparkSession,
         stripIds(dataSchema), partitionSchema, stripIds(requiredSchema),
-        filters, options, new Configuration(hadoopConf)))
+        filters, options, new LeanConfiguration(hadoopConf)))
     def open(file: PartitionedFile): Iterator[InternalRow] =
       try base(file)
       catch {

@@ -106,6 +106,21 @@ class TsCheckSpec extends SparkSpec {
     assert(t.toDF.where(col("value") < 0).count() == 0)
   }
 
+  test("cloneAt through a handle opened before a CHECK carries the CHECK") {
+    val dir = freshDir()
+    TsTable.create(spark, dir, schema)
+      .append(mkRows(Seq(("2024-03-01 10:00:00", 1L, 1.0))))
+    val stale = TsTable.open(spark, dir) // opened before the CHECK exists
+    val v = TsTable.open(spark, dir).addCheck("pos", "value > 0")
+      .currentVersion.get
+    val dest = freshDir() + "/clone"
+    val clone = stale.cloneAt(v, dest)
+    assert(clone.checks == Seq("pos" -> "value > 0"))
+    assert(TsTable.open(spark, dest).checks == Seq("pos" -> "value > 0"))
+    intercept[IllegalArgumentException](
+      clone.append(mkRows(Seq(("2024-03-02 10:00:00", 2L, -1.0)))))
+  }
+
   test("SQL INSERT through the V2 writer enforces checks per row") {
     val dir = freshDir()
     TsTable.create(spark, dir, schema)
