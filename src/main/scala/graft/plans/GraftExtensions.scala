@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.execution.ColumnarRule
-import org.apache.spark.sql.graft.{BackwardAsOfStrategy, CmsEstimate, DotProduct, MinHashRow, MinHashSignature, NfcNormalize, SimHash64, SimHashMd5, SmallScanSingleTask, StableCodegenLiterals, TopKByScore, WinnowFingerprints}
+import org.apache.spark.sql.graft.{BackwardAsOfStrategy, CmsEstimate, DotProduct, InProcessLocalFs, MinHashRow, MinHashSignature, NfcNormalize, SimHash64, SimHashMd5, SmallScanSingleTask, StableCodegenLiterals, TopKByScore, WinnowFingerprints}
 
 /** Catalyst extension entry point for the engine's custom operators —
   * deploy with
@@ -43,6 +43,12 @@ import org.apache.spark.sql.graft.{BackwardAsOfStrategy, CmsEstimate, DotProduct
   *     `lookupEq` or an as-of read answered by a global aggregate runs
   *     one Spark job instead of two. Larger reads, user repartitions,
   *     V2 connector scans and non-table scans keep their exchanges.
+  *
+  * Applying the extension also points the active `SparkContext`'s Hadoop
+  * conf at the in-process local file system
+  * (org.apache.spark.sql.graft.InProcessLocalFs), where the conf still
+  * holds Hadoop's defaults, so local commits and streaming checkpoint
+  * writes start no `chmod`/`readlink` child processes.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -58,6 +64,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo("graft", name, usage), builder))
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    InProcessLocalFs.installOnActiveContext()
     ext.injectPlannerStrategy(_ => BackwardAsOfStrategy)
     ext.injectColumnar(_ => new ColumnarRule {
       override def preColumnarTransitions = StableCodegenLiterals

@@ -214,10 +214,11 @@ final class GraftTsV2Table(spark: SparkSession, val ts: TsTable,
     with org.apache.spark.sql.connector.catalog.SupportsDelete {
 
   // The connector's timestamp encoding is INT64 micros (see
-  // TsTable.tableWriter: INT96 is deprecated and unfilterable). The V2
-  // parquet ScanBuilder decides ts-filter convertibility from THIS session
-  // conf, so pin it at table resolution; per-file read still adapts to
-  // whatever encoding each file actually has.
+  // ArchiveResolvingParquetFileFormat.prepareWrite: INT96 is deprecated
+  // and unfilterable). The V2 parquet ScanBuilder decides ts-filter
+  // convertibility from THIS session conf, so pin it at table resolution;
+  // per-file read still adapts to whatever encoding each file actually
+  // has.
   spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
 
   override def name(): String = snapshot

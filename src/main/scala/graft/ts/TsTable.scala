@@ -1,6 +1,6 @@
 package graft.ts
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.BloomParquetWriteSupport
@@ -1055,20 +1055,13 @@ final class TsTable private (
   }
 
   /** The writer every table data write goes through: the table's parquet
-    * format ([[TsTable.Fmt]]) with the declared codec and row-group size,
-    * and the declared Bloom columns, whose bits each written file then
-    * carries in its footer (read back by [[commitVersion]] in place of a
-    * harvest scan). */
+    * format ([[TsTable.Fmt]], which writes timestamps as INT64 micros
+    * whatever the session's `outputTimestampType`) with the declared codec
+    * and row-group size, and the declared Bloom columns, whose bits each
+    * written file then carries in its footer (read back by
+    * [[commitVersion]] in place of a harvest scan). */
   private def tableWriter(df: DataFrame, mode: String)
       : org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] = {
-    // µs-instant physical encoding: INT96 (Spark's parquet default) is
-    // deprecated AND unfilterable — ParquetFilters cannot build row-group
-    // predicates over INT96, so the sorted-row-group stats-skipping this
-    // table's read path depends on silently degrades to post-scan
-    // filtering. INT64 micros is the lossless match for the table's data
-    // model. Session-wide for the same reason as Tables.init: the parquet
-    // writer re-reads session conf at execution time.
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     val w = df.write.format(TsTable.Fmt).mode(mode)
       .option("compression", writeOptions.codec)
     writeOptions.rowGroupBytes.foreach(b => w.option("parquet.block.size", b.toString))
@@ -4079,9 +4072,9 @@ object TsTable {
   /** Closed ts span (epoch µs) of one parquet file, from footer metadata
     * ONLY — no data pages read. Usable iff the ts column is physically
     * INT64 TIMESTAMP (µs/ms/ns, UTC-adjusted — every engine-written file
-    * is µs, `tableWriter`'s outputTimestampType pin) and EVERY row
-    * group carries non-null min/max statistics. Anything else → None and
-    * the file just never gets skipped (INT96 attachments, statless
+    * is µs, `ArchiveResolvingParquetFileFormat.prepareWrite`'s pin) and
+    * EVERY row group carries non-null min/max statistics. Anything else →
+    * None and the file just never gets skipped (INT96 attachments, statless
     * writers, local-semantics NTZ — soundness over coverage). Static and
     * Configuration-fed so commit-time collection can run one task per
     * file on executors. */
@@ -4331,20 +4324,32 @@ object TsTable {
 
   /** (Re)write the schema descriptor via temp-file + rename, so a crash
     * mid-write leaves either the old or the new descriptor, never a
-    * truncated one (the delete+rename pair is not atomic on every
-    * filesystem, but the non-atomic window holds a complete temp file,
-    * not partial bytes). */
+    * truncated one. Each writer has its own temp name, and where rename
+    * replaces the target (the local file system) the swap leaves no moment
+    * without a descriptor; elsewhere it falls back to delete + rename,
+    * whose window holds a complete temp file, not partial bytes. Two
+    * concurrent writers still lose one's update (ROADMAP direction 2), but
+    * the last rename leaves a whole descriptor. On a checksummed file
+    * system the descriptor is written without a `.crc`: two writers'
+    * data and `.crc` renames could otherwise pair one's bytes with the
+    * other's checksums, and a failed check moves the file aside. */
   private[ts] def writeDescriptor(spark: SparkSession, path: String,
                                   d: TsDescriptor): Unit = {
     val dir = new Path(path)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration) match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case other => other
+    }
     val target = new Path(dir, SchemaFile)
-    val tmp = new Path(dir, SchemaFile + ".tmp")
+    val tmp = new Path(dir, s"$SchemaFile.tmp.${java.util.UUID.randomUUID()}")
     val out = fs.create(tmp, true)
     try out.write(d.encode.getBytes("UTF-8"))
     finally out.close()
-    if (fs.exists(target)) fs.delete(target, false)
-    require(fs.rename(tmp, target), s"failed to install schema descriptor at $target")
+    fs.delete(new Path(dir, s".$SchemaFile.crc"), false) // an older writer's checksums
+    if (!fs.rename(tmp, target)) {
+      fs.delete(target, false)
+      require(fs.rename(tmp, target), s"failed to install schema descriptor at $target")
+    }
   }
 
   /** Attach to an existing table; schema + write options come from the
@@ -4356,15 +4361,17 @@ object TsTable {
     val dir = new Path(path)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val metaPath = new Path(dir, SchemaFile)
-    val tmpPath = new Path(dir, SchemaFile + ".tmp")
+    def tmpVisible(): Boolean =
+      Option(fs.globStatus(new Path(dir, SchemaFile + ".tmp*"))).exists(_.nonEmpty)
     def tryRead(): Option[String] =
       try {
         val in = fs.open(metaPath)
         Some(try scala.io.Source.fromInputStream(in, "UTF-8").mkString
           finally in.close())
       } catch { case _: java.io.FileNotFoundException => None }
-    // writeDescriptor installs via delete+rename, so a concurrent open can
-    // land in a sub-ms window with no descriptor on disk. Treating that
+    // Where rename does not replace, writeDescriptor installs via
+    // delete+rename, so a concurrent open can land in a sub-ms window with
+    // no descriptor on disk. Treating that
     // window as "no descriptor" would silently DOWNGRADE a governed table
     // to an attached plain dir (inferred schema, no options, no ids) —
     // retry briefly while either the descriptor or its tmp is visible,
@@ -4373,12 +4380,12 @@ object TsTable {
       var res: Option[String] = None
       var i = 0
       while (res.isEmpty && i < 10 &&
-          (fs.exists(tmpPath) || fs.exists(metaPath))) {
+          (tmpVisible() || fs.exists(metaPath))) {
         Thread.sleep(20L); res = tryRead(); i += 1
       }
-      if (res.isEmpty && fs.exists(tmpPath))
+      if (res.isEmpty && tmpVisible())
         throw new IllegalStateException(
-          s"$path: descriptor swap left only $SchemaFile.tmp (a crashed " +
+          s"$path: descriptor swap left only a $SchemaFile.tmp file (a crashed " +
             "writeDescriptor) — re-run the interrupted DDL or remove the " +
             "tmp before opening")
       res

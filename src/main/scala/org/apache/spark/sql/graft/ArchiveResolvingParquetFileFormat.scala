@@ -7,6 +7,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.{OutputWriterFactory, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 
@@ -36,7 +37,8 @@ import org.apache.spark.sql.types.StructType
   * every pinned read and every streaming microbatch
   * ([[GraftTsStreamSource]]).
   *
-  * It is also the format of every TsTable data write: given the
+  * It is also the format of every TsTable data write, which it writes
+  * with INT64 `TIMESTAMP(MICROS)` timestamps; given the
   * [[BloomParquetWriteSupport.ColsOption]]/`BitsOption` write options,
   * each written file carries its Bloom bits in its footer.
   *
@@ -53,6 +55,15 @@ final class ArchiveResolvingParquetFileFormat extends ParquetFileFormat {
       options: Map[String, String],
       dataSchema: StructType): OutputWriterFactory = {
     val factory = super.prepareWrite(sparkSession, job, options, dataSchema)
+    // µs-instant physical encoding: INT96 (Spark's parquet default) is
+    // deprecated AND unfilterable — ParquetFilters cannot build row-group
+    // predicates over INT96, so the sorted-row-group stats-skipping the
+    // table's read path depends on would silently degrade to post-scan
+    // filtering. INT64 micros is the lossless match for the table's data
+    // model. Set in this write's job conf, which the executor-side writer
+    // reads, not in the caller's session.
+    job.getConfiguration.set(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key,
+      SQLConf.ParquetOutputTimestampType.TIMESTAMP_MICROS.toString)
     options.get(BloomParquetWriteSupport.ColsOption).foreach { cols =>
       BloomParquetWriteSupport.configure(job.getConfiguration,
         cols.split(",").toSeq.filter(dataSchema.fieldNames.contains),
@@ -75,7 +86,6 @@ final class ArchiveResolvingParquetFileFormat extends ParquetFileFormat {
     // is why `spark.read.parquet` id-resolves and a raw V1 relation does
     // not) — ParquetReadSupport reads them from hadoopConf, so set them
     // here or an id-stamped schema silently null-fills renamed columns.
-    import org.apache.spark.sql.internal.SQLConf
     hadoopConf.setBoolean(SQLConf.PARQUET_FIELD_ID_READ_ENABLED.key,
       sparkSession.sessionState.conf.parquetFieldIdReadEnabled)
     // ignoreMissing is forced FALSE regardless of the session conf: this
